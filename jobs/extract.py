@@ -7,7 +7,7 @@
         [--buckets 4096] [--page-split-bytes N] [--salt 0]
 
 Reads the interleaved documents table (doc_id, spans[]) plus the media
-payload side table, runs the fused extraction pipeline, and writes
+payload side table, runs the shared-FIELDS extraction pipeline, and writes
 extracted_spans through the manifest-checkpointed sink — a killed run
 re-submitted with the SAME --snapshot resumes at bucket granularity
 (completed buckets are anti-joined away; orphan files from crashed epochs

@@ -8,8 +8,8 @@ form of jobs/extract.py.
         [--available-now] [--buckets 64]
 
 `readStream` over the documents directory (new files = new micro-batches),
-the SAME fused kernel as batch, `foreachBatch` into the manifest-
-checkpointed sink. `--available-now` drains the backlog and exits (the
+the SAME FIELDS dataflow as batch (`fields_dataflow`), `foreachBatch`
+into the manifest-checkpointed sink. `--available-now` drains the backlog and exits (the
 backfill-then-tail deployment: run once with it, then again without to
 tail). Restarts resume from the Spark checkpoint AND the manifest
 anti-join, so replayed micro-batches are idempotent; snapshot keys are

@@ -286,8 +286,11 @@ def fields_batch(
 def spans_from_fields(fields: pd.DataFrame) -> pd.DataFrame:
     """FIELDS_COLUMNS rows → flat output-span rows (SPAN_ROW_COLUMNS).
 
-    Column-list iteration, not iterrows — this runs once per span row in
-    the hot path and pandas row views cost ~100 µs each.
+    The Python reference for the JVM ``operators.extract.
+    span_rows_from_fields`` projection that lays out the pipeline's spans:
+    ``synth.expected_spans`` (the span-equality and stream==batch oracle)
+    composes it after ``fields_batch``. Column-list iteration, not
+    iterrows — pandas row views cost ~100 µs each.
     """
     field_kinds = [f"field:{name}" for name in FIELD_SPAN_ORDER]
     field_cols = [fields[name].tolist() for name in FIELD_SPAN_ORDER]
@@ -317,15 +320,3 @@ def spans_from_fields(fields: pd.DataFrame) -> pd.DataFrame:
             d_ref.append("")
             seq += 1
     return pd.DataFrame(out, columns=SPAN_ROW_COLUMNS)
-
-
-def process_batch(
-    batch: pd.DataFrame,
-    as_of_date: date = DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-) -> pd.DataFrame:
-    """Convenience composition: raw span rows (with payload) → span rows."""
-    if len(batch) == 0:
-        return pd.DataFrame(columns=SPAN_ROW_COLUMNS)
-    return spans_from_fields(fields_batch(resolve_batch(batch), as_of_date, companies, suppliers))

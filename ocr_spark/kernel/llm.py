@@ -287,13 +287,6 @@ def _find_supplier_compiled(text: str, dims) -> str | None:
     return "Fournisseur Inconnu"
 
 
-def find_supplier(text: str, suppliers: list[dict]) -> str | None:
-    """J3: exact containment, then first-word boundary match, then the
-    generic regex fallback, then 'Fournisseur Inconnu'
-    (llm_enhanced_extractor.py:338-370)."""
-    return _find_supplier_compiled(text, _compile_supplier_dims(suppliers))
-
-
 def extract(
     texts: pd.Series,
     as_of_date: date = date(2025, 8, 19),

@@ -276,29 +276,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs(
-    documents: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Verify candidate pairs with exact shingle Jaccard ≥ threshold."""
-    sh = with_shingles(documents, text_col, k)
-    out = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), on="doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), on="doc_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)  # raw ratio, rounding is the caller's
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return out
-
-
 def with_winnow_fingerprints(
     documents: DataFrame,
     text_col: str = "text",

@@ -49,16 +49,6 @@ def first_match_containment_join(
     return facts.join(best, on=fact_id, how="left")
 
 
-def supplier_detail_join(facts: DataFrame, suppliers: DataFrame, name_col: str) -> DataFrame:
-    """J4 analogue: broadcast equi-join on social_reason to pull details
-    (llm_enhanced_extractor.py:417-449)."""
-    return facts.join(
-        F.broadcast(suppliers),
-        facts[name_col] == suppliers["social_reason"],
-        how="left",
-    )
-
-
 def trigram_top1_join(
     facts: DataFrame,
     dims: DataFrame,

@@ -1,7 +1,8 @@
 """The Spark extraction pipeline (the engine's flagship job).
 
 Restates the reference's request pipeline (SURVEY.md §3.1) as one
-declarative DataFrame job:
+declarative DataFrame job, the same one for batch, staged, paged and
+streaming runs (``fields_dataflow``):
 
     documents ──explode──► span rows
       ├─ media spans ──join(media)──► payload rows          (S2/S4/S7)
@@ -10,7 +11,7 @@ declarative DataFrame job:
       │       groupBy(doc_id, offset).applyInPandas(reassemble)
       ├─ mapInPandas(kernel.fields_batch)  — vectorized extraction
       │       (T*, X*, D*, M* families + merge lattice)     (EP1 steps 4-9)
-      ├─ extracted_spans: groupBy(doc_id).applyInPandas(sort offset, seq)
+      ├─ extracted_spans: span_rows_from_fields → groupBy(doc_id) (JVM)
       └─ invoices: typed flat projection (DecimalType money, DateType)
 
 All Python stages are Arrow-batched (`mapInPandas` / `applyInPandas`);
@@ -35,7 +36,8 @@ from pyspark.sql import types as T
 from ocr_spark.kernel import assemble
 from ocr_spark.schemas import FIELD_SPAN_ORDER
 
-# payloads larger than this are treated as skew risks and split per page
+# a paged run's usual page_split_bytes: the synth corpus's oversized PDFs
+# (~100 pages) sit above it, its normal 2-page PDFs well below
 OVERSIZE_PAYLOAD_BYTES = 64 * 1024
 
 FIELDS_ROW_SCHEMA = T.StructType(
@@ -73,18 +75,6 @@ _RESOLVED_SCHEMA = T.StructType(
         T.StructField("content", T.StringType(), True),
     ]
 )
-
-SPAN_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-    ]
-)
-
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) → one row per span."""
@@ -158,22 +148,12 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
 
 def _fields_map(
     it: Iterator[pd.DataFrame], as_of: date, companies: list[dict],
-    suppliers: list[dict], emit_raw_text: bool = False,
+    suppliers: list[dict], emit_raw_text: bool = False, resolved: bool = False,
 ) -> Iterator[pd.DataFrame]:
     for batch in it:
         yield assemble.fields_batch(
-            assemble.resolve_batch(batch), as_of, companies, suppliers,
-            emit_raw_text=emit_raw_text,
-        )
-
-
-def _fields_map_resolved(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict],
-    suppliers: list[dict], emit_raw_text: bool = False,
-) -> Iterator[pd.DataFrame]:
-    for batch in it:
-        yield assemble.fields_batch(
-            batch, as_of, companies, suppliers, emit_raw_text=emit_raw_text
+            batch if resolved else assemble.resolve_batch(batch),
+            as_of, companies, suppliers, emit_raw_text=emit_raw_text,
         )
 
 
@@ -182,184 +162,83 @@ def _split_pages_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield assemble.split_pdf_pages(batch)
 
 
-def _spans_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for batch in it:
-        yield assemble.spans_from_fields(batch)
-
-
-def _process_map(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict], suppliers: list[dict]
-) -> Iterator[pd.DataFrame]:
-    """Fused resolve→fields→spans in ONE Python stage (one Arrow hop)."""
-    for batch in it:
-        yield assemble.process_batch(batch, as_of, companies, suppliers)
-
-
-def _process_map_resolved(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict], suppliers: list[dict]
-) -> Iterator[pd.DataFrame]:
-    for batch in it:
-        yield assemble.spans_from_fields(
-            assemble.fields_batch(batch, as_of, companies, suppliers)
-        )
-
-
 def extract_fields(
     spans_with_payload: DataFrame,
     as_of: date = assemble.DEFAULT_AS_OF,
     companies: list[dict] | None = None,
     suppliers: list[dict] | None = None,
     with_raw_text: bool = False,
-) -> DataFrame:
-    """Span rows (+payload) → one FIELDS row per span, single-pass.
-
-    One mapInPandas handles every kind inline, including multi-page PDFs
-    (~100 ms/monster in the kernel, so intra-doc parallelism buys nothing
-    at this per-page cost). No dataflow branching: a small/big filter
-    split re-evaluates the shared scan+shuffle lineage per branch —
-    Catalyst pushes the filters below the exchange, so the exchanges stop
-    being canonically identical and ReuseExchange never fires (verified on
-    the executed AQE plan). For workloads where per-page cost is heavy
-    (real OCR rasterization), use extract_spans_paged.
-    """
-    return spans_with_payload.mapInPandas(
-        partial(
-            _fields_map,
-            as_of=as_of,
-            companies=companies or [],
-            suppliers=suppliers or [],
-            emit_raw_text=with_raw_text,
-        ),
-        schema=FIELDS_ROW_SCHEMA,
-    )
-
-
-def _split_small_big(spans_with_payload: DataFrame, oversize_bytes: int):
-    is_big_pdf = (F.col("kind") == "pdf") & (
-        F.length(F.col("payload")) > F.lit(oversize_bytes)
-    )
-    small = spans_with_payload.filter(~F.coalesce(is_big_pdf, F.lit(False)))
-    big = spans_with_payload.filter(F.coalesce(is_big_pdf, F.lit(False)))
-    return small, big
-
-
-def extract_spans_fused(
-    spans_with_payload: DataFrame,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-) -> DataFrame:
-    """Span rows (+payload) → output span rows, single fused Python stage
-    (resolve+extract+spans in one Arrow hop), single-pass dataflow (see
-    extract_fields for why branching costs a full re-scan)."""
-    return spans_with_payload.mapInPandas(
-        partial(
-            _process_map,
-            as_of=as_of,
-            companies=companies or [],
-            suppliers=suppliers or [],
-        ),
-        schema=SPAN_ROWS_SCHEMA,
-    )
-
-
-def extract_spans_paged(
-    spans_with_payload: DataFrame,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    oversize_bytes: int = OVERSIZE_PAYLOAD_BYTES,
+    page_split_bytes: int | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Skew-mitigating variant (north rule / SURVEY.md §7.3): oversized PDF
-    payloads are split into page-level rows processed as independent
-    sub-tasks, then re-assembled per (doc_id, offset) sorted by page_no.
+    """Span rows (+payload) → one FIELDS row per span: the engine's only
+    kernel stage, shared by batch, staged, paged and streaming runs.
 
-    Use when per-page processing is expensive (real OCR: seconds/page) —
-    one 500-page document then costs 500 parallel sub-tasks instead of
-    pinning a core for the whole stage. Costs one extra scan of the input
-    (the small/big branch split defeats exchange reuse) and a page-level
-    shuffle, so the cheap-kernel default is extract_spans_fused.
+    ``page_split_bytes=None`` (default): one mapInPandas handles every kind
+    inline, including multi-page PDFs (~100 ms/monster in the kernel, so
+    intra-doc parallelism buys nothing at this per-page cost). No dataflow
+    branching: a small/big filter split re-evaluates the shared scan+shuffle
+    lineage per branch — Catalyst pushes the filters below the exchange, so
+    the exchanges stop being canonically identical and ReuseExchange never
+    fires (verified on the executed AQE plan).
+
+    ``page_split_bytes=N`` is the skew path (north rule / SURVEY.md §7.3)
+    for workloads where per-page cost is heavy (real OCR: seconds/page):
+    PDF payloads over N bytes are split into page rows processed as
+    independent sub-tasks, re-assembled per (doc_id, offset) sorted by
+    page_no, then run through the same kernel — one 500-page document
+    costs 500 parallel sub-tasks instead of pinning a core. It pays the
+    extra scan above plus a page-level shuffle over ``num_partitions``
+    (default spark.sql.shuffle.partitions).
     """
-    companies = companies or []
-    suppliers = suppliers or []
+    fields_map = partial(
+        _fields_map,
+        as_of=as_of,
+        companies=companies or [],
+        suppliers=suppliers or [],
+        emit_raw_text=with_raw_text,
+    )
+    if page_split_bytes is None:
+        return spans_with_payload.mapInPandas(fields_map, schema=FIELDS_ROW_SCHEMA)
     if num_partitions is None:
         num_partitions = int(
             spans_with_payload.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
-    small, big = _split_small_big(spans_with_payload, oversize_bytes)
-    small_spans = small.mapInPandas(
-        partial(_process_map, as_of=as_of, companies=companies, suppliers=suppliers),
-        schema=SPAN_ROWS_SCHEMA,
+    is_big_pdf = F.coalesce(
+        (F.col("kind") == "pdf") & (F.length("payload") > F.lit(page_split_bytes)),
+        F.lit(False),
+    )
+    small_fields = spans_with_payload.filter(~is_big_pdf).mapInPandas(
+        fields_map, schema=FIELDS_ROW_SCHEMA
     )
     # Explicit partition count on the reassembly exchange: it satisfies the
     # groupBy's ClusteredDistribution (no second shuffle) AND opts out of
     # AQE byte-based coalescing, which would funnel the CPU-bound
     # reassemble+extract work for every monster PDF into one task.
-    big_resolved = (
-        big.mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
+    big_fields = (
+        spans_with_payload.filter(is_big_pdf)
+        .mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
         .repartition(num_partitions, "doc_id", "offset")
         .groupBy("doc_id", "offset")
         .applyInPandas(assemble.reassemble_pages, schema=_RESOLVED_SCHEMA)
-    )
-    big_spans = big_resolved.mapInPandas(
-        partial(_process_map_resolved, as_of=as_of, companies=companies, suppliers=suppliers),
-        schema=SPAN_ROWS_SCHEMA,
-    )
-    return small_spans.unionByName(big_spans)
-
-
-def extract_fields_paged(
-    spans_with_payload: DataFrame,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    oversize_bytes: int = OVERSIZE_PAYLOAD_BYTES,
-    num_partitions: int | None = None,
-    with_raw_text: bool = False,
-) -> DataFrame:
-    """FIELDS rows with the oversized-PDF page-split skew path (the FIELDS
-    twin of extract_spans_paged): oversized payloads split into page rows,
-    reassembled per (doc_id, offset), then the same kernel — so the shared
-    single-FIELDS pipeline covers the paged configuration too (round 1's
-    invoices branch silently ignored page_split_bytes)."""
-    companies = companies or []
-    suppliers = suppliers or []
-    if num_partitions is None:
-        num_partitions = int(
-            spans_with_payload.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    small, big = _split_small_big(spans_with_payload, oversize_bytes)
-    small_fields = small.mapInPandas(
-        partial(_fields_map, as_of=as_of, companies=companies,
-                suppliers=suppliers, emit_raw_text=with_raw_text),
-        schema=FIELDS_ROW_SCHEMA,
-    )
-    big_resolved = (
-        big.mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
-        .repartition(num_partitions, "doc_id", "offset")
-        .groupBy("doc_id", "offset")
-        .applyInPandas(assemble.reassemble_pages, schema=_RESOLVED_SCHEMA)
-    )
-    big_fields = big_resolved.mapInPandas(
-        partial(_fields_map_resolved, as_of=as_of, companies=companies,
-                suppliers=suppliers, emit_raw_text=with_raw_text),
-        schema=FIELDS_ROW_SCHEMA,
+        .mapInPandas(partial(fields_map, resolved=True), schema=FIELDS_ROW_SCHEMA)
     )
     return small_fields.unionByName(big_fields)
 
 
-def assemble_extracted_spans(fields_rows: DataFrame) -> DataFrame:
-    """FIELDS rows → extracted_spans(doc_id, spans[]) ordered by (offset, seq).
-
-    JVM-native reassembly: collect_list of (offset, seq, …) structs,
-    array_sort (struct comparison orders by leading fields → (offset, seq),
-    unique per doc), then a transform projecting the SPAN shape. Replaces a
-    per-group applyInPandas — partial aggregation happens map-side and no
-    Python worker touches the reassembly path.
-    """
-    span_rows = fields_rows.mapInPandas(_spans_map, schema=SPAN_ROWS_SCHEMA)
-    return assemble_spans_table(span_rows)
+# the span layout as ONE SQL expression: built through the Python column
+# DSL it takes ~100 py4j calls and ~0.17 s of plan building per call
+# (measured on a 4-vCPU VM, local[4]), which a streaming run pays once per
+# delivery
+_SPAN_ARRAY_SQL = (
+    "concat(array(named_struct('kind', 'text', 'text', norm_text,"
+    " 'media_ref', coalesce(media_ref, ''))), filter(array("
+    + ", ".join(
+        f"named_struct('kind', 'field:{name}', 'text', {name}, 'media_ref', '')"
+        for name in FIELD_SPAN_ORDER
+    )
+    + "), s -> s.text IS NOT NULL))"
+)
 
 
 def span_rows_from_fields(fields_rows: DataFrame) -> DataFrame:
@@ -375,34 +254,13 @@ def span_rows_from_fields(fields_rows: DataFrame) -> DataFrame:
     frame.  The generator lives in its own projection — posexplode beside
     struct-field access strips struct names during the Generate rewrite
     (measured round 1)."""
-    text_struct = F.struct(
-        F.lit("text").alias("kind"),
-        F.col("norm_text").alias("text"),
-        F.coalesce(F.col("media_ref"), F.lit("")).alias("media_ref"),
-    )
-    field_structs = [
-        F.struct(
-            F.lit(f"field:{name}").alias("kind"),
-            F.col(name).alias("text"),
-            F.lit("").alias("media_ref"),
+    return (
+        fields_rows.selectExpr("doc_id", "offset", f"{_SPAN_ARRAY_SQL} AS _arr")
+        .selectExpr("doc_id", "offset", "posexplode(_arr) AS (seq, s)")
+        .selectExpr(
+            "doc_id", "offset", "seq",
+            "s.kind AS kind", "s.text AS text", "s.media_ref AS media_ref",
         )
-        for name in FIELD_SPAN_ORDER
-    ]
-    arr = F.concat(
-        F.array(text_struct),
-        F.filter(F.array(*field_structs), lambda s: s["text"].isNotNull()),
-    )
-    staged = fields_rows.select("doc_id", "offset", arr.alias("_arr"))
-    exploded = staged.select(
-        "doc_id", "offset", F.posexplode("_arr").alias("seq", "s")
-    )
-    return exploded.select(
-        "doc_id",
-        "offset",
-        "seq",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
     )
 
 
@@ -595,13 +453,12 @@ def build_pipeline(
     rows — a caller materializing both paid the dominant extraction cost
     twice, and the invoices branch ignored ``page_split_bytes`` entirely
     (VERDICT r01 / ADVICE r01).  Now a single FIELDS-producing stage
-    (paged or not) is persisted and both outputs derive from it: spans
-    via the cheap spans_from_fields projection stage, invoices via a pure
-    JVM projection.
+    (paged or not) is persisted and every output derives from it by a
+    pure JVM projection (spans via span_rows_from_fields).
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fields = _fields_dataflow(
+    fields = fields_dataflow(
         documents, media, as_of, companies, suppliers, num_partitions, salt,
         page_split_bytes, with_raw_text,
     )
@@ -611,32 +468,27 @@ def build_pipeline(
     return _frames_from_fields(fields)
 
 
-def _fields_dataflow(
+def fields_dataflow(
     documents: DataFrame,
     media: DataFrame | None,
-    as_of: date,
-    companies: list[dict] | None,
-    suppliers: list[dict] | None,
-    num_partitions: int,
-    salt: int,
-    page_split_bytes: int | None,
+    as_of: date = assemble.DEFAULT_AS_OF,
+    companies: list[dict] | None = None,
+    suppliers: list[dict] | None = None,
+    num_partitions: int = 8,
+    salt: int = 0,
+    page_split_bytes: int | None = None,
     with_raw_text: bool = False,
 ) -> DataFrame:
-    """The shared FIELDS-producing prelude: explode → payload attach →
-    salted repartition → (paged) kernel."""
+    """The one FIELDS-producing dataflow every mode runs (batch, staged,
+    paged, streaming): explode → payload attach → salted repartition →
+    extract_fields. ``documents`` may be a streaming frame; ``media`` is
+    then the static side of a stream-static join."""
     rows = explode_spans(documents)
     rows = attach_payloads(rows, media)
     rows = salted_repartition(rows, num_partitions, salt)
-    if page_split_bytes is None:
-        return extract_fields(rows, as_of, companies, suppliers, with_raw_text)
-    return extract_fields_paged(
-        rows,
-        as_of,
-        companies,
-        suppliers,
-        oversize_bytes=page_split_bytes,
-        num_partitions=num_partitions,
-        with_raw_text=with_raw_text,
+    return extract_fields(
+        rows, as_of, companies, suppliers, with_raw_text,
+        page_split_bytes=page_split_bytes, num_partitions=num_partitions,
     )
 
 
@@ -683,7 +535,7 @@ def build_pipeline_staged(
 
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fields = _fields_dataflow(
+    fields = fields_dataflow(
         documents, media, as_of, companies, suppliers, num_partitions, salt,
         page_split_bytes, with_raw_text,
     )

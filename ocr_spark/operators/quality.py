@@ -1602,7 +1602,8 @@ def gopher_rules(
     2021 §A1.1; the repetition half is :func:`repetition_stats` /
     :func:`dup_ngram_stats`): word-count band, mean-word-length band,
     symbol-to-word ratio (``#`` and ellipsis), bullet-start and
-    ellipsis-end line fractions, alphabetic-word fraction, and the
+    ellipsis-end line fractions, alphabetic-word fraction (a word holding
+    any Unicode letter, so non-English text is not dropped), and the
     ≥2-of-8 function-word requirement.  Emits one row per document with
     the raw counts, the derived ratios, one boolean per rule, and the
     conjunctive ``keep``.
@@ -1643,7 +1644,7 @@ def gopher_rules(
         F.aggregate(
             toks, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
         ).alias("sum_word_chars"),
-        F.size(F.filter(toks, lambda w: w.rlike("[a-z]"))).cast("long").alias(
+        F.size(F.filter(toks, lambda w: w.rlike(r"\p{L}"))).cast("long").alias(
             "n_alpha_words"
         ),
         sum(

@@ -25,43 +25,11 @@ def _padded(col: Column) -> Column:
     return F.concat(F.lit(" "), F.lower(col), F.lit(" "))
 
 
-def _count_word(col: Column, word: str) -> Column:
-    """Occurrences of ` word ` in padded lower text, overlap-free."""
-    padded = _padded(col)
-    token = f" {word} "
-    # (len(s) - len(replace(s, token, ''))) / len(token)
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(token), F.lit(""))))
-        / F.lit(len(token))
-    ).cast("long")
-
-
 def token_count(col: Column) -> Column:
     t = F.trim(col)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
     ).cast("long")
-
-
-def stopword_scores(col: Column) -> dict[str, Column]:
-    out = {}
-    for lang, words in LANG_STOPWORDS.items():
-        score: Column = F.lit(0).cast("long")
-        for w in words:
-            score = score + _count_word(col, w)
-        out[lang] = score
-    return out
-
-
-def lang_id(col: Column) -> Column:
-    """argmax over per-language stopword hit counts; ties → und."""
-    s = stopword_scores(col)
-    best = F.greatest(*s.values())
-    result = F.lit("und")
-    # deterministic priority en > fr > de on strict winners
-    for lang in ("de", "fr", "en"):
-        result = F.when((s[lang] == best) & (best > 0), F.lit(lang)).otherwise(result)
-    return result
 
 
 def _fix(c: Column, p: int) -> Column:
@@ -74,21 +42,6 @@ def alpha_ratio(col: Column) -> Column:
     return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
         F.length(F.regexp_replace(col, "[^A-Za-z]", "")) / F.length(col)
     )
-
-
-def quality_score(col: Column) -> Column:
-    """Deterministic [0,1] quality: length band + alpha ratio + stopwords.
-
-    Mirrors the reference's keyword-presence confidence idea
-    (data_extractor.py:405-415) generalized to web text.
-    """
-    tokens = token_count(col)
-    length_ok = F.when((tokens >= 10) & (tokens <= 10000), F.lit(0.4)).otherwise(F.lit(0.0))
-    alpha = F.when(alpha_ratio(col) >= 0.6, F.lit(0.3)).otherwise(F.lit(0.0))
-    s = stopword_scores(col)
-    total_sw = s["en"] + s["fr"] + s["de"]
-    sw = F.when(total_sw >= 3, F.lit(0.3)).otherwise(F.lit(0.0))
-    return _fix(length_ok + alpha + sw, 10)
 
 
 def fingerprint(col: Column) -> Column:

@@ -2681,7 +2681,7 @@ counts AS (
   SELECT doc_id,
          CAST(len(tk) AS BIGINT) AS n_words,
          CAST(coalesce(list_sum(list_transform(tk, w -> length(w))), 0) AS BIGINT) AS sum_word_chars,
-         CAST(len(list_filter(tk, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS n_alpha_words,
+         CAST(len(list_filter(tk, w -> regexp_matches(w, '\\p{{L}}'))) AS BIGINT) AS n_alpha_words,
          CAST({" + ".join(f"CAST(list_contains(tk, '{w}') AS INT)" for w in ("the", "be", "to", "of", "and", "that", "have", "with"))} AS BIGINT) AS stop_hits,
          CAST(len(ln) AS BIGINT) AS n_lines,
          CAST(len(list_filter(ln, l -> regexp_matches(l, '^\\s*[-•*] '))) AS BIGINT) AS n_bullet_lines,
@@ -5745,8 +5745,11 @@ def q_media_dedup(spark, sf_dir):
     deterministically — a salted-md5 band of refs is re-referenced
     under a second name (a crawl page re-embedding the same image) —
     then golden-pinned (payload bytes are synthesized Python-side, so
-    no SQL can recompute them; the pin proves the distributed grouped
-    fingerprinting byte-for-byte)."""
+    no SQL can recompute them). The golden is a pure-pandas
+    ``hashlib.md5`` groupby over the same payloads with this extra-ref
+    rule restated (tools/gen_media_goldens.py), not this Spark path, so
+    the pin checks the distributed grouped fingerprinting against an
+    independent computation."""
     from ocr_spark.operators.multimodal import media_dedup
 
     _docs, media = _synth_docs_media(spark)

@@ -16,15 +16,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def load_span_documents(spark: SparkSession, base_dir: str) -> tuple[DataFrame, DataFrame]:
     """Read the synthesized interleaved documents + media datasets."""
     docs = spark.read.parquet(os.path.join(base_dir, "documents"))

@@ -3,30 +3,27 @@
 The reference is a synchronous request/response service with no streaming
 semantics (SURVEY.md §2.9; /root/reference/src/api/routes.py:43), so batch
 is the engine's primary mode. This module demonstrates the promised drop-in
-(SURVEY.md §2.9): the SAME fused kernel stages run unchanged under
-Structured Streaming — `readStream` over the documents source, the
-mapInPandas extraction, and a `foreachBatch` sink reusing the
+(SURVEY.md §2.9): the SAME FIELDS dataflow as the batch pipeline
+(``fields_dataflow``: explode → payload join → salted repartition →
+``extract_fields``) runs unchanged under Structured Streaming over a
+`readStream` documents source, and a `foreachBatch` sink lays the FIELDS
+rows out as extracted_spans JVM-side and hands them to the
 manifest-checkpointed writer, so the stream inherits bucket-granular
 exactly-once semantics on top of Spark's own offset checkpointing.
 
-Micro-batch = one `run_pipeline`-shaped dataflow per trigger; with
+Micro-batch = one `build_pipeline`-shaped dataflow per trigger; with
 ``availableNow`` the stream drains the backlog and stops — the form a
 100 TB backfill-then-tail deployment takes.
 """
 
 from __future__ import annotations
 
-from datetime import date
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ocr_spark.kernel import assemble
 from ocr_spark.operators.extract import (
     assemble_spans_table,
-    attach_payloads,
-    explode_spans,
-    extract_spans_fused,
-    salted_repartition,
+    fields_dataflow,
+    span_rows_from_fields,
 )
 from ocr_spark.schemas import DOCUMENTS
 from ocr_spark.sources.manifests import checkpointed_write
@@ -40,23 +37,6 @@ def stream_documents(spark: SparkSession, docs_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(docs_dir)
     )
-
-
-def extracted_span_rows(
-    stream_docs: DataFrame,
-    media: DataFrame | None,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    num_partitions: int = 8,
-) -> DataFrame:
-    """Streaming DataFrame of output span rows — identical operator chain
-    to the batch pipeline (explode → payload join → salted repartition →
-    fused kernel); `media` is a static side (stream-static join)."""
-    rows = explode_spans(stream_docs)
-    rows = attach_payloads(rows, media)
-    rows = salted_repartition(rows, num_partitions, 0)
-    return extract_spans_fused(rows, as_of, companies, suppliers)
 
 
 def run_stream(
@@ -74,7 +54,7 @@ def run_stream(
 ):
     """Drain the documents backlog into the manifest-checkpointed sink.
 
-    foreachBatch assembles each micro-batch's span rows into
+    foreachBatch assembles each micro-batch's FIELDS rows into
     extracted_spans docs and hands them to checkpointed_write keyed by
     (epoch=batch id) — a replayed micro-batch (post-crash) anti-joins its
     already-manifested buckets, so the sink is idempotent end-to-end.
@@ -93,13 +73,13 @@ def run_stream(
 
         digest = _hashlib.md5(_os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
         snapshot_prefix = f"stream-{digest}"
-    span_rows = extracted_span_rows(
+    fields = fields_dataflow(
         stream_documents(spark, docs_dir), media,
         companies=companies, suppliers=suppliers, num_partitions=num_partitions,
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = assemble_spans_table(batch_df)
+        extracted = assemble_spans_table(span_rows_from_fields(batch_df))
         checkpointed_write(
             spark,
             extracted,
@@ -108,7 +88,7 @@ def run_stream(
             input_snapshot=f"{snapshot_prefix}-batch-{batch_id}",
         )
 
-    writer = span_rows.writeStream.foreachBatch(_sink).option(
+    writer = fields.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:

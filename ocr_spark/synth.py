@@ -198,8 +198,10 @@ def expected_spans(
                 for s in d["spans"]
             ]
         )
-        out = assemble.process_batch(batch, companies=companies, suppliers=suppliers)
-        out = out.sort_values(["offset", "seq"])
+        fields = assemble.fields_batch(
+            assemble.resolve_batch(batch), companies=companies, suppliers=suppliers
+        )
+        out = assemble.spans_from_fields(fields).sort_values(["offset", "seq"])
         yield d["doc_id"], [
             {"kind": r["kind"], "text": r["text"], "media_ref": r["media_ref"], "offset": int(r["offset"])}
             for _, r in out.iterrows()

@@ -1,6 +1,7 @@
-"""Streaming surface: the fused kernel under Structured Streaming must
-produce the identical span output as the batch pipeline (SURVEY.md §2.9
-drop-in claim), through the manifest-checkpointed sink."""
+"""Streaming surface: the batch pipeline's FIELDS dataflow under
+Structured Streaming must produce the identical span output as the batch
+pipeline (SURVEY.md §2.9 drop-in claim), through the manifest-checkpointed
+sink."""
 
 from __future__ import annotations
 

@@ -2,8 +2,9 @@
 
 Every expectation below is hand-computed from the published rule
 definitions (Rae et al. 2021 §A1.1; Raffel et al. 2020 §2.2) — no
-oracle replay here; the DuckDB-twin hash equality lives in
-tests/test_queries_oracle.py rows ``gopher_rules`` / ``c4_clean``.
+oracle replay here, except that the non-ASCII alpha-word case also runs
+the DuckDB twin on its planted doc; the DuckDB-twin hash equality lives
+in tests/test_queries_oracle.py rows ``gopher_rules`` / ``c4_clean``.
 """
 
 from __future__ import annotations
@@ -72,6 +73,33 @@ def test_gopher_alpha_and_length_rules(spark):
     # 10 words < min 20 -> min-words rule fails
     short = _rows(spark, [("m", "one two three four five six s e v n")])["m"]
     assert short["ok_min_words"] is False and short["keep"] is False
+
+
+def test_gopher_alpha_rule_counts_unicode_letters(spark):
+    # a word is alphabetic when it holds any Unicode letter: 10 Cyrillic
+    # words, the all-accented French/Portuguese words 'à' and 'é', and
+    # 'élève' count; the 2 numbers do not -> 13/15 >= 0.8 passes
+    import duckdb
+
+    from ocr_spark.queries import SQL_GOPHER_RULES
+
+    words = (
+        "съешь же ещё этих мягких французских булок да выпей чаю".split()
+        + ["à", "é", "élève", "123", "42"]
+    )
+    text = " ".join(words)
+    row = _rows(spark, [("u", text)])["u"]
+    assert row["n_words"] == 15 and row["n_alpha_words"] == 13
+    assert row["ok_alpha_words"] is True
+    # the DuckDB oracle twin agrees; doc_id 11 gets no marked-view lines
+    # or prefixes, only re-wrapping, which keeps the same 15 tokens
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 11 AS doc_id, ? AS text", [text])
+    got = con.execute(
+        f"SELECT n_words, n_alpha_words FROM ({SQL_GOPHER_RULES})"
+    ).fetchall()
+    con.close()
+    assert got == [(15, 13)]
 
 
 def test_gopher_stopword_rule(spark):
