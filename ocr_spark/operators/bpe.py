@@ -44,8 +44,15 @@ END_WORD = "</w>"
 def word_type_counts(
     corpus: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(word, cnt) over the normalized corpus — the ONLY corpus-wide
-    pass BPE training needs (one explode + one keyed agg)."""
+    r"""(word, cnt) over the normalized corpus — the ONLY corpus-wide
+    pass BPE training needs (one explode + one keyed agg).
+
+    Words split on :func:`dedup.normalized`'s Java ASCII ``\s`` after
+    JVM lower-casing; the golden pin's Python reference
+    (``tests/ref_bpe.normalize``) splits on Unicode ``\s`` after
+    ``str.lower``, so the two agree only on text without non-ASCII
+    whitespace — a precondition tests/test_bpe.py checks on the golden
+    corpus."""
     toks = corpus.select(
         F.explode(
             F.filter(
@@ -120,8 +127,8 @@ def bpe_learn_from_counts(
 ) -> DataFrame:
     """The learner over a PRECOMPUTED ``(word, cnt)`` statistic — word
     counts are additive across deliveries, so this composes with the
-    maintained token-count state
-    (``streaming/quality.py::token_stats_stream_writer``): the
+    maintained token-count state (``maintained_stats_writer`` with the
+    ``token_counts`` build): the
     tokenizer artifact re-learns per delivery at type-table cost with
     NO corpus rescan (``bpe_merges_from_state``), the same
     maintained-statistic loop as the incremental embeddings and the

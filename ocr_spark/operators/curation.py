@@ -471,7 +471,8 @@ def dup_spans_apply(
 ) -> DataFrame:
     """:func:`dup_spans` for a NEW delivery against a FROZEN corpus
     n-gram statistic (a :func:`ngram_window_counts` table — typically
-    the live state ``ngram_stats_stream_writer`` maintains): the
+    the live state ``maintained_stats_writer`` keeps with it as the
+    build): the
     delivery's windows join the ≥ min_df hashes of the statistic
     instead of re-counting the corpus. When ``stats`` covers
     corpus ∪ delivery, the output equals ``dup_spans`` over the full
@@ -918,7 +919,8 @@ def source_overlap(
 def overlap_from_fps(fps: DataFrame) -> DataFrame:
     """The overlap matrix over any distinct ``(src, fp)`` frame — split
     out so a MAINTAINED fingerprint table (the streaming state
-    ``ocr_spark.streaming.curation.fp_stats_stream_writer`` keeps warm,
+    ``maintained_stats_writer`` keeps warm with the
+    ``ocr_spark.streaming.curation.fp_stats`` build,
     or a batch-written fingerprint sidecar) feeds the same audit
     without re-fingerprinting the corpus."""
     from pyspark import StorageLevel
@@ -1012,7 +1014,8 @@ def source_token_counts(
     ``(grp, n_docs, n_tokens)`` from row-local whitespace token counts
     and one map-side-combined keyed agg. Doc and token counts are
     ADDITIVE across disjoint deliveries, so a maintained statistic (the
-    streaming state ``source_stats_stream_writer`` keeps warm, or any
+    state ``maintained_stats_writer`` keeps warm with the
+    ``streaming.curation.source_stats`` build, or any
     batch-written sidecar) can feed :func:`mixture_from_counts` without
     this pass ever re-running over the corpus."""
     toks = F.size(
@@ -1383,6 +1386,14 @@ def c4_clean(
       applies the sentence test to retained lines);
     * contains "lorem ipsum" (case-insensitive);
     * contains a curly brace ``{`` (code page).
+
+    Omitted C4 rules (this operator does not apply them):
+
+    * the policy-phrase line rule — C4 drops lines containing "terms of
+      use", "privacy policy", "cookie policy" or "uses cookies";
+    * the dirty-word page filter — C4 drops any page containing a word
+      from its "List of Dirty, Naughty, Obscene, and Otherwise Bad
+      Words".
 
     C4's final step — removing any three-sentence span occurring more
     than once in the corpus — is the corpus-level dedup this engine

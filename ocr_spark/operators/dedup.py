@@ -80,7 +80,13 @@ def incremental_exact_dedup(
 
 
 def normalized(col: Column) -> Column:
-    """Canonical text form shared by all dedup ops: lower, collapse ws."""
+    r"""Canonical text form shared by all dedup ops: lower, collapse ws.
+
+    Whitespace is Java's ASCII ``\s`` (space, \t, \n, \x0B, \f, \r) and
+    lower-casing is the JVM's, so Unicode spaces (NBSP, U+2028, U+3000)
+    stay inside tokens. A Python twin must use ``re.ASCII`` and trim
+    only spaces; every DuckDB oracle shares this form, and RE2's ``\s``
+    is ASCII too."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 

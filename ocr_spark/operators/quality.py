@@ -353,8 +353,9 @@ def remove_boilerplate_local(
     row and each document filters its own line array row-locally — no
     explode, no re-assembly shuffle, and pure column expressions, so it
     runs UNCHANGED on a streaming frame in append mode with zero state
-    (the streaming drop-in; this is how a maintained statistic from
-    ``line_stats_stream_writer`` cleans live deliveries).
+    (the streaming drop-in; this is how the statistic
+    ``maintained_stats_writer`` keeps with the ``line_stats`` build
+    cleans live deliveries).
 
     Per-line membership is an O(|flagged|) array scan — fine while the
     boilerplate set is broadcast-sized (it is by construction,
@@ -1118,10 +1119,10 @@ def label_token_counts(
 ) -> DataFrame:
     """Per-class term frequencies ``(label, tok, c)`` — the sufficient
     statistic of a multinomial Naive Bayes classifier. Counts are
-    ADDITIVE across disjoint deliveries, so the same HEAD-commit state
-    machinery that maintains :func:`token_counts` maintains this
-    labeled form (``streaming.quality.label_token_stats_stream_writer``)
-    and the classifier retrains from S·V-row state, never rescanning
+    ADDITIVE across disjoint deliveries, so the same
+    ``maintained_stats_writer`` that maintains :func:`token_counts`
+    maintains this labeled form (the ``streaming.quality.label_token_stats``
+    build) and the classifier retrains from S·V-row state, never rescanning
     the corpus."""
     toks = (
         dedup._ensure_parallelism(corpus)

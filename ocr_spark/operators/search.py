@@ -338,8 +338,8 @@ def hashed_tfidf_apply(
     l2_normalize: bool = True,
 ) -> DataFrame:
     """Embed documents against a FIXED corpus-stats artifact (a
-    :func:`doc_freq_stats` table — typically the live state maintained
-    by ``doc_freq_stream_writer``): same sparse (doc_id, bucket, weight)
+    :func:`doc_freq_stats` table — typically the live state
+    ``maintained_stats_writer`` keeps with it as the build): same sparse (doc_id, bucket, weight)
     contract as :func:`hashed_tfidf`, but the corpus is never rescanned
     — the deployable / streaming form, the same fixed-artifact split as
     ``unigram_model`` vs ``score_with_unigram_model``.

@@ -3033,8 +3033,8 @@ SQL_DUP_SPANS = _sql_dup_spans()
 def q_dup_spans_incremental(spark, sf_dir):
     """The dup-span statistic as a maintained table: report ONLY a "new
     delivery" half of the corpus (md5-banded, growth-stable) against the
-    FROZEN n-gram window counts — the table ``ngram_stats_stream_writer``
-    maintains on the stream — via :func:`curation.dup_spans_apply`; the
+    FROZEN n-gram window counts — the table ``maintained_stats_writer``
+    keeps on the stream with ``ngram_window_counts`` as the build — via :func:`curation.dup_spans_apply`; the
     oracle recomputes dup_spans from scratch over the full corpus and
     restricts to the delivery. Equality is what makes duplicated-span
     reporting incremental: a delivery's spans come from the warm
@@ -4423,8 +4423,8 @@ def q_tfidf_incremental(spark, sf_dir):
     """The incremental-embedding loop's batch-expressible face (VERDICT
     r04 next-step #6): embed ONLY a "new delivery" half of the corpus
     (md5-banded, growth-stable) against the FROZEN doc-frequency
-    artifact — the table ``doc_freq_stream_writer`` maintains on the
-    stream — via :func:`search.hashed_tfidf_apply`; the oracle rebuilds
+    artifact — the table ``maintained_stats_writer`` keeps on the
+    stream with ``doc_freq_stats`` as the build — via :func:`search.hashed_tfidf_apply`; the oracle rebuilds
     the same embeddings from scratch over the full corpus and restricts
     to the delivery.  Equality is what makes embeddings a maintained
     table: new docs embed without a corpus rescan, byte-for-byte

@@ -1,4 +1,5 @@
-"""Streaming corpus curation — the stateless drop-ins.
+"""Streaming corpus curation — the stateless drop-ins and the curation
+statistics kept warm as maintained state.
 
 `redact_pii`, `pii_stats`, and `stratified_sample` are pure row-local
 column expressions, so they run unchanged on a streaming DataFrame (no
@@ -7,6 +8,13 @@ aggregates (per-pair gram counts), so it gets a dedicated stateless
 streaming form here: each row's gram ARRAY is checked against the full
 benchmark gram set via a broadcast one-row static frame — no explode, no
 aggregation, no state store, exact `min_hits=1` batch semantics.
+
+The additive curation statistics — n-gram window counts (the batch
+`ngram_window_counts` as the build), :func:`fp_stats` and
+:func:`source_stats` — are builds for
+`streaming.sketch.maintained_stats_writer`, which keeps them in one pass
+over each delivery; the `*_from_state` readers here derive the batch
+artifacts from the committed state with no corpus rescan.
 """
 
 from __future__ import annotations
@@ -63,84 +71,24 @@ def decontaminate_stream(
     )
 
 
-def ngram_stats_stream_writer(
-    stream_docs: DataFrame,
-    n: int = DEFAULT_NGRAM,
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the corpus n-gram window
-    frequencies ``(wh, cnt)`` of a document stream — the statistic
-    :func:`ocr_spark.operators.curation.dup_spans` thresholds on, kept
-    warm per delivery exactly like ``token_stats_stream_writer`` keeps
-    term frequencies: window counts are additive across disjoint
-    deliveries, so the idempotent HEAD-commit merge applies unchanged
-    (replayed micro-batches are no-ops).
-
-    ``read_sketch_state(state_dir)`` at any commit point equals batch
-    :func:`ngram_window_counts` over everything committed so far, and
-    ``dup_spans_apply(new_batch, state)`` then reports the new
-    delivery's duplicated spans against the WHOLE committed corpus
-    without rescanning it (equality with the full-batch rebuild is
-    tested end-to-end). State size is the n-gram type count — larger
-    than a vocabulary but still sublinear in the corpus under heavy
-    duplication; raise ``n_files`` so the LSM-style merges stay
-    partitioned at scale.
-    """
-    from ocr_spark.operators.curation import ngram_window_counts
-    from ocr_spark.streaming.sketch import _merge_batch
-
-    if not state_dir:
-        raise ValueError("ngram_stats_stream_writer needs a state_dir")
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: ngram_window_counts(b, n, text_col),
-            ["wh"],
-            n_files=n_files,
-        )
-    )
-
-
-def fp_stats_stream_writer(
-    stream_docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the distinct content-
+def fp_stats(
+    docs: DataFrame, group_col: str = "source", text_col: str = "text"
+) -> DataFrame:
+    """Build for ``maintained_stats_writer``: the distinct content-
     fingerprint table ``(src, fp, cnt)`` of a document stream — the
     statistic :func:`ocr_spark.operators.curation.source_overlap`
     audits. Presence is what matters (``cnt`` just rides the additive
-    merge machinery): a (src, fp) pair seen in ANY delivery stays in
-    the state, so :func:`source_overlap_from_state` audits the WHOLE
-    committed corpus after each delivery without rescanning it.
-    Idempotent HEAD-commit merges make replayed micro-batches no-ops;
-    state size is the distinct (source, content) count — raise
-    ``n_files`` to keep merges partitioned at scale."""
-    from ocr_spark.streaming.sketch import _merge_batch
-
-    if not state_dir:
-        raise ValueError("fp_stats_stream_writer needs a state_dir")
-
-    def _fps(b: DataFrame) -> DataFrame:
-        return (
-            b.select(
-                F.col(group_col).alias("src"),
-                F.md5(normalized(F.col(text_col))).alias("fp"),
-            )
-            .distinct()
-            .withColumn("cnt", F.lit(1).cast("long"))
+    merge): a (src, fp) pair seen in ANY delivery stays in the state,
+    so :func:`source_overlap_from_state` audits the WHOLE committed
+    corpus after each delivery without rescanning it. State size is the
+    distinct (source, content) count."""
+    return (
+        docs.select(
+            F.col(group_col).alias("src"),
+            F.md5(normalized(F.col(text_col))).alias("fp"),
         )
-
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df, bid, state_dir, _fps, ["src", "fp"], n_files=n_files
-        )
+        .distinct()
+        .withColumn("cnt", F.lit(1).cast("long"))
     )
 
 
@@ -157,42 +105,24 @@ def source_overlap_from_state(spark, state_dir: str) -> DataFrame | None:
     return overlap_from_fps(fps.select("src", "fp"))
 
 
-def source_stats_stream_writer(
-    stream_docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the per-source corpus masses
-    ``(grp, n_docs, n_tokens)`` of a document stream — the statistic
-    :func:`ocr_spark.operators.curation.domain_mixture` plans from.
-    Doc and token counts are additive across disjoint deliveries, so
-    the idempotent HEAD-commit merge applies unchanged (state rides the
-    shared machinery in long form ``(grp, metric, cnt)``); after each
-    delivery :func:`mixture_plan_from_state` re-plans the training mix
-    over the WHOLE committed corpus with no rescan — the S-row math is
-    the only cost."""
+def source_stats(
+    docs: DataFrame, group_col: str = "source", text_col: str = "text"
+) -> DataFrame:
+    """Build for ``maintained_stats_writer``: the per-source corpus
+    masses of a document stream — the statistic
+    :func:`ocr_spark.operators.curation.domain_mixture` plans from — in
+    long form ``(grp, metric, cnt)``. Doc and token counts are additive
+    across disjoint deliveries; after each delivery
+    :func:`mixture_plan_from_state` re-plans the training mix over the
+    WHOLE committed corpus with no rescan — the S-row math is the only
+    cost."""
     from ocr_spark.operators.curation import source_token_counts
-    from ocr_spark.streaming.sketch import _merge_batch
 
-    if not state_dir:
-        raise ValueError("source_stats_stream_writer needs a state_dir")
-
-    def _long(b: DataFrame) -> DataFrame:
-        c = source_token_counts(b, group_col=group_col, text_col=text_col)
-        return c.select(
-            "grp", F.lit("docs").alias("metric"), F.col("n_docs").alias("cnt")
-        ).unionByName(
-            c.select(
-                "grp", F.lit("tokens").alias("metric"), F.col("n_tokens").alias("cnt")
-            )
-        )
-
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df, bid, state_dir, _long, ["grp", "metric"], n_files=n_files
-        )
+    c = source_token_counts(docs, group_col=group_col, text_col=text_col)
+    return c.select(
+        "grp", F.lit("docs").alias("metric"), F.col("n_docs").alias("cnt")
+    ).unionByName(
+        c.select("grp", F.lit("tokens").alias("metric"), F.col("n_tokens").alias("cnt"))
     )
 
 

@@ -10,22 +10,22 @@ equals the batch operators row-for-row across any micro-batch split
 NOT be used on streams (their per-doc groupBy is a streaming
 aggregation that append mode would reject).
 
-Stateful corpus statistics: :func:`token_stats_stream_writer` maintains
-the exact corpus term-frequency table ``(tok, cnt)`` incrementally —
-the one quality statistic the stateless forms CANNOT provide, because
-it aggregates across documents. Counts are additive across deliveries,
-so the writer reuses the sketch-state machinery (idempotent HEAD
-commits keyed on batch id; replayed micro-batches are no-ops) with the
-token as the merge key. :func:`unigram_model_from_state` then derives a
-model artifact EQUAL to the batch :func:`unigram_model` over everything
-committed so far — the index-stats pattern: the stream keeps the
-statistic warm, batch-quality filters consume it without rescanning the
-corpus.
+Stateful corpus statistics: the exact corpus term-frequency table
+``(tok, cnt)`` is the one quality statistic the stateless forms CANNOT
+provide, because it aggregates across documents. Counts are additive
+across deliveries, so ``streaming.sketch.maintained_stats_writer`` keeps
+it warm with the batch :func:`token_counts` as the build (idempotent
+HEAD commits keyed on batch id; replayed micro-batches are no-ops), next
+to any other additive state — :func:`line_stats` and
+:func:`label_token_stats` here — in the same pass over each delivery.
+:func:`unigram_model_from_state` then derives a model artifact EQUAL to
+the batch :func:`unigram_model` over everything committed so far — the
+index-stats pattern: the stream keeps the statistic warm, batch-quality
+filters consume it without rescanning the corpus.
 
 State size is the vocabulary, not the corpus (Heaps' law: sublinear),
 but unlike the CMS it does grow — each merge rewrites the vocab table
-(an O(vocab) LSM-style compaction per batch). At web scale, raise
-``n_files`` so the state stays partitioned, and feed coarser
+(an O(vocab) LSM-style compaction per batch). At web scale, feed coarser
 micro-batches (or merge every Nth batch) — the merge cost amortizes
 exactly like any log-structured index.
 """
@@ -34,39 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ocr_spark.operators.quality import (  # noqa: F401
-    dedup_lines_local as dedup_lines_stream,
-    model_from_token_counts,
-    remove_boilerplate_local as remove_boilerplate_stream,
-    repetition_stats_local as repetition_stats_stream,
-    token_counts,
-)
-from ocr_spark.streaming.sketch import _merge_batch, read_sketch_state
-
-
-def token_stats_stream_writer(
-    stream_docs: DataFrame,
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the exact corpus term
-    frequencies of a document stream. ``read_sketch_state(state_dir)``
-    at any commit point equals batch :func:`token_counts` over every
-    document committed so far (tested across micro-batch boundaries and
-    replays)."""
-    if not state_dir:
-        raise ValueError("token_stats_stream_writer needs a state_dir")
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: token_counts(b, text_col),
-            ["tok"],
-            n_files=n_files,
-        )
-    )
+from ocr_spark.operators.quality import model_from_token_counts
+from ocr_spark.streaming.sketch import read_sketch_state
 
 
 def unigram_model_from_state(
@@ -82,39 +51,22 @@ def unigram_model_from_state(
     return model_from_token_counts(tc, vocab_size)
 
 
-def line_stats_stream_writer(
-    stream_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the cross-document line
+def line_stats(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Build for ``maintained_stats_writer``: the cross-document line
     statistic ``(line_md5, cnt)`` — cnt = how many distinct documents
     contain the line — that
     :func:`ocr_spark.operators.quality.remove_boilerplate` thresholds
     on. Each document arrives in exactly one delivery and doc ids are
     unique, so per-delivery distinct-doc counts are ADDITIVE across
-    deliveries and the idempotent HEAD-commit merge applies unchanged
-    (replayed micro-batches are no-ops). State size is the distinct-line
-    count (sublinear in the corpus under the duplication boilerplate
-    implies)."""
+    deliveries. State size is the distinct-line count (sublinear in the
+    corpus under the duplication boilerplate implies)."""
     from ocr_spark.operators.quality import boilerplate_lines
 
-    if not state_dir:
-        raise ValueError("line_stats_stream_writer needs a state_dir")
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: boilerplate_lines(
-                b, min_docs=1, text_col=text_col, id_col=id_col
-            ).withColumnRenamed("n_docs", "cnt"),
-            ["line_md5"],
-            n_files=n_files,
-        )
-    )
+    return boilerplate_lines(
+        docs, min_docs=1, text_col=text_col, id_col=id_col
+    ).withColumnRenamed("n_docs", "cnt")
 
 
 def boilerplate_stats_from_state(
@@ -133,40 +85,23 @@ def boilerplate_stats_from_state(
     return st.select("line_md5", F.col("cnt").alias("n_docs"))
 
 
-def label_token_stats_stream_writer(
-    stream_docs: DataFrame,
-    label_col: str = "source",
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the per-class term
+def label_token_stats(
+    docs: DataFrame, label_col: str = "source", text_col: str = "text"
+) -> DataFrame:
+    """Build for ``maintained_stats_writer``: the per-class term
     frequencies ``(label, tok, cnt)`` — the Naive Bayes sufficient
-    statistic — of a labeled document stream. Counts are additive, so
-    the idempotent HEAD-commit merge applies unchanged with
-    (label, tok) as the merge key; ``read_sketch_state`` at any commit
-    point equals batch :func:`label_token_counts` over everything
-    committed so far. Pair with ``curation.source_stats_stream_writer``
+    statistic — of a labeled document stream, additive across
+    deliveries (batch :func:`label_token_counts` with ``c`` as
+    ``cnt``). Maintain it in one query with ``curation.source_stats``
     (the mixture family's per-source masses — the classifier reuses
     that exact state) and :func:`nb_model_from_state` retrains the
     classifier per delivery at S·V-row cost, never rescanning the
     corpus."""
     from ocr_spark.operators.quality import label_token_counts
 
-    if not state_dir:
-        raise ValueError("label_token_stats_stream_writer needs a state_dir")
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: label_token_counts(
-                b, label_col=label_col, text_col=text_col
-            ).withColumnRenamed("c", "cnt"),
-            ["label", "tok"],
-            n_files=n_files,
-        )
-    )
+    return label_token_counts(
+        docs, label_col=label_col, text_col=text_col
+    ).withColumnRenamed("c", "cnt")
 
 
 def nb_model_from_state(
@@ -177,11 +112,11 @@ def nb_model_from_state(
     alpha: float = 0.5,
 ) -> DataFrame | None:
     """The :func:`nb_model` artifact derived from two maintained
-    states — the labeled term frequencies
-    (:func:`label_token_stats_stream_writer`) and the per-source masses
-    (``curation.source_stats_stream_writer``, shared with the mixture
-    planner). Equal to the batch build over the committed prefix of the
-    stream (tested stream == batch); the corpus is never rescanned."""
+    states — the labeled term frequencies (:func:`label_token_stats`)
+    and the per-source masses (``curation.source_stats``, shared with
+    the mixture planner). Equal to the batch build over the committed
+    prefix of the stream (tested stream == batch); the corpus is never
+    rescanned."""
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.quality import nb_model_from_counts

@@ -10,6 +10,15 @@ aggregate across rows), and the static stats arrive as ONE cached
 broadcast row. Stateless: no state store, no watermark, exact batch
 semantics per row (tested equal to the batch operator when the static
 corpus is the streamed corpus itself).
+
+The live document-frequency table an incremental
+``search.hashed_tfidf_apply`` embedding needs is maintained state, not
+a writer here: pass the batch ``search.doc_freq_stats`` as the build to
+``streaming.sketch.maintained_stats_writer`` (per-delivery df counts are
+additive — a doc contributes once per distinct term and never recurs
+across deliveries — and the ``tok=''`` doc-count sentinel sums the
+same way), and any new document embeds against the warm statistic with
+no corpus rescan, equal to a batch rebuild (tested).
 """
 
 from __future__ import annotations
@@ -96,36 +105,3 @@ def bm25_score_stream(
         .filter(F.col("n_terms_hit") > 0)
     )
 
-
-def doc_freq_stream_writer(
-    stream_docs: DataFrame,
-    text_col: str = "text",
-    state_dir: str = "",
-    n_files: int = 1,
-):
-    """``writeStream`` writer maintaining the live document-frequency
-    table (+ the ``tok=''`` doc-count sentinel) a
-    :func:`ocr_spark.operators.search.hashed_tfidf_apply` embedding
-    needs — per-delivery df counts are additive (a doc contributes once
-    per distinct term and never recurs across deliveries), so this is
-    the same HEAD-commit idempotent merge the sketch/token-stats states
-    use. Together they form the incrementally-maintained embedding
-    pipeline: the stream keeps the corpus statistic warm, and any new
-    document — including one arriving ON the stream — embeds against it
-    without a corpus rescan, consistently with what a batch rebuild
-    would produce (equivalence tested)."""
-    from ocr_spark.operators.search import doc_freq_stats
-    from ocr_spark.streaming.sketch import _merge_batch
-
-    if not state_dir:
-        raise ValueError("doc_freq_stream_writer needs a state_dir")
-    return stream_docs.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: doc_freq_stats(b, text_col),
-            ["tok"],
-            n_files=n_files,
-        )
-    )

@@ -1,24 +1,29 @@
-"""Streaming sketch maintenance: count-min and histogram state kept
-incrementally under ``foreachBatch``.
+"""Maintained streaming state: additive statistics, reservoirs and
+per-group caps kept incrementally under ``foreachBatch``.
 
-Both sketches are cell-wise ADDITIVE (sum counters on matching keys —
-the property tests/test_sketch_cms_hist.py pins), so the streaming form
-needs no stateful operator at all: each micro-batch builds its own
-delivery-sized sketch and merges it into a bounded on-disk state table
-(depth×width rows for CMS, n_bins rows for the histogram — constant,
-whatever the stream's volume). That sidesteps Spark's one-aggregation
-limit on streams (the CMS is a two-level agg) AND gives restart
-idempotency: the commit pointer records the last merged batch id, so a
-replayed micro-batch is a no-op — the same epoch-guard shape as the
-manifest sink.
+Every additive statistic (count-min and histogram sketches, term, line,
+label-token, n-gram, fingerprint, source and doc-frequency counts) is a
+``cnt`` column summed on matching keys — the property
+tests/test_sketch_cms_hist.py pins — so the streaming form needs no
+stateful operator at all. :func:`maintained_stats_writer` runs ONE
+``foreachBatch`` over the stream: it persists the micro-batch once, sums
+each state's ``build(batch)`` into that state's committed snapshot, and
+unpersists the batch after the last state commits. A new statistic is a
+build function passed to it, never a new writer. State is bounded by the
+statistic (depth×width rows for CMS, n_bins for the histogram, the vocab
+for term counts), whatever the stream's volume. That sidesteps Spark's
+one-aggregation limit on streams (the CMS is a two-level agg) AND gives
+restart idempotency: each state's commit pointer records the last batch
+id merged into it, so a replayed micro-batch is a no-op for every state
+that already has it — the same epoch-guard shape as the manifest sink.
 
 State layout (same plain-filesystem commit protocol as manifests.py —
 an object-storage deployment swaps the pointer swap for put-if-absent)::
 
-    <state_dir>/versions/v<batch_id>/   parquet sketch snapshot
+    <state_dir>/versions/v<batch_id>/   parquet snapshot
     <state_dir>/HEAD                    {"version", "last_batch_id"}
 
-HEAD is replaced atomically (os.replace), so readers always see a
+HEAD is replaced by an atomic rename, so readers always see a
 complete snapshot; superseded versions stay for a later vacuum.
 """
 
@@ -30,8 +35,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ocr_spark.operators.sketch import cms_sketch, hist_bins
 
 
 def _head_path(state_dir: str) -> str:
@@ -46,7 +49,7 @@ def read_head(state_dir: str) -> dict | None:
 
 
 def read_sketch_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The current committed sketch snapshot, or None before the first
+    """The current committed snapshot, or None before the first
     micro-batch commits."""
     head = read_head(state_dir)
     if head is None:
@@ -54,29 +57,18 @@ def read_sketch_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return spark.read.parquet(head["version"])
 
 
-def _merge_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    build: Callable[[DataFrame], DataFrame],
-    keys: list[str],
-    n_files: int = 1,
+def _commit(
+    state_dir: str, batch_id: int, merge: Callable[[str | None], DataFrame]
 ) -> None:
-    spark = batch_df.sparkSession
+    """One idempotent HEAD commit: skip a batch id the state already
+    holds, else write ``merge(previous version dir or None)`` as version
+    ``v<batch_id>`` (one file) and swap HEAD to it."""
     head = read_head(state_dir)
     if head is not None and batch_id <= head["last_batch_id"]:
         return  # replayed micro-batch after a restart: already merged
-    sk = build(batch_df)
-    if head is not None:
-        prev = spark.read.parquet(head["version"])
-        sk = prev.unionByName(sk).groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
+    merged = merge(None if head is None else head["version"])
     vdir = os.path.join(state_dir, "versions", f"v{batch_id}")
-    # repartition BY KEY, not coalesce: coalesce can only reduce the
-    # partition count, and AQE typically leaves the small merge shuffle
-    # at 1 partition — so a raised n_files knob would silently still
-    # write one file. Keyed repartition makes the state layout follow
-    # the knob and keeps each key's rows in one file.
-    sk.repartition(n_files, *keys).write.mode("overwrite").parquet(vdir)
+    merged.coalesce(1).write.mode("overwrite").parquet(vdir)
     os.makedirs(state_dir, exist_ok=True)
     tmp = _head_path(state_dir) + ".tmp"
     with open(tmp, "w") as f:
@@ -84,62 +76,50 @@ def _merge_batch(
     os.replace(tmp, _head_path(state_dir))
 
 
-def cms_stream_writer(
-    stream_values: DataFrame,
-    value_col: str,
-    state_dir: str,
-    depth: int = 4,
-    width: int = 512,
+def _merge_stats(
+    batch_df: DataFrame,
+    batch_id: int,
+    stats: dict[str, Callable[[DataFrame], DataFrame]],
+) -> None:
+    batch_df.persist()
+    try:
+        for state_dir, build in stats.items():
+
+            def merge(prev: str | None) -> DataFrame:
+                sk = build(batch_df)
+                if prev is None:
+                    return sk
+                keys = [c for c in sk.columns if c != "cnt"]
+                return (
+                    batch_df.sparkSession.read.parquet(prev)
+                    .unionByName(sk)
+                    .groupBy(*keys)
+                    .agg(F.sum("cnt").alias("cnt"))
+                )
+
+            _commit(state_dir, batch_id, merge)
+    finally:
+        batch_df.unpersist()
+
+
+def maintained_stats_writer(
+    stream: DataFrame, stats: dict[str, Callable[[DataFrame], DataFrame]]
 ):
-    """``writeStream`` writer maintaining a live count-min sketch of a
-    streaming value column. ``read_sketch_state`` at any point returns a
-    sketch EQUAL to the batch ``cms_sketch`` over everything committed
-    so far (tested across micro-batch boundaries and restarts)."""
-    return stream_values.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: cms_sketch(b, value_col, depth, width),
-            ["r", "b"],
-        )
+    """``writeStream`` writer keeping every additive statistic in
+    ``stats`` (``{state_dir: build}``) warm from ONE pass over each
+    micro-batch. ``build(batch)`` returns key columns plus a ``cnt``
+    column (e.g. ``token_counts``, ``doc_freq_stats``,
+    ``ngram_window_counts``, ``cms_sketch``, ``hist_bins``, or the
+    ``line_stats`` / ``label_token_stats`` / ``fp_stats`` /
+    ``source_stats`` shapes beside their ``*_from_state`` readers); the
+    merge keys are every other column. ``read_sketch_state(state_dir)``
+    at any drain point EQUALS ``build`` over everything committed so far
+    (tested across micro-batch boundaries, restarts, and a crash between
+    two states' commits: each state keeps its own HEAD, so the replay
+    merges only the states that missed the batch)."""
+    return stream.writeStream.foreachBatch(
+        lambda df, bid: _merge_stats(df, bid, stats)
     )
-
-
-def _merge_reservoir(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    n: int,
-    weight_col: str,
-    id_col: str,
-    salt: int,
-) -> None:
-    from ocr_spark.operators.curation import aes_keyed
-
-    spark = batch_df.sparkSession
-    head = read_head(state_dir)
-    if head is not None and batch_id <= head["last_batch_id"]:
-        return  # replayed micro-batch after a restart: already merged
-    cand = (
-        aes_keyed(batch_df, weight_col, id_col, salt)
-        .orderBy(F.col("_aes_key").asc(), F.col(id_col).asc())
-        .limit(n)
-    )
-    if head is not None:
-        prev = spark.read.parquet(head["version"])
-        cand = (
-            prev.unionByName(cand)
-            .orderBy(F.col("_aes_key").asc(), F.col(id_col).asc())
-            .limit(n)
-        )
-    vdir = os.path.join(state_dir, "versions", f"v{batch_id}")
-    cand.coalesce(1).write.mode("overwrite").parquet(vdir)
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _head_path(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(json.dumps({"version": vdir, "last_batch_id": batch_id}))
-    os.replace(tmp, _head_path(state_dir))
 
 
 def reservoir_stream_writer(
@@ -155,57 +135,23 @@ def reservoir_stream_writer(
     A-ES key −ln(u)/w is a pure per-row function, so each micro-batch
     contributes its own n best draws and the committed reservoir keeps
     the n smallest keys overall — min-n is mergeable exactly like the
-    additive sketches above, under the same HEAD commit protocol
+    additive statistics above, under the same HEAD commit protocol
     (bounded n-row state, idempotent replays). At any drain point the
     state EQUALS the batch ``weighted_sample`` over everything committed
     so far (tested across micro-batch boundaries); rows assume unique
     ids, as the draw is keyed on (salt, id)."""
-    return stream_rows.writeStream.foreachBatch(
-        lambda df, bid: _merge_reservoir(
-            df, bid, state_dir, n, weight_col, id_col, salt
-        )
-    )
+    from ocr_spark.operators.curation import aes_keyed
 
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        def merge(prev: str | None) -> DataFrame:
+            cand = aes_keyed(batch_df, weight_col, id_col, salt)
+            if prev is not None:
+                cand = batch_df.sparkSession.read.parquet(prev).unionByName(cand)
+            return cand.orderBy(F.col("_aes_key").asc(), F.col(id_col).asc()).limit(n)
 
-def _merge_group_cap(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    group_col: str,
-    max_rows: int,
-    id_col: str,
-    salt: int,
-) -> None:
-    from pyspark.sql import Window
+        _commit(state_dir, batch_id, merge)
 
-    from ocr_spark.operators.curation import cap_per_group
-
-    spark = batch_df.sparkSession
-    head = read_head(state_dir)
-    if head is not None and batch_id <= head["last_batch_id"]:
-        return  # replayed micro-batch: already merged
-    # within the (possibly huge) batch: the skew-proof bucketed form
-    cand = cap_per_group(batch_df, group_col, max_rows, id_col, salt)
-    if head is not None:
-        prev = spark.read.parquet(head["version"])
-        # state ∪ candidates is ≤ 2·max_rows rows PER GROUP by
-        # construction, so the textbook window is safe here — the draw
-        # is recomputable from (salt, id), nothing extra rides the state
-        u = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-        w = Window.partitionBy(group_col).orderBy(u.asc(), F.col(id_col).asc())
-        cand = (
-            prev.unionByName(cand)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_rows)
-            .drop("_rn")
-        )
-    vdir = os.path.join(state_dir, "versions", f"v{batch_id}")
-    cand.coalesce(1).write.mode("overwrite").parquet(vdir)
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _head_path(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(json.dumps({"version": vdir, "last_batch_id": batch_id}))
-    os.replace(tmp, _head_path(state_dir))
+    return stream_rows.writeStream.foreachBatch(_batch)
 
 
 def group_cap_stream_writer(
@@ -227,11 +173,32 @@ def group_cap_stream_writer(
     protocol: idempotent replays, and at any drain point the state
     EQUALS the batch ``cap_per_group`` over everything committed
     (tested across micro-batch boundaries)."""
-    return stream_rows.writeStream.foreachBatch(
-        lambda df, bid: _merge_group_cap(
-            df, bid, state_dir, group_col, max_rows, id_col, salt
-        )
-    )
+    from pyspark.sql import Window
+
+    from ocr_spark.operators.curation import cap_per_group
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        def merge(prev: str | None) -> DataFrame:
+            # within the (possibly huge) batch: the skew-proof bucketed form
+            cand = cap_per_group(batch_df, group_col, max_rows, id_col, salt)
+            if prev is None:
+                return cand
+            # state ∪ candidates is ≤ 2·max_rows rows PER GROUP by
+            # construction, so the textbook window is safe here — the draw
+            # is recomputable from (salt, id), nothing extra rides the state
+            u = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
+            w = Window.partitionBy(group_col).orderBy(u.asc(), F.col(id_col).asc())
+            return (
+                batch_df.sparkSession.read.parquet(prev)
+                .unionByName(cand)
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= max_rows)
+                .drop("_rn")
+            )
+
+        _commit(state_dir, batch_id, merge)
+
+    return stream_rows.writeStream.foreachBatch(_batch)
 
 
 def read_reservoir_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -239,25 +206,3 @@ def read_reservoir_state(spark: SparkSession, state_dir: str) -> DataFrame | Non
     the first micro-batch commits."""
     state = read_sketch_state(spark, state_dir)
     return None if state is None else state.drop("_aes_key")
-
-
-def hist_stream_writer(
-    stream_values: DataFrame,
-    value_col: str,
-    state_dir: str,
-    lo: float,
-    hi: float,
-    n_bins: int,
-):
-    """Streaming equi-width histogram — same incremental-merge contract
-    as :func:`cms_stream_writer`; feed the committed state to
-    ``sketch.hist_quantiles``'s interpolation for live quantiles."""
-    return stream_values.writeStream.foreachBatch(
-        lambda df, bid: _merge_batch(
-            df,
-            bid,
-            state_dir,
-            lambda b: hist_bins(b, value_col, lo, hi, n_bins),
-            ["b"],
-        )
-    )

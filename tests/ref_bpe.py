@@ -17,6 +17,10 @@ END_WORD = "</w>"
 
 
 def normalize(text: str) -> str:
+    r"""Python's Unicode ``\s`` and ``str.lower``, where the Spark side
+    (``dedup.normalized``) uses Java's ASCII ``\s`` and JVM lower-casing:
+    equal only on text without non-ASCII whitespace, which
+    tests/test_bpe.py checks for the golden corpus."""
     return re.sub(r"\s+", " ", text.lower()).strip()
 
 

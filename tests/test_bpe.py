@@ -8,6 +8,8 @@ the catalog rows hash-match it (driver-sim + oracle gate)."""
 
 from __future__ import annotations
 
+import re
+
 from tests import ref_bpe
 from ocr_spark.operators import bpe
 
@@ -89,3 +91,17 @@ def test_learn_from_counts_equals_learn(spark):
         quality.token_counts(c, "text"), n_merges=6, word_col="tok"
     ).orderBy("rank").collect()
     assert [tuple(r) for r in direct] == [tuple(r) for r in via_counts]
+
+
+def test_golden_corpus_has_only_ascii_whitespace():
+    r"""The golden pin's precondition: ``ref_bpe.normalize`` (Unicode
+    ``\s``, ``str.strip``) equals the ASCII-whitespace form Spark's
+    ``dedup.normalized`` computes (Java ``\s``, ``trim`` of spaces) on
+    every text of the golden corpus."""
+    from tools.gen_bpe_golden import N_DOCS, corpus_texts
+
+    texts = corpus_texts()
+    assert len(texts) == N_DOCS
+    for t in texts:
+        ascii_form = re.sub(r"\s+", " ", t.lower(), flags=re.ASCII).strip(" ")
+        assert ref_bpe.normalize(t) == ascii_form

@@ -90,8 +90,7 @@ def test_incremental_dup_spans_loop_end_to_end(spark, tmp_path):
     the frozen state — equal to the full-batch dup_spans over everything
     delivered so far, restricted to those docs. No corpus rescan, the
     same incremental split hashed_tfidf_apply proves for embeddings."""
-    from ocr_spark.streaming.curation import ngram_stats_stream_writer
-    from ocr_spark.streaming.sketch import read_sketch_state
+    from ocr_spark.streaming.sketch import maintained_stats_writer, read_sketch_state
 
     src, docs = _write_batched(spark, tmp_path)
     state = str(tmp_path / "ngram_state_e2e")
@@ -99,7 +98,9 @@ def test_incremental_dup_spans_loop_end_to_end(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        ngram_stats_stream_writer(stream, n=8, text_col="text", state_dir=state)
+        maintained_stats_writer(
+            stream, {state: lambda b: curation.ngram_window_counts(b, n=8)}
+        )
         .option("checkpointLocation", str(tmp_path / "ck_ngram_e2e"))
         .trigger(availableNow=True)
         .start()
@@ -136,11 +137,8 @@ def test_fp_state_feeds_source_overlap(spark, tmp_path):
     source_overlap over the full committed input — the overlap audit as
     a warm statistic, never a corpus rescan."""
     from ocr_spark.operators import curation
-    from ocr_spark.streaming.curation import (
-        fp_stats_stream_writer,
-        source_overlap_from_state,
-    )
-    from ocr_spark.streaming.sketch import read_head
+    from ocr_spark.streaming.curation import fp_stats, source_overlap_from_state
+    from ocr_spark.streaming.sketch import maintained_stats_writer, read_head
 
     rows = []
     # two "crawls" sharing half their content + a disjoint third source
@@ -161,7 +159,7 @@ def test_fp_state_feeds_source_overlap(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        fp_stats_stream_writer(stream, state_dir=state)
+        maintained_stats_writer(stream, {state: fp_stats})
         .option("checkpointLocation", str(tmp_path / "ck_fp"))
         .trigger(availableNow=True)
         .start()
@@ -182,11 +180,8 @@ def test_fp_state_feeds_source_overlap(spark, tmp_path):
 
 
 def test_source_stats_stream_equals_batch_mixture(spark, tmp_path):
-    from ocr_spark.streaming.curation import (
-        mixture_plan_from_state,
-        source_stats_stream_writer,
-    )
-    from ocr_spark.streaming.sketch import read_head
+    from ocr_spark.streaming.curation import mixture_plan_from_state, source_stats
+    from ocr_spark.streaming.sketch import maintained_stats_writer, read_head
 
     src, docs = _write_batched(spark, tmp_path)
     stream = (
@@ -196,7 +191,7 @@ def test_source_stats_stream_equals_batch_mixture(spark, tmp_path):
     )
     state = str(tmp_path / "mix_state")
     q = (
-        source_stats_stream_writer(stream, state_dir=state)
+        maintained_stats_writer(stream, {state: source_stats})
         .option("checkpointLocation", str(tmp_path / "ck_mix"))
         .trigger(availableNow=True)
         .start()

@@ -7,10 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_spark.operators import quality
-from ocr_spark.streaming.quality import (
-    dedup_lines_stream,
-    repetition_stats_stream,
-)
+from ocr_spark.operators.quality import dedup_lines_local, repetition_stats_local
+from ocr_spark.streaming.sketch import maintained_stats_writer
 
 SF_DIR = "/root/testdata/sf0.001"
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -48,7 +46,7 @@ def test_repetition_stats_stream_equals_batch(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     got = _run_stream(
-        spark, repetition_stats_stream(stream), tmp_path, "repstats_stream"
+        spark, repetition_stats_local(stream), tmp_path, "repstats_stream"
     ).collect()
     want = quality.repetition_stats(docs).collect()
     assert _keyed(got) == _keyed(want)
@@ -61,7 +59,7 @@ def test_dedup_lines_stream_equals_batch(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     got = _run_stream(
-        spark, dedup_lines_stream(stream), tmp_path, "dlines_stream"
+        spark, dedup_lines_local(stream), tmp_path, "dlines_stream"
     ).collect()
     want = quality.dedup_lines(docs).collect()
     assert _keyed(got) == _keyed(want)
@@ -123,10 +121,7 @@ def test_unigram_model_score_stream_equals_batch(spark, tmp_path):
 
 
 def test_token_stats_stream_equals_batch_and_feeds_the_model(spark, tmp_path):
-    from ocr_spark.streaming.quality import (
-        token_stats_stream_writer,
-        unigram_model_from_state,
-    )
+    from ocr_spark.streaming.quality import unigram_model_from_state
     from ocr_spark.streaming.sketch import read_head, read_sketch_state
 
     src, docs = _write_batched(spark, tmp_path)
@@ -137,7 +132,7 @@ def test_token_stats_stream_equals_batch_and_feeds_the_model(spark, tmp_path):
 
     def _drain():
         q = (
-            token_stats_stream_writer(stream, "text", state)
+            maintained_stats_writer(stream, {state: quality.token_counts})
             .option("checkpointLocation", str(tmp_path / "ck_tok"))
             .trigger(availableNow=True)
             .start()
@@ -172,7 +167,6 @@ def test_token_stats_stream_equals_batch_and_feeds_the_model(spark, tmp_path):
 
 def test_doc_freq_stream_feeds_incremental_embeddings(spark, tmp_path):
     from ocr_spark.operators import search as s_ops
-    from ocr_spark.streaming.search import doc_freq_stream_writer
     from ocr_spark.streaming.sketch import read_head, read_sketch_state
 
     src, docs = _write_batched(spark, tmp_path)
@@ -181,7 +175,7 @@ def test_doc_freq_stream_feeds_incremental_embeddings(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        doc_freq_stream_writer(stream, "text", state)
+        maintained_stats_writer(stream, {state: s_ops.doc_freq_stats})
         .option("checkpointLocation", str(tmp_path / "ck_df"))
         .trigger(availableNow=True)
         .start()
@@ -248,7 +242,6 @@ def test_incremental_embedding_loop_end_to_end(spark, tmp_path):
     No corpus rescan, identical embeddings: that equality is what makes
     the incremental path a drop-in for the rebuild."""
     from ocr_spark.operators import search as s_ops
-    from ocr_spark.streaming.search import doc_freq_stream_writer
     from ocr_spark.streaming.sketch import read_sketch_state
 
     src, docs = _write_batched(spark, tmp_path)
@@ -257,7 +250,7 @@ def test_incremental_embedding_loop_end_to_end(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        doc_freq_stream_writer(stream, "text", state)
+        maintained_stats_writer(stream, {state: s_ops.doc_freq_stats})
         .option("checkpointLocation", str(tmp_path / "ck_df_e2e"))
         .trigger(availableNow=True)
         .start()
@@ -287,10 +280,7 @@ def test_line_stats_stream_feeds_boilerplate_removal(spark, tmp_path):
     cnt) warm, then clean 'the new delivery' against the frozen state —
     state equals the batch statistic, and the apply equals the
     full-corpus remove_boilerplate restricted to the delivery."""
-    from ocr_spark.streaming.quality import (
-        boilerplate_stats_from_state,
-        line_stats_stream_writer,
-    )
+    from ocr_spark.streaming.quality import boilerplate_stats_from_state, line_stats
 
     # 20 docs: "footer" in all, "menu" in even ids, unique body lines —
     # shared lines deliberately straddle the micro-batch boundaries
@@ -311,7 +301,7 @@ def test_line_stats_stream_feeds_boilerplate_removal(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        line_stats_stream_writer(stream, state_dir=state)
+        maintained_stats_writer(stream, {state: line_stats})
         .option("checkpointLocation", str(tmp_path / "ck_bp"))
         .trigger(availableNow=True)
         .start()
@@ -348,7 +338,7 @@ def test_remove_boilerplate_stream_equals_batch(spark, tmp_path):
     """The row-local apply form is a stateless streaming drop-in: clean
     a 5-micro-batch stream against a FIXED statistic and match the batch
     anti-join form row-for-row."""
-    from ocr_spark.streaming.quality import remove_boilerplate_stream
+    from ocr_spark.operators.quality import remove_boilerplate_local
 
     rows = [
         (i, ("footer\n" + ("menu\n" if i % 2 == 0 else "") + f"body {i}"))
@@ -368,7 +358,7 @@ def test_remove_boilerplate_stream_equals_batch(spark, tmp_path):
     )
     got = _run_stream(
         spark,
-        remove_boilerplate_stream(stream, stats, min_docs=2),
+        remove_boilerplate_local(stream, stats, min_docs=2),
         tmp_path,
         "bp_stream",
     ).collect()
@@ -418,32 +408,25 @@ def test_nb_model_stream_equals_batch(spark, tmp_path):
     (labeled term frequencies + per-source masses — the latter SHARED
     with the mixture planner) with no corpus rescan: the artifact
     derived from streamed state equals the batch nb_model."""
-    from ocr_spark.streaming.curation import source_stats_stream_writer
-    from ocr_spark.streaming.quality import (
-        label_token_stats_stream_writer,
-        nb_model_from_state,
-    )
+    from ocr_spark.streaming.curation import source_stats
+    from ocr_spark.streaming.quality import label_token_stats, nb_model_from_state
     from ocr_spark.streaming.sketch import read_head
 
     src, docs = _write_batched(spark, tmp_path)
     tstate = str(tmp_path / "nb_tok_state")
     sstate = str(tmp_path / "nb_src_state")
-    for writer, ck, st in (
-        (label_token_stats_stream_writer, "ck_nbtok", tstate),
-        (source_stats_stream_writer, "ck_nbsrc", sstate),
-    ):
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            writer(stream, state_dir=st)
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "streaming query did not drain in time"
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        maintained_stats_writer(stream, {tstate: label_token_stats, sstate: source_stats})
+        .option("checkpointLocation", str(tmp_path / "ck_nb"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(600), "streaming query did not drain in time"
     assert read_head(tstate)["last_batch_id"] >= 2  # crossed batch bounds
 
     def _key(rows):
@@ -499,10 +482,7 @@ def test_bpe_merges_from_stream_state_equals_batch(spark, tmp_path):
     from the streamed token-count state equal the batch learner over
     the full committed corpus."""
     from ocr_spark.operators.bpe import bpe_learn
-    from ocr_spark.streaming.quality import (
-        bpe_merges_from_state,
-        token_stats_stream_writer,
-    )
+    from ocr_spark.streaming.quality import bpe_merges_from_state
 
     src, docs = _write_batched(spark, tmp_path)
     state = str(tmp_path / "bpe_tok_state")
@@ -510,7 +490,7 @@ def test_bpe_merges_from_stream_state_equals_batch(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     q = (
-        token_stats_stream_writer(stream, "text", state)
+        maintained_stats_writer(stream, {state: quality.token_counts})
         .option("checkpointLocation", str(tmp_path / "ck_bpe_tok"))
         .trigger(availableNow=True)
         .start()
