@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ocr_spark.corpus import COMPANIES, SUPPLIERS
-    from ocr_spark.operators.extract import run_pipeline
+    from ocr_spark.operators.extract import build_pipeline
 
     raw = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs = raw.select(
@@ -39,10 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
             )
         ).alias("spans"),
     )
-    _, invoices = run_pipeline(
+    return build_pipeline(
         spark, docs, media=None, companies=COMPANIES, suppliers=SUPPLIERS
-    )
-    return invoices
+    ).invoices
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -58,8 +58,6 @@ EXTRA = [
     "corpus_curation",
     "lsh_index_pairs",
     "repetition_stats",
-    "repetition_stats_local",  # zero-shuffle form (3.2x the explode form)
-    "dedup_lines_local",
     "pack_chunks",
     "kmv_distinct_tokens",
     "dup_ngram_stats",

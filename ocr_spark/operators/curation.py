@@ -123,7 +123,6 @@ def dup_ngram_stats(
     min_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_pass: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-text signal — the corpus-frequency form of
     substring-level dedup (the "how much of this doc is text that also
@@ -152,19 +151,16 @@ def dup_ngram_stats(
     md5-per-occurrence gram build would execute twice (observed in the
     executed plan). Persisting trades one spill-sized write/read of the
     collapsed rows for the second full gram pass — the same
-    recompute-vs-spill call the minhash verify path makes. Callers that
-    can't afford executor storage at their scale pass
-    ``single_pass=False`` to recompute instead.
+    recompute-vs-spill call the minhash verify path makes.
     """
+    from pyspark import StorageLevel
+
     pg = (
         word_ngram_occurrences(documents, text_col, n, id_col)
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).alias("c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if single_pass:
-        from pyspark import StorageLevel
-
-        pg = pg.persist(StorageLevel.MEMORY_AND_DISK)
     dfc = pg.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
     return (
         pg.join(dfc, on="gram")

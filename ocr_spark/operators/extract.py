@@ -89,11 +89,7 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def attach_payloads(
-    span_rows: DataFrame,
-    media: DataFrame | None,
-    broadcast_media: bool = True,
-) -> DataFrame:
+def attach_payloads(span_rows: DataFrame, media: DataFrame | None) -> DataFrame:
     """Attach payloads to media-kind spans in a SINGLE scan of the input.
 
     Round 1 split the input into a media branch (joined) and a text branch
@@ -109,10 +105,10 @@ def attach_payloads(
       with a null payload, and under a shuffled join the unique keys
       distribute uniformly instead of piling every null on one partition.
 
-    ``broadcast_media=True`` (default — per-batch payload dictionaries are
-    small next to the text corpus) hints a broadcast-hash join: no shuffle
-    of the span rows at all.  Set False when the media side is too big to
-    ship; the synthetic keys keep the shuffled fallback skew-free.
+    The media side is hinted as a broadcast (per-batch payload
+    dictionaries are small next to the text corpus): no shuffle of the
+    span rows at all.  Should the planner still pick a shuffled join, the
+    synthetic keys keep it skew-free.
     """
     if media is None:
         return span_rows.withColumn("payload", F.lit(None).cast(T.BinaryType()))
@@ -122,9 +118,7 @@ def attach_payloads(
     ).otherwise(
         F.concat(F.lit("\x00txt:"), F.col("doc_id"), F.lit(":"), F.col("offset").cast("string"))
     )
-    m = media.select(F.col("media_ref").alias("_payload_ref"), "payload")
-    if broadcast_media:
-        m = F.broadcast(m)
+    m = F.broadcast(media.select(F.col("media_ref").alias("_payload_ref"), "payload"))
     return (
         span_rows.withColumn("_jk", join_key)
         .join(m, F.col("_jk") == F.col("_payload_ref"), "left")
@@ -544,34 +538,6 @@ def build_pipeline_staged(
     )
     committed = read_committed(spark, staging_dir, input_snapshot)
     return _frames_from_fields(committed)
-
-
-def run_pipeline(
-    spark: SparkSession,
-    documents: DataFrame,
-    media: DataFrame | None,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    page_split_bytes: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """documents/media → (extracted_spans, invoices) — see build_pipeline
-    (the shared-FIELDS dataflow; use build_pipeline directly when you need
-    the fields frame or its unpersist handle)."""
-    frames = build_pipeline(
-        spark,
-        documents,
-        media,
-        as_of=as_of,
-        companies=companies,
-        suppliers=suppliers,
-        num_partitions=num_partitions,
-        salt=salt,
-        page_split_bytes=page_split_bytes,
-    )
-    return frames.extracted_spans, frames.invoices
 
 
 # --------------------------------------------------------------------------

@@ -11,11 +11,9 @@ ocr_spark.queries, so the driver's hash-equality oracle covers them.
 
 Scale shapes:
 
-* repetition stats: explode → two-level keyed agg (partial map-side
-  combine), one shuffle keyed by doc_id per signal family, then a
-  same-key join — no window over the full corpus, no driver state;
-* line dedup: explode → min(pos) per (doc, line) → ordered re-assembly,
-  all keyed by doc_id;
+* repetition stats and line dedup: row-local array HOFs over the doc's
+  own lines/words — no shuffle beyond the parallelism re-split, and the
+  same function runs on batch and streaming frames;
 * packing: one window per SHARD (deterministic doc_id mod), so the sort
   that defines token order is bounded by corpus/n_shards — pick n_shards
   ≈ cluster parallelism and no task ever sees more than one shard.
@@ -56,10 +54,36 @@ def _sumlen(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0), lambda acc, x: acc + F.length(x))
 
 
-def _rep_staged(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """The row-local half of the repetition signals: line stats as array
-    HOFs plus the raw bigram array (staged to a column so downstream
-    lambdas reference an attribute, never re-inline the split)."""
+def repetition_stats(
+    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Per-doc repetition signals (the Gopher §A1.1 family):
+
+    * ``n_lines``            — physical line count;
+    * ``dup_line_frac``      — (n_lines − n_distinct_lines) / n_lines:
+      fraction of lines that are repeats of an earlier line;
+    * ``dup_line_char_frac`` — characters in repeat occurrences (each
+      duplicated line contributes count−1 of its lengths) over all line
+      characters;
+    * ``top_bigram``/``top_bigram_frac`` — the most frequent word
+      2-gram (ties → lexicographically greatest) and the fraction of
+      normalized-text characters its occurrences cover.
+
+    Plan shape: zero shuffle beyond the ``_ensure_parallelism`` re-split.
+    A document's lines and words are bounded by its row, so the line
+    signals are array HOFs (size/array_distinct/aggregate) and the
+    top-bigram argmax is array_sort + one linear run-scan (O(w log w) per
+    doc — sorted equal bigrams are adjacent, so the longest run IS the
+    max count; never the O(w²) count-each-element HOF). Per-doc cost is
+    bounded by the doc itself (no hot key at any corpus size), and pure
+    column expressions run unchanged on a streaming frame in append mode
+    with zero state. The one shape it handles badly is a single
+    gigaword document, whose bigrams sort in one task.
+
+    Tie rule: the ascending scan replaces the best only on (run > best)
+    or (run = best AND bigram > best's), so on equal counts the
+    lexicographically GREATEST bigram wins (the oracle's tie order).
+    """
     base = dedup._ensure_parallelism(documents).select(
         id_col,
         F.split(F.col(text_col), "\n").alias("_lines"),
@@ -67,7 +91,9 @@ def _rep_staged(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " "
         ).alias("_w"),
     )
-    return base.select(
+    # the raw bigram array is staged to a column so the scan's lambdas
+    # reference an attribute, never re-inline the split
+    staged = base.select(
         id_col,
         F.size("_lines").cast("long").alias("n_lines"),
         (
@@ -87,91 +113,6 @@ def _rep_staged(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>")).alias("_bg"),
     )
-
-
-def repetition_stats(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-doc repetition signals (the Gopher §A1.1 family):
-
-    * ``n_lines``            — physical line count;
-    * ``dup_line_frac``      — (n_lines − n_distinct_lines) / n_lines:
-      fraction of lines that are repeats of an earlier line;
-    * ``dup_line_char_frac`` — characters in repeat occurrences (each
-      duplicated line contributes count−1 of its lengths) over all line
-      characters;
-    * ``top_bigram``/``top_bigram_frac`` — the most frequent word
-    2-gram (ties → lexicographically greatest, so the argmax is a plain
-      max over (count, bigram) structs — no window sort) and the
-      fraction of normalized-text characters its occurrences cover.
-
-    Plan shape: the line signals are pure array HOFs (a document's
-    lines are bounded by its row, so size/array_distinct/aggregate need
-    no shuffle at all), and they ride THROUGH the bigram aggregation as
-    grouping keys (functionally dependent on the doc id) — the whole
-    operator is one explode and two doc-keyed shuffles, no join. The
-    bigram count itself stays explode+groupBy rather than an O(words²)
-    per-row HOF so a single million-word document can't quadratic a
-    task.
-    """
-
-    staged = _rep_staged(documents, text_col, id_col)
-    spans = staged.select(
-        id_col,
-        "n_lines",
-        "dup_line_frac",
-        "dup_line_char_frac",
-        "_nchars",
-        F.explode_outer("_bg").alias("bg"),
-    )
-    stats = [id_col, "n_lines", "dup_line_frac", "dup_line_char_frac", "_nchars"]
-    return (
-        spans.groupBy(*stats, "bg")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(*stats)
-        .agg(F.max(F.struct("cnt", "bg")).alias("_top"))
-        .select(
-            id_col,
-            "n_lines",
-            "dup_line_frac",
-            "dup_line_char_frac",
-            F.col("_top.bg").alias("top_bigram"),
-            F.when(F.col("_top.bg").isNull(), F.lit(0.0))
-            .otherwise(
-                F.col("_top.cnt")
-                * F.length("_top.bg")
-                / F.greatest(F.col("_nchars"), F.lit(1))
-            )
-            .alias("top_bigram_frac"),
-        )
-    )
-
-
-def repetition_stats_local(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Shuffle-FREE form of :func:`repetition_stats` — identical output
-    (hash-equality proven by sharing the explode form's oracle SQL): the
-    top-bigram argmax is computed inside the row as array_sort + one
-    linear run-scan (O(w log w) per doc — sorted equal bigrams are
-    adjacent, so the longest run IS the max count; never the O(w²)
-    naive count-each-element HOF).
-
-    Why it exists twice: every signal here is a pure column expression,
-    so this form runs UNCHANGED on a streaming DataFrame in append mode
-    with zero state — it is the streaming drop-in — and in batch it
-    removes both doc-keyed shuffles, making per-doc cost bounded by the
-    doc itself (no hot key at any corpus size). The explode form remains
-    for the one case this form handles worse: a single pathological
-    gigaword document sorts in one task instead of spreading its bigrams
-    across the cluster.
-
-    Tie rule matched to the explode form's ``max(struct(cnt, bg))``:
-    on equal counts the lexicographically GREATEST bigram wins — the
-    ascending scan replaces the best only on (run > best) or
-    (run = best AND bigram > best's), which lands on the same winner.
-    """
-    staged = _rep_staged(documents, text_col, id_col)
     init = F.struct(
         F.lit("").alias("prev"),
         F.lit(0).cast("long").alias("run"),
@@ -227,43 +168,17 @@ def dedup_lines(
     keeping the FIRST occurrence and the original line order (the CCNet
     within-document paragraph-dedup step).
 
-    min(pos) per (doc, line) then an order-restoring re-assembly —
-    array_sort over (pos, line) structs, so no window and both shuffles
-    key on doc_id."""
-    lines = split_lines(documents, text_col, id_col)
-    firsts = lines.groupBy(id_col, "line").agg(F.min("pos").alias("pos"))
-    return (
-        firsts.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "line"))).alias("_s"))
-        .select(
-            id_col,
-            F.array_join(
-                F.transform(F.col("_s"), lambda s: s["line"]), "\n"
-            ).alias("text_clean"),
-        )
+    One row-local expression: array_distinct over the split lines is
+    hash-based and order-preserving, so per-doc cost is O(lines) and
+    the only exchange is the ``_ensure_parallelism`` re-split. Runs
+    unchanged on a streaming frame in append mode with zero state. A
+    null text gives (id, NULL)."""
+    return dedup._ensure_parallelism(documents).select(
+        id_col,
+        F.array_join(
+            F.array_distinct(F.split(F.col(text_col), "\n")), "\n"
+        ).alias("text_clean"),
     )
-
-
-def dedup_lines_local(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Shuffle-free form of :func:`dedup_lines` (identical output — it
-    shares the explode form's oracle SQL): keep line i iff no equal line
-    precedes it, as a row-local array filter. O(L²) string compares per
-    doc with L = that doc's LINE count — fine for real documents (L is
-    hundreds, and rows stay independent so there is no hot key); prefer
-    the explode form for pathological million-line single documents.
-    Pure column expressions → runs unchanged on streaming frames in
-    append mode with zero state (the streaming drop-in)."""
-    staged = dedup._ensure_parallelism(documents).select(
-        id_col, F.split(F.col(text_col), "\n").alias("_lines")
-    )
-    kept = F.filter(
-        F.col("_lines"),
-        lambda x, i: F.array_position(F.slice(F.col("_lines"), F.lit(1), i), x)
-        == F.lit(0),
-    )
-    return staged.select(id_col, F.array_join(kept, "\n").alias("text_clean"))
 
 
 def boilerplate_lines(
@@ -315,7 +230,7 @@ def remove_boilerplate(
     Scale shape: the flagged set is boilerplate-sized (see
     :func:`boilerplate_lines`), so the anti-join is AQE-broadcast in
     practice; the ordered re-assembly is the same doc-keyed
-    array_sort/array_join as dedup_lines — no window over the corpus."""
+    array_sort/array_join — no window over the corpus."""
     lines = split_lines(documents, text_col, id_col)
     flagged = (stats if stats is not None else boilerplate_lines(
         documents, min_docs, text_col, id_col
@@ -381,7 +296,6 @@ def unigram_logprob(
     documents: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_pass: bool = True,
 ) -> DataFrame:
     """Per-doc mean unigram log-probability under the corpus's OWN
     unigram distribution — the engine-portable seat of the CCNet/KenLM
@@ -397,20 +311,21 @@ def unigram_logprob(
     join back is AQE-skew-splittable (stopwords are exactly the hot
     keys); final groupBy doc. The collapsed frame persists so the
     tokenize pass runs once (column pruning would otherwise clone the
-    lineage into both consumers); ``single_pass=False`` recomputes
-    instead.
+    lineage into both consumers).
     """
+    from pyspark import StorageLevel
+
     toks = (
         dedup._ensure_parallelism(documents)
         .select(id_col, dedup.normalized(F.col(text_col)).alias("_norm"))
         .select(id_col, F.explode_outer(F.split(F.col("_norm"), " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
-    pg = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
-    if single_pass:
-        from pyspark import StorageLevel
-
-        pg = pg.persist(StorageLevel.MEMORY_AND_DISK)
+    pg = (
+        toks.groupBy(id_col, "tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     tc = pg.groupBy("tok").agg(F.sum("c").alias("cnt"))
     total = tc.agg(F.sum("cnt").alias("N"))
     scored = pg.join(tc, on="tok").crossJoin(F.broadcast(total))
@@ -1339,6 +1254,79 @@ def nb_reference_filter(
     return out
 
 
+def _packed_runs(
+    docs: DataFrame, budget: int, media_tokens: int, spans_col: str, id_col: str
+) -> DataFrame:
+    """(id, seq, _run, n_tokens): one row per greedily packed sequence,
+    ``_run`` being that sequence's contiguous run of spans — the shared
+    staging :func:`pack_interleaved` and :func:`pack_interleaved_export`
+    project from.
+
+    Each span's cost is computed once; one aggregate scan records the
+    1-based position where each sequence starts (a new sequence opens
+    whenever adding the next span would exceed ``budget`` on a non-empty
+    sequence), and each sequence slices its own run from there to the
+    next start, so the rollups read each span once instead of making one
+    full-array pass per sequence. Staging ``_costs``/``_starts`` as columns keeps every
+    lambda referencing a plain attribute (the HOF re-evaluation trap)."""
+    cost_of = lambda s: (  # noqa: E731
+        F.when(s["media_ref"] != "", F.lit(media_tokens))
+        .otherwise(token_count(s["text"]))
+        .cast("int")
+    )
+    staged = docs.select(id_col, F.col(spans_col).alias("_spans")).select(
+        id_col, "_spans", F.transform("_spans", cost_of).alias("_costs")
+    )
+    zero = F.lit(0).cast("int")
+    init = F.struct(
+        F.slice(F.array(zero), 1, 0).alias("starts"),
+        zero.alias("i"),
+        zero.alias("used"),
+    )
+
+    def _step(acc, c):
+        i = (acc["i"] + 1).cast("int")
+        roll = (acc["used"] + c > budget) & (acc["used"] > 0)
+        return F.struct(
+            F.when(roll | (acc["i"] == 0), F.concat(acc["starts"], F.array(i)))
+            .otherwise(acc["starts"])
+            .alias("starts"),
+            i.alias("i"),
+            F.when(roll, c).otherwise(acc["used"] + c).cast("int").alias("used"),
+        )
+
+    starts = staged.select(
+        id_col,
+        "_spans",
+        "_costs",
+        F.aggregate("_costs", init, _step)["starts"].alias("_starts"),
+    )
+
+    def _run(start, q):
+        # try_element_at: ANSI mode throws on an out-of-range element_at
+        end = F.coalesce(
+            F.try_element_at(F.col("_starts"), q + 2), F.size("_spans") + 1
+        )
+        return F.struct(
+            F.slice("_spans", start, end - start).alias("run"),
+            F.aggregate(
+                F.slice("_costs", start, end - start),
+                F.lit(0).cast("long"),
+                lambda a, c: a + c,
+            ).alias("n_tokens"),
+        )
+
+    # empty spans: no starts, so explode emits no row
+    return starts.select(
+        id_col, F.posexplode(F.transform("_starts", _run)).alias("seq", "_s")
+    ).select(
+        id_col,
+        "seq",
+        F.col("_s")["run"].alias("_run"),
+        F.col("_s")["n_tokens"].alias("n_tokens"),
+    )
+
+
 def pack_interleaved(
     docs: DataFrame,
     budget: int = 64,
@@ -1368,86 +1356,19 @@ def pack_interleaved(
     materialize the sequence.
 
     Scale shape: entirely row-local (JVM higher-order functions over
-    the spans array — aggregate for the greedy scan, transform for the
-    per-sequence rollup), ZERO shuffle, no Python; at 100 TB this is a
-    pure map stage that composes with any upstream partitioning.  The
-    staged ``_costs``/``_seqs`` projections keep each lambda referencing
-    a plain column (the documented HOF re-evaluation trap)."""
-    sp = F.col("_spans")
-    cost_of = lambda s: (  # noqa: E731
-        F.when(s["media_ref"] != "", F.lit(media_tokens))
-        .otherwise(token_count(s["text"]))
-        .cast("int")
-    )
-    staged = docs.select(
+    the spans array, see :func:`_packed_runs`), ZERO shuffle, no Python;
+    at 100 TB this is a pure map stage that composes with any upstream
+    partitioning."""
+    run = F.col("_run")
+    return _packed_runs(docs, budget, media_tokens, spans_col, id_col).select(
         id_col,
-        F.col(spans_col).alias("_spans"),
-    ).select(
-        id_col,
-        "_spans",
-        F.transform(sp, cost_of).alias("_costs"),
-    )
-    zero = F.lit(0).cast("int")
-    init = F.struct(
-        F.slice(F.array(zero), 1, 0).alias("seqs"),
-        zero.alias("seq"),
-        zero.alias("used"),
-    )
-
-    def _step(acc, c):
-        roll = (acc["used"] + c > budget) & (acc["used"] > 0)
-        seq = F.when(roll, acc["seq"] + 1).otherwise(acc["seq"]).cast("int")
-        used = F.when(roll, c).otherwise(acc["used"] + c).cast("int")
-        return F.struct(
-            F.concat(acc["seqs"], F.array(seq)).alias("seqs"),
-            seq.alias("seq"),
-            used.alias("used"),
-        )
-
-    packed = staged.select(
-        id_col,
-        "_spans",
-        "_costs",
-        F.aggregate("_costs", init, _step)["seqs"].alias("_seqs"),
-    )
-    seqs, costs = F.col("_seqs"), F.col("_costs")
-    # try_element_at: ANSI mode throws on element_at(empty, -1) even
-    # under the size() guard (codegen hoists the sequence bound)
-    per_seq = F.transform(
-        F.sequence(F.lit(0), F.try_element_at(seqs, F.lit(-1))),
-        lambda q: F.struct(
-            q.cast("int").alias("seq"),
-            F.size(F.filter(seqs, lambda s: s == q)).cast("long").alias("n_spans"),
-            F.aggregate(
-                F.zip_with(costs, seqs, lambda c, s: F.when(s == q, c).otherwise(0)),
-                F.lit(0).cast("long"),
-                lambda a, c: a + c,
-            ).alias("n_tokens"),
-            F.size(
-                F.filter(
-                    F.zip_with(sp, seqs, lambda s, sq: (sq == q) & (s["media_ref"] != "")),
-                    lambda hit: hit,
-                )
-            ).cast("long").alias("n_media"),
-            F.array_join(
-                F.filter(
-                    F.zip_with(sp, seqs, lambda s, sq: F.when(sq == q, s["kind"])),
-                    lambda k: k.isNotNull(),
-                ),
-                ",",
-            ).alias("kinds"),
-        ),
-    )
-    # empty spans: try_element_at -> NULL bound -> per_seq is NULL and
-    # explode emits no row, so no guard is needed
-    out = packed.select(id_col, F.explode(per_seq).alias("_s"))
-    return out.select(
-        id_col,
-        F.col("_s")["seq"].alias("seq"),
-        F.col("_s")["n_spans"].alias("n_spans"),
-        F.col("_s")["n_tokens"].alias("n_tokens"),
-        F.col("_s")["n_media"].alias("n_media"),
-        F.col("_s")["kinds"].alias("kinds"),
+        "seq",
+        F.size(run).cast("long").alias("n_spans"),
+        "n_tokens",
+        F.size(F.filter(run, lambda s: s["media_ref"] != ""))
+        .cast("long")
+        .alias("n_media"),
+        F.array_join(F.transform(run, lambda s: s["kind"]), ",").alias("kinds"),
     )
 
 
@@ -1466,96 +1387,23 @@ def pack_interleaved_export(
     the training example (text with projector slots resolved through
     ``media_refs`` against the media side table).
 
-    Deliberately a standalone sibling, not a refactor: the greedy scan
-    is repeated verbatim so the driver-checked manifest row stays
-    byte-identical, and a consistency test asserts (doc, seq,
-    n_tokens) equality between the two — a stronger guarantee than
-    shared code, because it re-derives the assignment independently.
-
-    Same scale shape as the manifest form: row-local JVM HOFs over the
-    staged arrays, ZERO shuffle, zero Python."""
-    sp = F.col("_spans")
-    cost_of = lambda s: (  # noqa: E731
-        F.when(s["media_ref"] != "", F.lit(media_tokens))
-        .otherwise(token_count(s["text"]))
-        .cast("int")
-    )
-    staged = docs.select(
+    Projects from the same staging as the manifest form, so both agree
+    on every (doc, seq, n_tokens) by construction; same scale shape —
+    row-local JVM HOFs, ZERO shuffle, zero Python."""
+    run = F.col("_run")
+    return _packed_runs(docs, budget, media_tokens, spans_col, id_col).select(
         id_col,
-        F.col(spans_col).alias("_spans"),
-    ).select(
-        id_col,
-        "_spans",
-        F.transform(sp, cost_of).alias("_costs"),
-    )
-    zero = F.lit(0).cast("int")
-    init = F.struct(
-        F.slice(F.array(zero), 1, 0).alias("seqs"),
-        zero.alias("seq"),
-        zero.alias("used"),
-    )
-
-    def _step(acc, c):
-        roll = (acc["used"] + c > budget) & (acc["used"] > 0)
-        seq = F.when(roll, acc["seq"] + 1).otherwise(acc["seq"]).cast("int")
-        used = F.when(roll, c).otherwise(acc["used"] + c).cast("int")
-        return F.struct(
-            F.concat(acc["seqs"], F.array(seq)).alias("seqs"),
-            seq.alias("seq"),
-            used.alias("used"),
-        )
-
-    packed = staged.select(
-        id_col,
-        "_spans",
-        "_costs",
-        F.aggregate("_costs", init, _step)["seqs"].alias("_seqs"),
-    )
-    seqs, costs = F.col("_seqs"), F.col("_costs")
-    per_seq = F.transform(
-        F.sequence(F.lit(0), F.try_element_at(seqs, F.lit(-1))),
-        lambda q: F.struct(
-            q.cast("int").alias("seq"),
-            F.array_join(
-                F.filter(
-                    F.zip_with(
-                        sp,
-                        seqs,
-                        lambda s, sq: F.when(
-                            (sq == q) & (s["media_ref"] == ""), s["text"]
-                        ),
-                    ),
-                    lambda t: t.isNotNull(),
-                ),
-                " ",
-            ).alias("text"),
-            F.array_join(
-                F.filter(
-                    F.zip_with(
-                        sp,
-                        seqs,
-                        lambda s, sq: F.when(
-                            (sq == q) & (s["media_ref"] != ""), s["media_ref"]
-                        ),
-                    ),
-                    lambda r: r.isNotNull(),
-                ),
-                ",",
-            ).alias("media_refs"),
-            F.aggregate(
-                F.zip_with(costs, seqs, lambda c, s: F.when(s == q, c).otherwise(0)),
-                F.lit(0).cast("long"),
-                lambda a, c: a + c,
-            ).alias("n_tokens"),
-        ),
-    )
-    out = packed.select(id_col, F.explode(per_seq).alias("_s"))
-    return out.select(
-        id_col,
-        F.col("_s")["seq"].alias("seq"),
-        F.col("_s")["text"].alias("text"),
-        F.col("_s")["media_refs"].alias("media_refs"),
-        F.col("_s")["n_tokens"].alias("n_tokens"),
+        "seq",
+        F.array_join(
+            F.transform(run, lambda s: F.when(s["media_ref"] == "", s["text"])), " "
+        ).alias("text"),
+        F.array_join(
+            F.transform(
+                run, lambda s: F.when(s["media_ref"] != "", s["media_ref"])
+            ),
+            ",",
+        ).alias("media_refs"),
+        "n_tokens",
     )
 
 

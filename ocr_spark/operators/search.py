@@ -100,7 +100,6 @@ def tfidf_top_terms(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_pass: bool = True,
 ) -> DataFrame:
     """Per-document keyword extraction: the top-k terms by tf·idf
     (sklearn-smooth idf = ln((1+N)/(1+df)) + 1; ties → term asc).
@@ -111,6 +110,7 @@ def tfidf_top_terms(
     agg, AQE-skew-splittable term join — plus one rank window
     partitioned BY DOC over the doc's own distinct terms (bounded by
     the document, so no hot key at any corpus size)."""
+    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     toks = (
@@ -119,11 +119,11 @@ def tfidf_top_terms(
         .select(id_col, F.explode_outer(F.split(F.col("_norm"), " ")).alias("term"))
         .filter(F.col("term").isNotNull() & (F.col("term") != ""))
     )
-    pg = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    if single_pass:
-        from pyspark import StorageLevel
-
-        pg = pg.persist(StorageLevel.MEMORY_AND_DISK)
+    pg = (
+        toks.groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     df_t = pg.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = documents.agg(F.count(F.lit(1)).alias("N"))
     idf = F.log((F.lit(1) + F.col("N")) / (F.lit(1) + F.col("df"))) + F.lit(1.0)

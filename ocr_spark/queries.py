@@ -2488,27 +2488,6 @@ def q_dedup_lines(spark, sf_dir):
     return quality.dedup_lines(_lined(_t(spark, sf_dir, "documents")))
 
 
-def q_repetition_stats_local(spark, sf_dir):
-    """Zero-shuffle row-local form of repetition_stats (also the
-    streaming drop-in) — same oracle SQL as the explode form, so the
-    hash match proves the two implementations equivalent."""
-    st = quality.repetition_stats_local(_lined(_t(spark, sf_dir, "documents")))
-    return st.select(
-        "doc_id",
-        "n_lines",
-        fix6(F.col("dup_line_frac")).alias("dup_line_frac"),
-        fix6(F.col("dup_line_char_frac")).alias("dup_line_char_frac"),
-        "top_bigram",
-        fix6(F.col("top_bigram_frac")).alias("top_bigram_frac"),
-    )
-
-
-def q_dedup_lines_local(spark, sf_dir):
-    """Zero-shuffle row-local form of dedup_lines (the streaming
-    drop-in), oracled against the explode form's SQL."""
-    return quality.dedup_lines_local(_lined(_t(spark, sf_dir, "documents")))
-
-
 SQL_DEDUP_LINES = f"""
 WITH aug AS ({_SQL_LINED}),
 ls AS (SELECT doc_id, string_split(text, chr(10)) AS arr FROM aug),
@@ -5603,8 +5582,8 @@ def q_interleaved_export(spark, sf_dir):
     """The payload form of interleaved_pack: one row per packed sequence
     with its in-order text and media refs — the training example a
     multimodal loader consumes (manifest row = cost; this row = the
-    sequence). Standalone greedy re-derivation; a pytest asserts
-    (doc, seq, n_tokens) consistency with the manifest."""
+    sequence). Projects from the manifest's greedy staging; a pytest
+    asserts (doc, seq, n_tokens) consistency with the manifest."""
     docs = _t(spark, sf_dir, "documents")
     return quality.pack_interleaved_export(
         _interleaved_view(docs), budget=_IPACK_BUDGET, media_tokens=_IPACK_MEDIA
@@ -5832,12 +5811,10 @@ CATALOG: dict[str, tuple] = {
     "ocr_word_confidence": (q_ocr_word_confidence, SQL_OCR_WORD_CONFIDENCE),
     # -- r05 rotation: sketch family (first driver check)
     # (final-session swap: kmv_tokens_by_lang, length_quantiles,
-    # cluster_size_hist, unigram_model_score, repetition_stats_local,
-    # dedup_lines_local moved just below the window — each has an
-    # in-window sibling exercising the same machinery
-    # (kmv_distinct_tokens / hist_quantiles / unigram_logprob) or a
-    # driver-green r04 sibling plus a pytest equivalence gate
-    # (near_dup_clusters / repetition_stats / dedup_lines) — so the six
+    # cluster_size_hist, unigram_model_score moved just below the
+    # window — each has an in-window sibling exercising the same
+    # machinery (kmv_distinct_tokens / hist_quantiles / unigram_logprob)
+    # or a driver-green r04 sibling (near_dup_clusters) — so the six
     # NEVER-checked north-rule interleaved + boilerplate rows
     # (html_main_text, interleaved_pack, decontaminate_spans,
     # media_captions, boilerplate_stats, remove_boilerplate) get their
@@ -5926,14 +5903,12 @@ CATALOG: dict[str, tuple] = {
     # ---------------- below the driver's 50-row window ----------------
     # (all driver-green in r03/r04; still fully oracle-verified, plus the
     # round-5 late additions nb_model_head and dup_spans_incremental and
-    # the six final-session swap-outs — every row here keeps the
+    # the four rows swapped out of the window — every row here keeps the
     # identical pytest oracle contract regardless of position)
     "kmv_tokens_by_lang": (q_kmv_tokens_by_lang, SQL_KMV_TOKENS_BY_LANG),
     "length_quantiles": (q_length_quantiles, SQL_LENGTH_QUANTILES),
     "cluster_size_hist": (q_cluster_size_hist, SQL_CLUSTER_SIZE_HIST),
     "unigram_model_score": (q_unigram_model_score, SQL_UNIGRAM_MODEL_SCORE),
-    "repetition_stats_local": (q_repetition_stats_local, SQL_REPETITION_STATS),
-    "dedup_lines_local": (q_dedup_lines_local, SQL_DEDUP_LINES),
     # final-session additions: the two canonical web-corpus cleaning
     # recipes (Gopher rule battery, C4 line/page cleaning) — added after
     # the window froze, so their hard gate is the pytest oracle contract

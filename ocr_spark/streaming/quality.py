@@ -1,14 +1,12 @@
 """Streaming quality signals.
 
-Stateless drop-ins: the row-local forms in ocr_spark.operators.quality
-(:func:`repetition_stats_local`, :func:`dedup_lines_local`) are pure
-column expressions with zero shuffles, so they run UNCHANGED on a
+Stateless signals need no streaming code: ocr_spark.operators.quality's
+:func:`repetition_stats` and :func:`dedup_lines` are pure row-local
+column expressions, so the batch functions themselves run on a
 streaming DataFrame in append mode with no state store and no watermark
 — each micro-batch row is scored/cleaned independently, and the output
-equals the batch operators row-for-row across any micro-batch split
-(tests/test_streaming_quality.py). The explode-based batch forms must
-NOT be used on streams (their per-doc groupBy is a streaming
-aggregation that append mode would reject).
+equals the batch run row-for-row across any micro-batch split
+(tests/test_streaming_quality.py).
 
 Stateful corpus statistics: the exact corpus term-frequency table
 ``(tok, cnt)`` is the one quality statistic the stateless forms CANNOT

@@ -11,7 +11,7 @@ import pytest
 
 from ocr_spark.corpus import COMPANIES, SUPPLIERS
 from ocr_spark.kernel import assemble, pdfdoc
-from ocr_spark.operators.extract import run_pipeline
+from ocr_spark.operators.extract import build_pipeline
 from ocr_spark.operators.multimodal import media_features, set_image_backend
 from ocr_spark.schemas import DOCUMENTS, MEDIA
 
@@ -65,12 +65,16 @@ def test_pipeline_seam_end_to_end(spark):
     pdfdoc.set_pdf_backend(spark, "tests.fake_backends:parse_pdf")
     set_image_backend(spark, "tests.fake_backends:decode_image")
     try:
-        extracted, _ = run_pipeline(
+        frames = build_pipeline(
             spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=4
         )
+        try:
+            extracted_rows = frames.extracted_spans.collect()
+        finally:
+            frames.unpersist()
         spans = {
             (s["offset"], s["kind"]): s["text"]
-            for r in extracted.collect()
+            for r in extracted_rows
             for s in r["spans"]
             if s["kind"] == "text"
         }

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from ocr_spark.corpus import COMPANIES, SUPPLIERS
-from ocr_spark.operators.extract import run_pipeline
+from ocr_spark.operators.extract import build_pipeline
 from ocr_spark.schemas import DOCUMENTS, MEDIA
 from ocr_spark.synth import synth_frames
 
@@ -43,10 +43,13 @@ def test_output_independent_of_partitioning(spark, synth_dfs):
     ]
     outputs = []
     for v in variants:
-        extracted, _ = run_pipeline(
+        frames = build_pipeline(
             spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, **v
         )
-        outputs.append(_spans_by_doc(extracted.collect()))
+        try:
+            outputs.append(_spans_by_doc(frames.extracted_spans.collect()))
+        finally:
+            frames.unpersist()
     assert outputs[0] == outputs[1] == outputs[2]
 
 
@@ -54,10 +57,13 @@ def test_invoices_independent_of_partitioning(spark, synth_dfs):
     docs, media = synth_dfs
     frames = []
     for v in ({"num_partitions": 2}, {"num_partitions": 8, "salt": 3}):
-        _, invoices = run_pipeline(
+        pipeline = build_pipeline(
             spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, **v
         )
-        frames.append(
-            invoices.toPandas().sort_values("invoice_id").reset_index(drop=True)
-        )
+        try:
+            frames.append(
+                pipeline.invoices.toPandas().sort_values("invoice_id").reset_index(drop=True)
+            )
+        finally:
+            pipeline.unpersist()
     assert frames[0].equals(frames[1])

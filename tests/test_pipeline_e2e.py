@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from ocr_spark.corpus import COMPANIES, SUPPLIERS
-from ocr_spark.operators.extract import run_pipeline
+from ocr_spark.operators.extract import build_pipeline
 from ocr_spark.schemas import DOCUMENTS, MEDIA
 from ocr_spark.synth import expected_spans, synth_frames
 
@@ -33,10 +33,13 @@ def synth_dfs(spark):
 @pytest.fixture(scope="module")
 def pipeline_out(spark, synth_dfs):
     docs, media = synth_dfs
-    extracted, invoices = run_pipeline(
+    frames = build_pipeline(
         spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
     )
-    return extracted.collect(), invoices.toPandas()
+    try:
+        return frames.extracted_spans.collect(), frames.invoices.toPandas()
+    finally:
+        frames.unpersist()
 
 
 def _expected() -> dict[str, list[dict]]:
@@ -73,17 +76,21 @@ def test_paged_path_span_equality(spark, synth_dfs):
     """The distributed page-split path (north rule skew mitigation) must
     produce byte-identical spans to the single-pass path."""
     docs, media = synth_dfs
-    extracted, _ = run_pipeline(
+    frames = build_pipeline(
         spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
         num_partitions=8, page_split_bytes=64 * 1024,
     )
+    try:
+        extracted_rows = frames.extracted_spans.collect()
+    finally:
+        frames.unpersist()
     expected = _expected()
     got = {
         r["doc_id"]: [
             {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"], "offset": s["offset"]}
             for s in r["spans"]
         ]
-        for r in extracted.collect()
+        for r in extracted_rows
     }
     assert set(got) == set(expected)
     for doc_id, exp in expected.items():
@@ -96,8 +103,6 @@ def test_invoice_goals_and_line_items(spark, synth_dfs):
     (invoice_service.py:364-389); X13 line items ride as a JSON span and
     an invoices column."""
     import json as _json
-
-    from ocr_spark.operators.extract import build_pipeline
 
     docs, media = synth_dfs
     frames = build_pipeline(
@@ -138,8 +143,6 @@ def test_single_kernel_execution_for_both_outputs(spark, synth_dfs):
     extraction kernel ONCE.  After the spans output materializes, the
     shared FIELDS frame is fully cached and the invoices job reads
     InMemoryTableScan — no second kernel pass in its executed plan."""
-    from ocr_spark.operators.extract import build_pipeline
-
     docs, media = synth_dfs
     frames = build_pipeline(
         spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
@@ -165,13 +168,19 @@ def test_paged_invoices_honor_page_split(spark, synth_dfs):
     page_split_bytes; the shared-FIELDS pipeline routes both outputs
     through the paged kernel, so invoices must be identical either way."""
     docs, media = synth_dfs
-    base = run_pipeline(
-        spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
-    )[1].toPandas().sort_values("invoice_id").reset_index(drop=True)
-    paged = run_pipeline(
-        spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
-        num_partitions=8, page_split_bytes=64 * 1024,
-    )[1].toPandas().sort_values("invoice_id").reset_index(drop=True)
+    invoices = []
+    for split in (None, 64 * 1024):
+        frames = build_pipeline(
+            spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
+            num_partitions=8, page_split_bytes=split,
+        )
+        try:
+            invoices.append(
+                frames.invoices.toPandas().sort_values("invoice_id").reset_index(drop=True)
+            )
+        finally:
+            frames.unpersist()
+    base, paged = invoices
     assert base.equals(paged)
 
 
@@ -185,7 +194,6 @@ def test_ml_data_sink_scores_match_kernel(spark, synth_dfs):
 
     from ocr_spark.kernel import ml as kml
     from ocr_spark.kernel.assemble import RAW_TEXT_LIMIT
-    from ocr_spark.operators.extract import build_pipeline
 
     docs, media = synth_dfs
     frames = build_pipeline(

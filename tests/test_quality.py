@@ -139,35 +139,58 @@ def test_repetition_stats_bounds(spark):
             assert r["dup_line_frac"] > 0.0
 
 
-def test_local_forms_equal_explode_forms(spark):
-    """The zero-shuffle row-local forms must match the explode forms
-    exactly — randomized docs plus hand-picked edges (empty text, one
-    word, tied bigram counts, all-identical lines)."""
-    edge = _docs(
-        spark,
-        [
-            (9001, ""),
-            (9002, "one"),
-            (9003, "a b a b a b"),  # 'a b' and 'b a' tie -> greatest wins
-            (9004, "x\nx\nx\ny"),
-            (9005, "t u\nt u"),
-            (9006, "z z z z z z"),
-            (9007, "  spaced   words  here  "),
-        ],
+def _ref_repetition(text):
+    """Pure-Python repetition_stats row: Java-ASCII ``\\s`` collapse,
+    space-only trim, (count, bigram) argmax; a null text keeps no line
+    signals and no bigram."""
+    import re
+    from collections import Counter
+
+    if text is None:
+        return (None, None, None, None, 0.0)
+    lines = text.split("\n")
+    uniq = set(lines)
+    sumlen = sum(map(len, lines))
+    words = re.sub(r"[ \t\n\x0b\f\r]+", " ", text).strip(" ").split(" ")
+    bigrams = Counter(" ".join(words[i : i + 2]) for i in range(len(words) - 1))
+    top = max(((c, b) for b, c in bigrams.items()), default=None)
+    return (
+        len(lines),
+        (len(lines) - len(uniq)) / len(lines),
+        (sumlen - sum(map(len, uniq))) / max(sumlen, 1),
+        top and top[1],
+        0.0 if top is None else top[0] * len(top[1]) / max(len(" ".join(words)), 1),
     )
-    docs = _rand_docs(spark).unionByName(edge)
-    a = {r["doc_id"]: tuple(r)[1:] for r in quality.repetition_stats(docs).collect()}
-    b = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in quality.repetition_stats_local(docs).collect()
-    }
-    assert a == b
-    c = {r["doc_id"]: r["text_clean"] for r in quality.dedup_lines(docs).collect()}
-    d = {
-        r["doc_id"]: r["text_clean"]
-        for r in quality.dedup_lines_local(docs).collect()
-    }
-    assert c == d
+
+
+def _ref_dedup_lines(text):
+    return None if text is None else "\n".join(dict.fromkeys(text.split("\n")))
+
+
+def test_repetition_and_dedup_match_python_reference(spark):
+    """repetition_stats and dedup_lines equal pure-Python references on
+    randomized docs plus hand-picked edges (empty text, one word, tied
+    bigram counts, all-identical lines, a trailing newline, null text)."""
+    edge = [
+        (9001, ""),
+        (9002, "one"),
+        (9003, "a b a b a b"),
+        (9004, "x\nx\nx\ny"),
+        (9005, "t u\nt u"),
+        (9006, "z z z z z z"),
+        (9007, "  spaced   words  here  "),
+        (9008, "a b c a b c"),  # 'a b' and 'b c' tie -> greatest wins
+        (9009, "p\tq\n\nq p\n"),
+        (9010, None),
+    ]
+    rand = [(r["doc_id"], r["text"]) for r in _rand_docs(spark).collect()]
+    texts = dict(rand + edge)
+    docs = _docs(spark, rand + edge)
+    got = {r["doc_id"]: tuple(r)[1:] for r in quality.repetition_stats(docs).collect()}
+    assert got == {d: _ref_repetition(t) for d, t in texts.items()}
+    assert got[9008][3] == "b c"
+    clean = {r["doc_id"]: r["text_clean"] for r in quality.dedup_lines(docs).collect()}
+    assert clean == {d: _ref_dedup_lines(t) for d, t in texts.items()}
 
 
 def test_unigram_logprob_matches_scalar_reference(spark):
@@ -770,3 +793,58 @@ def test_pack_interleaved_export_consistent_with_manifest(spark):
         ).collect()
     }
     assert man == exp and len(man) > 0
+
+
+def _ref_pack(spans, budget, media_tokens):
+    """Pure-Python greedy packer: (manifest rows, export rows) keyed by seq."""
+    seqs, used = [], 0
+    for kind, text, ref, _ in spans:
+        cost = media_tokens if ref != "" else len(text.split())
+        if not seqs or (used + cost > budget and used > 0):
+            seqs.append([])
+            used = 0
+        seqs[-1].append((kind, text, ref, cost))
+        used += cost
+    manifest, export = {}, {}
+    for q, run in enumerate(seqs):
+        n_tok = sum(c for *_, c in run)
+        manifest[q] = (
+            len(run), n_tok, sum(r != "" for _, _, r, _ in run),
+            ",".join(k for k, *_ in run),
+        )
+        export[q] = (
+            " ".join(t for _, t, r, _ in run if r == ""),
+            ",".join(r for _, _, r, _ in run if r != ""),
+            n_tok,
+        )
+    return manifest, export
+
+
+def test_pack_interleaved_long_doc_matches_python_packer(spark):
+    # 131 mixed spans: images and pdfs, empty and blank text, text spans
+    # longer than the budget (own sequence), under a budget of 12
+    spans = []
+    for i in range(131):
+        if i % 3 == 1:
+            spans.append(("image", "", f"img:{i}", i))
+        elif i % 7 == 0:
+            spans.append(("pdf", "", f"pdf:{i}", i))
+        elif i % 13 == 2:
+            spans.append(("text", " ".join(["long"] * 20), "", i))
+        elif i % 11 == 5:
+            spans.append(("text", "   ", "", i))
+        else:
+            spans.append(("text", " ".join(f"w{i}" for _ in range(i * 5 % 11)), "", i))
+    df = _spans_df(spark, [(7, spans)])
+    manifest, export = _ref_pack(spans, budget=12, media_tokens=5)
+    assert len(manifest) > 20
+    got = {
+        (r["doc_id"], r["seq"]): (r["n_spans"], r["n_tokens"], r["n_media"], r["kinds"])
+        for r in quality.pack_interleaved(df, budget=12, media_tokens=5).collect()
+    }
+    assert got == {(7, q): v for q, v in manifest.items()}
+    got = {
+        (r["doc_id"], r["seq"]): (r["text"], r["media_refs"], r["n_tokens"])
+        for r in quality.pack_interleaved_export(df, budget=12, media_tokens=5).collect()
+    }
+    assert got == {(7, q): v for q, v in export.items()}

@@ -1,13 +1,13 @@
-"""Streaming quality drop-ins: the row-local repetition/line-dedup
-operators must produce the SAME rows on a stream (across micro-batch
-boundaries) as the batch explode forms on the full input."""
+"""Streaming quality: the row-local repetition/line-dedup operators must
+produce the SAME rows on a stream (across micro-batch boundaries) as the
+same functions on the full batch input."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ocr_spark.operators import quality
-from ocr_spark.operators.quality import dedup_lines_local, repetition_stats_local
+from ocr_spark.operators.quality import dedup_lines, repetition_stats
 from ocr_spark.streaming.sketch import maintained_stats_writer
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -46,7 +46,7 @@ def test_repetition_stats_stream_equals_batch(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     got = _run_stream(
-        spark, repetition_stats_local(stream), tmp_path, "repstats_stream"
+        spark, repetition_stats(stream), tmp_path, "repstats_stream"
     ).collect()
     want = quality.repetition_stats(docs).collect()
     assert _keyed(got) == _keyed(want)
@@ -59,7 +59,7 @@ def test_dedup_lines_stream_equals_batch(spark, tmp_path):
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     got = _run_stream(
-        spark, dedup_lines_local(stream), tmp_path, "dlines_stream"
+        spark, dedup_lines(stream), tmp_path, "dlines_stream"
     ).collect()
     want = quality.dedup_lines(docs).collect()
     assert _keyed(got) == _keyed(want)
