@@ -818,19 +818,20 @@ def pq_topk(
     falls outside the R-deep shortlist, so R/k (not m·log2(n_cents)
     bits) sets the recall knob while the corpus is still scanned as
     codes."""
-    books = pq_codebooks(
-        embeddings, dim, m, n_cents, id_col, vec_col, refine_iters
-    )
-    d = dim // m
-    codes = pq_encode(embeddings, books, dim, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
+    # the cap is checked before any training job: an over-cap batch fails fast
     qrows = _bounded_query_collect(
         _normalized_vec(queries.select(id_col, vec_col), vec_col).select(
             id_col, "_nv"
         ),
         max_query_batch,
         "pq_topk",
+    )
+    books = pq_codebooks(
+        embeddings, dim, m, n_cents, id_col, vec_col, refine_iters
+    )
+    d = dim // m
+    codes = pq_encode(embeddings, books, dim, id_col, vec_col).select(
+        F.col(id_col).alias("neighbor_id"), "codes"
     )
     lt_rows = []
     for r in qrows:
@@ -932,6 +933,14 @@ def ivfadc_topk(
     unprobed list is unreachable — the same bound ivf_topk carries);
     within probed lists the re-rank recovers PQ's quantization loss.
     Deterministic (md5-seeded coarse centroids AND codebooks)."""
+    # the cap is checked before any training job: an over-cap batch fails fast
+    qrows = _bounded_query_collect(
+        _normalized_vec(queries.select(id_col, vec_col), vec_col).select(
+            id_col, "_nv"
+        ),
+        max_query_batch,
+        "ivfadc_topk",
+    )
     centroids = ivf_centroids(embeddings, n_lists, id_col, vec_col, assign=assign)
     books = pq_codebooks(
         embeddings, dim, m, n_cents, id_col, vec_col, refine_iters
@@ -945,13 +954,6 @@ def ivfadc_topk(
         on=id_col,
     ).select(F.col(id_col).alias("neighbor_id"), "list_id", "codes")
 
-    qrows = _bounded_query_collect(
-        _normalized_vec(queries.select(id_col, vec_col), vec_col).select(
-            id_col, "_nv"
-        ),
-        max_query_batch,
-        "ivfadc_topk",
-    )
     # per-query: ADC lookup table + its nprobe nearest coarse lists,
     # both driver-computed (queries are a small broadcast set)
     import math as _math

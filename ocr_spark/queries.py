@@ -1440,14 +1440,18 @@ def q_near_dup_keep_one(spark, sf_dir):
 # CTE + min-label aggregate — an independent algorithm (BFS closure vs
 # alternating-star), so a hash match proves the clustering itself, not
 # just a shared implementation.
+# The non-recursive CTEs are MATERIALIZED for the reason the curation
+# chain's are (below): inlined, the LSH pair build re-ran inside every
+# step of the recursive closure (near_dup_clusters at sf0.001: 167 s →
+# 39 s from this hint alone, same rows).
 _SQL_CLUSTERS_CTE = f"""
-WITH RECURSIVE pairs AS ({_sql_lsh_pairs()}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({_sql_lsh_pairs()}),
+edges AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
   SELECT doc_b, doc_a FROM pairs
 ),
-nodes AS (SELECT DISTINCT a AS node FROM edges),
+nodes AS MATERIALIZED (SELECT DISTINCT a AS node FROM edges),
 reach AS (
   SELECT node, node AS m FROM nodes
   UNION
