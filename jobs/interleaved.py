@@ -95,6 +95,8 @@ def main() -> None:
         docs = curation.decontaminate_spans(
             docs, bench, n=args.ngram, min_hits=args.min_hits
         ).filter(F.size("spans") > 0)
+    if args.captions_out or args.clean_out or args.export_out:
+        docs = docs.persist()  # else each output re-reads and re-decontaminates
     packed = quality.pack_interleaved(
         docs, budget=args.budget, media_tokens=args.media_tokens
     )
@@ -125,6 +127,7 @@ def main() -> None:
             stats[flag] = {
                 k: s[k] for k in ("buckets_written", "buckets_skipped", "rows")
             }
+    docs.unpersist()
     stats["wall_sec"] = round(time.monotonic() - t0, 2)
     print(json.dumps(stats))
     spark.stop()

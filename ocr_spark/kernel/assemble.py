@@ -66,6 +66,7 @@ FIELDS_COLUMNS = [
 # FIELDS frame never carries unbounded span text twice.
 RAW_TEXT_LIMIT = 10_000
 SPAN_ROW_COLUMNS = ["doc_id", "offset", "seq", "kind", "text", "media_ref"]
+_SWISS_COLUMNS = ["invoice_number", "invoice_date", "currency", "total_ht", "tva", "total_ttc"]
 
 
 def resolve_content(kind: str, text: str | None, payload: bytes | None) -> str:
@@ -154,13 +155,13 @@ def reassemble_pages(group: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def normalize_content(kinds: pd.Series, contents: pd.Series) -> pd.Series:
-    """Kind-specific normalized text for the output 'text' span (batched)."""
-    out = textnorm.clean_llm(contents)
+def normalize_content(kinds: pd.Series, contents: pd.Series, cleaned: pd.Series) -> pd.Series:
+    """Kind-specific normalized text for the output 'text' span (batched);
+    ``cleaned`` is ``clean_llm(contents)``, the pass the llm family shares."""
     ocr_mask = kinds == "ocr"
     if ocr_mask.any():
-        out = out.where(~ocr_mask, textnorm.normalize_ocr(contents[ocr_mask]))
-    return out
+        return cleaned.where(~ocr_mask, textnorm.normalize_ocr(contents[ocr_mask]))
+    return cleaned
 
 
 def _dec(v) -> Decimal | None:
@@ -187,10 +188,15 @@ def fields_batch(
     contents = resolved["content"].reset_index(drop=True)
     base = resolved.reset_index(drop=True)
 
-    l = llm.extract(contents, as_of_date=as_of_date, companies=companies, suppliers=suppliers)
-    s = swiss.extract(contents)
+    cleaned = textnorm.clean_llm(contents)  # one pass for llm and norm_text
+    l = llm.extract(contents, as_of_date=as_of_date, companies=companies,
+                    suppliers=suppliers, cleaned=cleaned)
+    # Swiss values are read only behind a falsy LLM slot (0.00 is falsy)
+    need = [not all(v) for v in zip(*(l[c] for c in _SWISS_COLUMNS))]
+    s = swiss.extract(contents[need]) if any(need) else pd.DataFrame(columns=_SWISS_COLUMNS)
+    s = s.reindex(contents.index).astype(object).where(lambda d: d.notna(), None)
     b = basic.extract(contents)
-    norm = normalize_content(base["kind"], contents)
+    norm = normalize_content(base["kind"], contents, cleaned)
 
     # column-list iteration, not per-row .iloc views — this runs once per
     # span in the hot path and pandas row views cost ~100 µs each

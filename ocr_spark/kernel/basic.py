@@ -15,6 +15,11 @@ verified quirks — they are the spec (SURVEY.md §5.3):
 * totals-pattern ``(?:TVA\\s*\\d+%|TVA)[\\s:]*...`` captures the amount
   after "TVA 20%" (the % branch wins) — unlike the LLM family.
 
+The line-item literal gains a ``(?<![^\\d\\n])`` anchor, same ``findall``
+output: a match at p after a ``[^\\d\\n]`` char implies one at p-1 (same
+group-1 ends), which the scan tries first, and no match ends on a non-digit.
+It keeps ``([^\\d\\n]+)`` from retrying at every position of a run (quadratic).
+
 The public entrypoint is :func:`extract`, a batch function
 ``pandas.Series[str] -> pandas.DataFrame`` suitable for a pandas UDF.
 """
@@ -40,18 +45,10 @@ _INVOICE_NUMBER_PATTERNS = [
 # data_extractor.py:69-82
 _SIRET_RX = re.compile(r"(?:siret|siren)[\s:]*(\d{9,14})", re.I)
 _VAT_RX = re.compile(r"(?:tva|vat)[\s:]*([A-Z]{2}\d{11})", re.I)
-# data_extractor.py:310
+# data_extractor.py:310, behind a (?<![^\d\n]) anchor (module docstring)
 _LINE_ITEM_RX = re.compile(
-    r"([^\d\n]+)\s+(\d+(?:[,\.]\d+)?)\s+(\d+(?:[,\.]\d{2})?)\s+(\d+(?:[,\.]\d{2})?)"
+    r"(?<![^\d\n])([^\d\n]+)\s+(\d+(?:[,\.]\d+)?)\s+(\d+(?:[,\.]\d{2})?)\s+(\d+(?:[,\.]\d{2})?)"
 )
-# Necessary condition for any _LINE_ITEM_RX match: three whitespace-
-# separated numbers whose 2nd/3rd use the SAME subpatterns as the full
-# regex (full match ⟹ this matches inside it).  The full pattern's
-# leading [^\d\n]+ backtracks at every non-digit start position on
-# item-free docs (the T1 clean leaves one giant line), so a failed cheap
-# digit-anchored search skips it — measured 1.7× on the basic family
-# with bit-identical findall results (same trick as _street_possible).
-_TRIPLE_NUM_RX = re.compile(r"\d[\d,\.]*\s+\d+(?:[,\.]\d{2})?\s+\d+(?:[,\.]\d{2})?")
 # data_extractor.py:343-352 — ordered (pattern, field) pairs
 _TOTALS_PATTERNS = [
     (re.compile(r"(?:Sous.total|TOTAL\s+HT)[\s:]*(\d+(?:[,\.]\d{2})?)", re.I), "subtotal_excl_vat"),
@@ -215,7 +212,7 @@ def _record(cleaned: str) -> dict:
 
     # line items (data_extractor.py:304-336)
     items = []
-    for m in _LINE_ITEM_RX.findall(cleaned) if _TRIPLE_NUM_RX.search(cleaned) else ():
+    for m in _LINE_ITEM_RX.findall(cleaned):
         try:
             amount = float(m[3].replace(",", "."))
             items.append(

@@ -292,12 +292,14 @@ def extract(
     as_of_date: date = date(2025, 8, 19),
     companies: list[dict] | None = None,
     suppliers: list[dict] | None = None,
+    cleaned: pd.Series | None = None,
 ) -> pd.DataFrame:
     """Batch LLM-family extraction: Series[str] -> DataFrame.
 
     Output money columns are Decimal (or None); dates are datetime.date.
+    ``cleaned`` is ``clean_llm(texts)`` when the caller already has it.
     """
-    cleaned = clean_llm(texts)
+    cleaned = clean_llm(texts) if cleaned is None else cleaned
     companies = companies or []
     suppliers = suppliers or []
     company_dims = _compile_company_dims(companies)
