@@ -21,4 +21,10 @@ Design rules (see SURVEY.md / BASELINE.json north rule):
     doc_id hash; oversized PDFs split to page-level rows and re-assembled.
 """
 
+from ocr_spark import zipcache
+
 __version__ = "0.1.0"
+
+# Python workers import this package to run an engine UDF; from then on
+# their per-task importlib.invalidate_caches() skips unchanged zip archives
+zipcache.install()

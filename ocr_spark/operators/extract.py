@@ -25,7 +25,7 @@ broadcast-join form of the same matching lives in operators/enrich.py.
 from __future__ import annotations
 
 from datetime import date
-from functools import partial
+from functools import cached_property, partial
 from typing import Iterator
 
 import pandas as pd
@@ -402,21 +402,28 @@ class PipelineFrames:
     """Shared-FIELDS pipeline outputs: ONE kernel execution feeds every
     table.  ``fields`` is persisted (memory, spill to disk) so whichever
     output materializes first computes the kernel and the others read the
-    cache; call :meth:`unpersist` when the outputs are written."""
+    cache; call :meth:`unpersist` when the outputs are written.  Each
+    output plan is built on first access, so a caller that writes only
+    spans and invoices never builds the goals or ml_data plans."""
 
-    def __init__(
-        self,
-        fields: DataFrame,
-        extracted_spans: DataFrame,
-        invoices: DataFrame,
-        invoice_goals: DataFrame,
-        ml_data: DataFrame,
-    ):
+    def __init__(self, fields: DataFrame):
         self.fields = fields
-        self.extracted_spans = extracted_spans
-        self.invoices = invoices
-        self.invoice_goals = invoice_goals
-        self.ml_data = ml_data
+
+    @cached_property
+    def extracted_spans(self) -> DataFrame:
+        return assemble_spans_table(span_rows_from_fields(self.fields))
+
+    @cached_property
+    def invoices(self) -> DataFrame:
+        return invoices_from_fields(self.fields)
+
+    @cached_property
+    def invoice_goals(self) -> DataFrame:
+        return invoice_goals_from_fields(self.fields)
+
+    @cached_property
+    def ml_data(self) -> DataFrame:
+        return ml_data_from_fields(self.fields)
 
     def unpersist(self) -> None:
         self.fields.unpersist()
@@ -458,8 +465,7 @@ def build_pipeline(
     )
     from pyspark import StorageLevel
 
-    fields = fields.persist(StorageLevel.MEMORY_AND_DISK)
-    return _frames_from_fields(fields)
+    return PipelineFrames(fields.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def fields_dataflow(
@@ -483,17 +489,6 @@ def fields_dataflow(
     return extract_fields(
         rows, as_of, companies, suppliers, with_raw_text,
         page_split_bytes=page_split_bytes, num_partitions=num_partitions,
-    )
-
-
-def _frames_from_fields(fields: DataFrame) -> PipelineFrames:
-    spans = assemble_spans_table(span_rows_from_fields(fields))
-    return PipelineFrames(
-        fields,
-        spans,
-        invoices_from_fields(fields),
-        invoice_goals_from_fields(fields),
-        ml_data_from_fields(fields),
     )
 
 
@@ -536,8 +531,7 @@ def build_pipeline_staged(
     checkpointed_write(
         spark, fields, staging_dir, n_buckets=n_buckets, input_snapshot=input_snapshot
     )
-    committed = read_committed(spark, staging_dir, input_snapshot)
-    return _frames_from_fields(committed)
+    return PipelineFrames(read_committed(spark, staging_dir, input_snapshot))
 
 
 # --------------------------------------------------------------------------

@@ -239,6 +239,43 @@ def test_ml_data_sink_scores_match_kernel(spark, synth_dfs):
         frames.unpersist()
 
 
+def test_outputs_built_only_when_read(spark, monkeypatch):
+    """Writing spans and invoices builds neither the goals nor the ml_data
+    plan; the first read of ``ml_data`` builds it once, with the rows of
+    the catalog's ml_training_data golden."""
+    from pathlib import Path
+
+    from ocr_spark.operators import extract
+    from ocr_spark.queries import _pipeline_frames
+
+    calls = {"ml_data": 0, "invoice_goals": 0}
+    for name, fn in (
+        ("ml_data", extract.ml_data_from_fields),
+        ("invoice_goals", extract.invoice_goals_from_fields),
+    ):
+        def counted(fields, _name=name, _fn=fn):
+            calls[_name] += 1
+            return _fn(fields)
+
+        monkeypatch.setattr(extract, f"{name}_from_fields", counted)
+
+    frames = _pipeline_frames(spark, with_raw_text=True)
+    try:
+        for out in (frames.extracted_spans, frames.invoices):
+            out.write.format("noop").mode("overwrite").save()
+        assert calls == {"ml_data": 0, "invoice_goals": 0}
+        first, second = frames.ml_data, frames.ml_data
+        assert first is second
+        assert calls == {"ml_data": 1, "invoice_goals": 0}
+        got = first.orderBy("ml_id").toPandas()
+    finally:
+        frames.unpersist()
+    golden = pd.read_parquet(
+        Path(__file__).parent / "fixtures" / "ml_training_data_golden.parquet"
+    )
+    pd.testing.assert_frame_equal(got, golden, check_dtype=False)
+
+
 def test_oversized_pdf_split_covered(synth_dfs):
     """The synth corpus must actually exercise the skew path."""
     _, media = synth_dfs
