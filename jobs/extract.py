@@ -114,14 +114,15 @@ def main() -> None:
     # r02 #3: a plain overwrite beside a checkpointed spans write meant a
     # crash between the two left committed spans and missing invoices with
     # no resume marker) — resumed runs are exactly-once for every table.
-    for flag, frame, key in [
-        (args.invoices_out, frames.invoices, "doc_id"),
-        (args.goals_out, frames.invoice_goals, "invoice_id"),
-        (args.ml_data_out, frames.ml_data, "doc_id"),
+    # named, not read: PipelineFrames builds an output's plan on first access
+    for flag, name, key in [
+        (args.invoices_out, "invoices", "doc_id"),
+        (args.goals_out, "invoice_goals", "invoice_id"),
+        (args.ml_data_out, "ml_data", "doc_id"),
     ]:
         if flag:
             s = checkpointed_write(
-                spark, frame, flag, n_buckets=args.buckets,
+                spark, getattr(frames, name), flag, n_buckets=args.buckets,
                 input_snapshot=args.snapshot, key_col=key,
                 stats_cols=stats_cols,
             )

@@ -33,6 +33,20 @@ Net lattice outcome: Swiss dimension lookups contribute nothing, so the
 kernel models them as None; our engine instead passes the dims as
 explicit parameters (the relational broadcast form), which is what a
 fixed deployment would see.
+
+Which family fields the lattice reads, and why only those:
+
+* llm — every FIELDS slot it has. Its number (md5 fallback), currency
+  (CHF default) and supplier ("Fournisseur Inconnu" default) are never
+  falsy, so the reference's Swiss fallbacks and defaults behind them
+  (``INV-DEFAULT``, ``CHF``, the Swiss number and currency) are never
+  taken. Its company can be: an empty ``erp_code`` in the first company
+  row is the LLM default, and ``SITSE`` stands behind it.
+* swiss — only invoice_date (the LLM date is None when ``as_of_date`` is
+  None and no date is found) and the three amounts (a ``0.00`` is falsy),
+  and only on the spans where one of those LLM slots is falsy.
+* basic — line_items, siret, vat_number and confidence; ``basic.extract``
+  computes just those four of its 27-field record.
 """
 
 from __future__ import annotations
@@ -66,7 +80,9 @@ FIELDS_COLUMNS = [
 # FIELDS frame never carries unbounded span text twice.
 RAW_TEXT_LIMIT = 10_000
 SPAN_ROW_COLUMNS = ["doc_id", "offset", "seq", "kind", "text", "media_ref"]
-_SWISS_COLUMNS = ["invoice_number", "invoice_date", "currency", "total_ht", "tva", "total_ttc"]
+# the LLM slots that can be falsy, so the only ones Swiss backs (docstring)
+_SWISS_COLUMNS = ["invoice_date", "total_ht", "tva", "total_ttc"]
+_ZERO = Decimal("0.00")
 
 
 def resolve_content(kind: str, text: str | None, payload: bytes | None) -> str:
@@ -164,8 +180,24 @@ def normalize_content(kinds: pd.Series, contents: pd.Series, cleaned: pd.Series)
     return cleaned
 
 
-def _dec(v) -> Decimal | None:
-    return v if isinstance(v, Decimal) else (None if v is None else Decimal(str(v)))
+def _coalesce(first: pd.Series, *rest) -> pd.Series:
+    """Falsy coalesce down aligned columns: per row ``first or r1 or ...``,
+    as the reference writes it (a ``Decimal("0.00")`` counts as absent); an
+    item of ``rest`` may be a scalar default."""
+    out = first
+    for nxt in rest:
+        out = out.where(out.astype(bool), nxt)
+    return out
+
+
+def _iso(dates: pd.Series) -> pd.Series:
+    return dates.map(lambda d: d.isoformat() if d else None)
+
+
+def _items_json(items: list[dict]) -> str | None:
+    # X13 items → one deterministic JSON blob (AR3 shape: compact separators,
+    # insertion key order, shortest-round-trip floats); None emits no span
+    return json.dumps(items, ensure_ascii=False, separators=(",", ":")) if items else None
 
 
 def fields_batch(
@@ -177,6 +209,8 @@ def fields_batch(
 ) -> pd.DataFrame:
     """Resolved span rows → FIELDS_COLUMNS rows (merge lattice applied).
 
+    Column-wise: each output column is a family column or one falsy
+    coalesce of several (no per-span loop).
     ``emit_raw_text=False`` leaves the raw_text column null: the column
     roughly doubles the FIELDS row payload (it duplicates the span text
     beside norm_text), and shipping+persisting it measurably throttles
@@ -185,108 +219,51 @@ def fields_batch(
     """
     if len(resolved) == 0:
         return pd.DataFrame(columns=FIELDS_COLUMNS)
-    contents = resolved["content"].reset_index(drop=True)
     base = resolved.reset_index(drop=True)
+    contents = base["content"]
 
     cleaned = textnorm.clean_llm(contents)  # one pass for llm and norm_text
     l = llm.extract(contents, as_of_date=as_of_date, companies=companies,
                     suppliers=suppliers, cleaned=cleaned)
-    # Swiss values are read only behind a falsy LLM slot (0.00 is falsy)
-    need = [not all(v) for v in zip(*(l[c] for c in _SWISS_COLUMNS))]
-    s = swiss.extract(contents[need]) if any(need) else pd.DataFrame(columns=_SWISS_COLUMNS)
-    s = s.reindex(contents.index).astype(object).where(lambda d: d.notna(), None)
+    need = ~l[_SWISS_COLUMNS].astype(bool).all(axis=1)
+    s = swiss.extract(contents[need]) if need.any() else pd.DataFrame()
+    s = (s.reindex(index=contents.index, columns=_SWISS_COLUMNS).astype(object)
+         .where(lambda d: d.notna(), None))
     b = basic.extract(contents)
-    norm = normalize_content(base["kind"], contents, cleaned)
-
-    # column-list iteration, not per-row .iloc views — this runs once per
-    # span in the hot path and pandas row views cost ~100 µs each
-    # (profiled: ~10 % of the kernel)
-    cols = {
-        "l_number": l["invoice_number"].tolist(),
-        "l_date": l["invoice_date"].tolist(),
-        "l_due": l["due_date"].tolist(),
-        "l_currency": l["currency"].tolist(),
-        "l_ht": l["total_ht"].tolist(),
-        "l_tva": l["tva"].tolist(),
-        "l_ttc": l["total_ttc"].tolist(),
-        "l_company": l["company_erp_code"].tolist(),
-        "l_supplier": l["supplier_name"].tolist(),
-        "l_email": l["email"].tolist(),
-        "l_phone": l["phone"].tolist(),
-        "s_number": s["invoice_number"].tolist(),
-        "s_date": s["invoice_date"].tolist(),
-        "s_currency": s["currency"].tolist(),
-        "s_ht": s["total_ht"].tolist(),
-        "s_tva": s["tva"].tolist(),
-        "s_ttc": s["total_ttc"].tolist(),
-        "b_items": b["line_items"].tolist(),
-        "b_siret": b["siret"].tolist(),
-        "b_vat": b["vat_number"].tolist(),
-        "b_conf": b["confidence"].tolist(),
-        "doc_id": base["doc_id"].tolist(),
-        "kind": base["kind"].tolist(),
-        "media_ref": base["media_ref"].tolist(),
-        "offset": base["offset"].tolist(),
-        "norm": norm.tolist(),
-        "content": contents.tolist(),
-    }
-    rows = []
-    for i in range(len(base)):
-        # X13 items (basic family, data_extractor.py:304-336) → one
-        # deterministic JSON blob (AR3 shape: compact separators, insertion
-        # key order, shortest-round-trip floats); None when no items so no
-        # field:line_items span is emitted for item-less spans.
-        items = cols["b_items"][i]
-        items_json = (
-            json.dumps(items, ensure_ascii=False, separators=(",", ":"))
-            if items else None
-        )
-        # invoice_service.py:249-263 — LLM number always present (md5 fallback)
-        number = cols["l_number"][i] or cols["s_number"][i] or "INV-DEFAULT"
-        # :266-277 — LLM date always present (as_of fallback)
-        inv_date = cols["l_date"][i] or cols["s_date"][i]
-        # :294-309 — LLM customer.name carries the ERP code; Swiss is None
-        company = cols["l_company"][i] or "SITSE"
-        # :279-292
-        supplier = cols["l_supplier"][i] or "Fournisseur Inconnu"
-        # :313-321
-        currency = cols["l_currency"][i] or cols["s_currency"][i] or "CHF"
-        # :323-356 — falsy coalesce (a 0.00 counts as absent), defaults 0.00
-        ht = _dec(cols["l_ht"][i]) or _dec(cols["s_ht"][i]) or Decimal("0.00")
-        tva = _dec(cols["l_tva"][i]) or _dec(cols["s_tva"][i]) or Decimal("0.00")
-        ttc = _dec(cols["l_ttc"][i]) or _dec(cols["s_ttc"][i]) or Decimal("0.00")
-        due = cols["l_due"][i]
-        rows.append(
-            {
-                "doc_id": cols["doc_id"][i],
-                "kind": cols["kind"][i],
-                "media_ref": cols["media_ref"][i] or "",
-                "offset": int(cols["offset"][i]),
-                "norm_text": cols["norm"][i],
-                "invoice_number": number,
-                "invoice_date": inv_date.isoformat() if inv_date else None,
-                "due_date": due.isoformat() if due else None,
-                "currency": currency,
-                "total_ht": str(ht),
-                "tva": str(tva),
-                "total_ttc": str(ttc),
-                "amount_due": str(ttc),
-                "siret": cols["b_siret"][i],
-                "vat_number": cols["b_vat"][i],
-                "supplier_name": supplier,
-                "company_erp_code": company,
-                "email": cols["l_email"][i],
-                "phone": cols["l_phone"][i],
-                "line_items": items_json,
-                "confidence": float(cols["b_conf"][i]),
-                "raw_text": (
-                    (cols["content"][i] or "")[:RAW_TEXT_LIMIT]
-                    if emit_raw_text
-                    else None
-                ),
-            }
-        )
-    return pd.DataFrame.from_records(rows, columns=FIELDS_COLUMNS)
+    ttc = _coalesce(l["total_ttc"], s["total_ttc"], _ZERO).map(str)
+    return pd.DataFrame(
+        {
+            "doc_id": base["doc_id"],
+            "kind": base["kind"],
+            "media_ref": _coalesce(base["media_ref"], ""),
+            "offset": base["offset"].astype("int64"),
+            "norm_text": normalize_content(base["kind"], contents, cleaned),
+            # invoice_service.py:249-263 and :313-321 — the LLM slot is
+            # never falsy, so no fallback is reached (module docstring)
+            "invoice_number": l["invoice_number"],
+            "invoice_date": _iso(_coalesce(l["invoice_date"], s["invoice_date"])),  # :266-277
+            "due_date": _iso(l["due_date"]),
+            "currency": l["currency"],
+            # :323-356 — falsy coalesce, defaults 0.00
+            "total_ht": _coalesce(l["total_ht"], s["total_ht"], _ZERO).map(str),
+            "tva": _coalesce(l["tva"], s["tva"], _ZERO).map(str),
+            "total_ttc": ttc,
+            "amount_due": ttc,
+            "siret": b["siret"],
+            "vat_number": b["vat_number"],
+            "supplier_name": l["supplier_name"],  # :279-292, never falsy
+            # :294-309 — an empty erp_code in the first company row (the
+            # LLM default) is falsy and falls through to SITSE
+            "company_erp_code": _coalesce(l["company_erp_code"], "SITSE"),
+            "email": l["email"],
+            "phone": l["phone"],
+            "line_items": b["line_items"].map(_items_json),
+            "confidence": b["confidence"],
+            "raw_text": (contents.fillna("").str.slice(stop=RAW_TEXT_LIMIT) if emit_raw_text
+                         else [None] * len(base)),
+        },
+        columns=FIELDS_COLUMNS,
+    )
 
 
 def spans_from_fields(fields: pd.DataFrame) -> pd.DataFrame:

@@ -20,8 +20,9 @@ output: a match at p after a ``[^\\d\\n]`` char implies one at p-1 (same
 group-1 ends), which the scan tries first, and no match ends on a non-digit.
 It keeps ``([^\\d\\n]+)`` from retrying at every position of a run (quadratic).
 
-The public entrypoint is :func:`extract`, a batch function
-``pandas.Series[str] -> pandas.DataFrame`` suitable for a pandas UDF.
+:func:`extract` gives the four fields the merge lattice reads and
+:func:`extract_record` the reference's full 27-field record: both are batch
+``Series[str] -> DataFrame`` functions built from the same per-text steps.
 """
 
 from __future__ import annotations
@@ -171,6 +172,42 @@ def _contact_of(section: list[str]) -> dict:
     return out
 
 
+def line_items(cleaned: str) -> list[dict]:
+    """Line items of one cleaned text (data_extractor.py:304-336)."""
+    items = []
+    for m in _LINE_ITEM_RX.findall(cleaned):
+        try:
+            amount = float(m[3].replace(",", "."))
+            items.append(
+                {
+                    "description": m[0].strip(),
+                    "quantity": float(m[1].replace(",", ".")),
+                    "unit_price": float(m[2].replace(",", ".")),
+                    "amount_excl_vat": amount,
+                    "vat_rate": 0.20,
+                    "vat_amount": amount * 0.20,
+                    "amount_incl_vat": amount * 1.20,
+                }
+            )
+        except (ValueError, IndexError):
+            continue
+    return items
+
+
+def confidence(cleaned: str) -> float:
+    """Keyword confidence of one cleaned text (data_extractor.py:405-415)."""
+    low = cleaned.lower()
+    return min(sum(1 for k in _CONFIDENCE_KEYWORDS if k in low) / len(_CONFIDENCE_KEYWORDS), 1.0)
+
+
+def siret(cleaned: str) -> str | None:
+    return _first_group([_SIRET_RX], cleaned)
+
+
+def vat_number(cleaned: str) -> str | None:
+    return _first_group([_VAT_RX], cleaned)
+
+
 def _record(cleaned: str) -> dict:
     """Full basic extraction for one already-cleaned document text."""
     lines = cleaned.split("\n")
@@ -210,24 +247,7 @@ def _record(cleaned: str) -> dict:
     invoice_number = _first_group(_INVOICE_NUMBER_PATTERNS, cleaned)
     currency = "EUR" if "€" in cleaned else ("USD" if "$" in cleaned else "EUR")
 
-    # line items (data_extractor.py:304-336)
-    items = []
-    for m in _LINE_ITEM_RX.findall(cleaned):
-        try:
-            amount = float(m[3].replace(",", "."))
-            items.append(
-                {
-                    "description": m[0].strip(),
-                    "quantity": float(m[1].replace(",", ".")),
-                    "unit_price": float(m[2].replace(",", ".")),
-                    "amount_excl_vat": amount,
-                    "vat_rate": 0.20,
-                    "vat_amount": amount * 0.20,
-                    "amount_incl_vat": amount * 1.20,
-                }
-            )
-        except (ValueError, IndexError):
-            continue
+    items = line_items(cleaned)
 
     # totals (data_extractor.py:338-375): first match per field wins,
     # scanned only on lines carrying a totals keyword.
@@ -246,10 +266,6 @@ def _record(cleaned: str) -> dict:
         totals["amount_due"] = totals["total_incl_vat"]
     has_totals = bool(totals)
 
-    # confidence (data_extractor.py:405-415) on the cleaned text
-    low = cleaned.lower()
-    confidence = min(sum(1 for k in _CONFIDENCE_KEYWORDS if k in low) / len(_CONFIDENCE_KEYWORDS), 1.0)
-
     # validation (data_extractor.py:417-442) — note float truthiness:
     # a 0.0 subtotal/ttc counts as absent, as in the reference.
     calculation_check = False
@@ -263,8 +279,8 @@ def _record(cleaned: str) -> dict:
 
     return {
         "supplier_name": supplier_name,
-        "siret": _first_group([_SIRET_RX], cleaned),
-        "vat_number": _first_group([_VAT_RX], cleaned),
+        "siret": siret(cleaned),
+        "vat_number": vat_number(cleaned),
         "supplier_street": sup_addr.get("street"),
         "supplier_postal_code": sup_addr.get("postal_code"),
         "supplier_city": sup_addr.get("city"),
@@ -285,7 +301,7 @@ def _record(cleaned: str) -> dict:
         "total_incl_vat": totals.get("total_incl_vat"),
         "amount_due": totals.get("amount_due"),
         "has_totals": has_totals,
-        "confidence": confidence,
+        "confidence": confidence(cleaned),
         "calculation_check": calculation_check,
         "required_fields_present": required,
         "data_quality_score": quality,
@@ -293,12 +309,16 @@ def _record(cleaned: str) -> dict:
 
 
 def extract(texts: pd.Series) -> pd.DataFrame:
-    """Batch basic extraction: Series[str] -> DataFrame (one row per text).
-
-    The T1 clean runs vectorized over the whole batch; the section/cascade
-    logic (inherently sequential per text) runs in one tight loop per batch.
-    """
+    """The four fields ``assemble.fields_batch`` reads, one row per text;
+    the other 23 of the record (:func:`extract_record`) are not computed."""
+    steps = (line_items, siret, vat_number, confidence)
     cleaned = clean_basic(texts)
-    df = pd.DataFrame.from_records([_record(c) for c in cleaned])
+    return pd.DataFrame({f.__name__: cleaned.map(f) for f in steps}, index=texts.index)
+
+
+def extract_record(texts: pd.Series) -> pd.DataFrame:
+    """The reference's full 27-field basic record, one row per text (the ML
+    family builds on it); the section/cascade logic is sequential per text."""
+    df = pd.DataFrame.from_records([_record(c) for c in clean_basic(texts)])
     df.index = texts.index
     return df

@@ -167,13 +167,13 @@ def extract(
     """Batch ML-enhanced extraction: basic family + the ML layers, in the
     reference's order (:47-59): history → patterns → validate.
 
-    Columns = basic.extract's plus invoice_date/due_date (the basic family
-    never sets dates; the ML layer does) and the ml_* validation columns.
+    Columns = basic.extract_record's plus invoice_date/due_date (the basic
+    family never sets dates; the ML layer does) and the ml_* validation columns.
     Amount enhancement only runs for rows where the basic family found
     SOME totals (``data.totals`` is None otherwise and every ML amount
     branch is gated on it, :96/:230) — a preserved reference quirk.
     """
-    base = basic.extract(texts)
+    base = basic.extract_record(texts)
     raw = texts.reset_index(drop=True)
 
     out_number, out_inv_date, out_due = [], [], []

@@ -8,11 +8,10 @@ see tests/fixtures/goldens.json):
   collapses whitespace, strips.  NOTE: this destroys newlines, so all
   downstream "line" logic in the basic extractor sees ONE line — that quirk
   is part of the spec (SURVEY.md §5.3).
-* ``clean_llm``    — src/extraction/llm_enhanced_extractor.py:104-115.
-  Control chars → space, collapse whitespace, then ``°→o``, ``€→EUR``,
-  ``£→GBP``, strip.
 * ``clean_swiss``  — src/extraction/swiss_invoice_extractor.py:89-94.
-  Same as clean_llm without the char maps.
+  Control chars → space, collapse whitespace, strip.
+* ``clean_llm``    — src/extraction/llm_enhanced_extractor.py:104-115.
+  clean_swiss, then ``°→o``, ``€→EUR``, ``£→GBP``.
 * ``normalize_ocr`` — our OCR-text normalization stage (north rule; no
   reference analogue): de-hyphenate artificial line breaks, then clean_llm.
 """
@@ -37,19 +36,18 @@ def clean_basic(s: pd.Series) -> pd.Series:
     return out.str.strip()
 
 
-def clean_llm(s: pd.Series) -> pd.Series:
-    out = s.fillna("").str.replace(_RE_CTRL, " ", regex=True)
-    out = out.str.replace(_RE_WS, " ", regex=True)
-    out = out.str.replace("°", "o", regex=False)
-    out = out.str.replace("€", "EUR", regex=False)
-    out = out.str.replace("£", "GBP", regex=False)
-    return out.str.strip()
-
-
 def clean_swiss(s: pd.Series) -> pd.Series:
     out = s.fillna("").str.replace(_RE_CTRL, " ", regex=True)
     out = out.str.replace(_RE_WS, " ", regex=True)
     return out.str.strip()
+
+
+def clean_llm(s: pd.Series) -> pd.Series:
+    # the reference strips after the char maps; they touch no whitespace,
+    # so stripping first (inside clean_swiss) gives the same string
+    out = clean_swiss(s).str.replace("°", "o", regex=False)
+    out = out.str.replace("€", "EUR", regex=False)
+    return out.str.replace("£", "GBP", regex=False)
 
 
 def normalize_ocr(s: pd.Series) -> pd.Series:

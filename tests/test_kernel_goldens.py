@@ -47,7 +47,7 @@ def texts(goldens):
 
 def test_basic_family_matches_reference(goldens, texts):
     names = list(texts)
-    out = basic.extract(pd.Series([texts[n] for n in names]))
+    out = basic.extract_record(pd.Series([texts[n] for n in names]))
     for i, name in enumerate(names):
         g = _decode(goldens[name]["basic"])
         row = out.iloc[i]

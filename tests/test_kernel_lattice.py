@@ -6,8 +6,13 @@ lattice below runs the llm, swiss and basic families on every span and
 applies invoice_service.py:249-356 as written, so both must give equal
 frames: on synth docs, with ``as_of_date=None`` (the LLM date can be
 missing, so the Swiss date is consulted), on crafted spans where each
-Swiss fallback wins (including an LLM ``0.00`` amount), on a batch no span
-of which needs Swiss, and on an empty batch. Pure pandas, no Spark.
+Swiss fallback wins (including an LLM ``0.00`` amount), on spans no family
+matches, with a first company row whose ``erp_code`` is empty, on a batch
+no span of which needs Swiss, and on an empty batch. The eager lattice
+keeps the reference's full chain, including the fallbacks ``fields_batch``
+drops as unreachable (``INV-DEFAULT``, the Swiss number and currency,
+``CHF``, ``Fournisseur Inconnu``). ``basic.extract`` is checked against the
+same columns of ``basic.extract_record``. Pure pandas, no Spark.
 """
 
 from __future__ import annotations
@@ -138,6 +143,31 @@ def test_batch_needing_no_swiss_skips_the_family(swiss_calls):
     got = assemble.fields_batch(resolved)
     pd.testing.assert_frame_equal(got, _eager_fields(resolved, assemble.DEFAULT_AS_OF))
     assert swiss_calls == []
+
+
+def test_spans_no_family_matches(swiss_calls):
+    resolved = _resolved_texts(["", " \n\t\u00a0 ", "\x00\x07\x1f\x7f\x9f", "abc"])
+    for as_of_date in (assemble.DEFAULT_AS_OF, None):
+        got = assemble.fields_batch(resolved, as_of_date=as_of_date)
+        pd.testing.assert_frame_equal(got, _eager_fields(resolved, as_of_date))
+        assert set(got["total_ttc"]) == {"0.00"} and got["line_items"].isna().all()
+    assert swiss_calls == [4, 4]
+
+
+def test_first_company_with_empty_erp_code_falls_back_to_sitse():
+    companies = [{"erp_code": "", "name": "Nobody Holding"}, *COMPANIES]
+    resolved = _resolved_texts(["abc", f"Facture 17 {COMPANIES[0]['erp_code']} TOTAL TTC 10.00"])
+    got = assemble.fields_batch(resolved, companies=companies, suppliers=SUPPLIERS)
+    want = _eager_fields(resolved, assemble.DEFAULT_AS_OF, companies, SUPPLIERS)
+    pd.testing.assert_frame_equal(got, want)
+    assert got["company_erp_code"].tolist() == ["SITSE", COMPANIES[0]["erp_code"]]
+
+
+def test_basic_extract_is_the_record_columns_the_lattice_reads(goldens, synth_resolved):
+    for texts in (pd.Series([e["text"] for e in goldens.values()]), synth_resolved["content"]):
+        got = basic.extract(texts)
+        assert list(got.columns) == ["line_items", "siret", "vat_number", "confidence"]
+        pd.testing.assert_frame_equal(got, basic.extract_record(texts)[got.columns])
 
 
 def test_empty_batch(swiss_calls):
