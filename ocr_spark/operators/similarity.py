@@ -7,7 +7,10 @@
   generation never cross-joins the corpus;
 * IVF-flat variant — corpus partitioned into inverted lists by nearest
   centroid (one Lloyd refinement over deterministic md5-seeded starts);
-  a query probes only its ``nprobe`` closest lists.
+  a query probes only its ``nprobe`` closest lists;
+* PQ and IVFADC variants — the corpus stored as m small codes per vector
+  (all m subspace codebooks fit in one keyed plan), scored through
+  per-query ADC lookup tables, with an optional exact shortlist re-rank.
 
 Hyperplanes/centroid seeds are derived deterministically from md5 — no
 RNG state, so any engine (and any rerun) regenerates identical structures.
@@ -16,6 +19,7 @@ RNG state, so any engine (and any rerun) regenerates identical structures.
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 import pandas as pd
@@ -41,6 +45,26 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, neighbor_id, sim) rows per query as
+    (query_id, rank, neighbor_id, sim): sim descending, ties to the lower
+    neighbor id — the ranking every top-k operator here returns."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "sim")
+    )
+
+
+def _exact_sims(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) from rows carrying both vectors
+    (``qv``, ``cv``): cosine rounded to 6 dp, hash-stable across engines."""
+    return pairs.select(
+        "query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim")
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -58,17 +82,7 @@ def brute_force_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     )
     c = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = q.join(c, F.col("query_id") != F.col("neighbor_id"), "inner").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    return _rank_topk(_exact_sims(q.join(c, F.col("query_id") != F.col("neighbor_id"), "inner")), k)
 
 
 def _hyperplane(dim: int, plane_idx: int) -> list[float]:
@@ -165,9 +179,9 @@ def centroid_probe_udf(centroids: list[tuple[int, list[float]]], nprobe: int):
     task broadcast — at SemDeDup's web-scale 50k lists × 64 dims that is
     ~25 MB, far below executor memory, and never per-row.
 
-    Ordering contract matches ``_probe_list_ids`` exactly: descending
-    cosine, ties to the lower centroid id (stable argsort over
-    position-ordered cids)."""
+    Ordering contract matches the ``'expr'`` form of :func:`probe_ids`
+    exactly: descending cosine, ties to the lower centroid id (stable
+    argsort over position-ordered cids)."""
     order_pos = sorted(range(len(centroids)), key=lambda i: centroids[i][0])
     cmat = np.array([centroids[i][1] for i in order_pos], dtype=np.float64)
     cids = np.array([centroids[i][0] for i in order_pos], dtype=np.int64)
@@ -226,6 +240,26 @@ def nearest_id(
     return F.element_at(centroid_probe_udf(centroids, 1)(vec), 1)
 
 
+def _lloyd_means(assigned: DataFrame, keys: list[str], vec_col: str) -> list:
+    """One distributed Lloyd update: the element-wise mean of ``vec_col``
+    per assignment key, collected as ``(*keys, centroid)`` rows. The mean
+    is a groupBy over (keys, dim) via posexplode, the vector is rebuilt
+    by a dim-ordered collect_list — no driver-side loop over vectors.
+
+    The generator lives in its own projection: placing posexplode beside
+    the struct-sorting argmin that computed the keys strips the struct
+    field names during the Generate rewrite (FIELD_NOT_FOUND col1/col2)."""
+    return (
+        assigned.select(*keys, F.posexplode(vec_col).alias("_di", "_x"))
+        .groupBy(*keys, "_di")
+        .agg(F.avg("_x").alias("_mu"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("_di", "_mu"))).alias("_ds"))
+        .select(*keys, F.transform("_ds", lambda s: s["_mu"]).alias("centroid"))
+        .collect()
+    )
+
+
 def ivf_centroids(
     embeddings: DataFrame,
     n_lists: int,
@@ -236,8 +270,7 @@ def ivf_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Deterministic IVF centroids: seed with md5-ranked corpus vectors,
     then ``refine_iters`` Lloyd steps computed distributively
-    (assign = JVM expression chain, update = groupBy + element-wise avg
-    via posexplode — no driver-side loops over vectors)."""
+    (assign = JVM expression chain, update = :func:`_lloyd_means`)."""
     seeds = (
         embeddings.select(id_col, vec_col)
         .withColumn("_r", F.md5(F.concat(F.lit("ivf:"), F.col(id_col).cast("string"))))
@@ -247,26 +280,59 @@ def ivf_centroids(
     )
     centroids = [(i, list(map(float, r[vec_col]))) for i, r in enumerate(seeds)]
     for _ in range(refine_iters):
-        # the generator must live in its own projection: placing posexplode
-        # beside the struct-sorting argmin strips the struct field names
-        # during the Generate rewrite (FIELD_NOT_FOUND col1/col2)
         assigned = embeddings.select(
             F.col(vec_col).alias("_v"),
             nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
-        ).select("list_id", F.posexplode("_v").alias("dim_idx", "val"))
-        means = (
-            assigned.groupBy("list_id", "dim_idx")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("list_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim_idx", "m"))).alias("dims"))
-            .select("list_id", F.transform("dims", lambda d: d["m"]).alias("centroid"))
-            .collect()
         )
-        refined = {int(r["list_id"]): list(map(float, r["centroid"])) for r in means}
-        centroids = [
-            (cid, refined.get(cid, cvec)) for cid, cvec in centroids
-        ]
+        refined = {
+            int(r["list_id"]): list(map(float, r["centroid"]))
+            for r in _lloyd_means(assigned, ["list_id"], "_v")
+        }
+        centroids = [(cid, refined.get(cid, cvec)) for cid, cvec in centroids]
     return centroids
+
+
+def _assigned_lists(
+    embeddings: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+    assign: str,
+) -> DataFrame:
+    """The corpus as inverted-list rows (neighbor_id, cv, list_id), each
+    vector in the list of its nearest centroid."""
+    return embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
+    )
+
+
+def _ivf_probe(
+    corpus: DataFrame,
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    assign: str,
+) -> DataFrame:
+    """Exact top-k over the inverted lists (``corpus``: neighbor_id, cv,
+    list_id) that each query probes: the (small, broadcast) query set
+    explodes to its nprobe nearest list ids and equi-joins the lists."""
+    q = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        ).withColumn(
+            "list_id",
+            F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)),
+        )
+    )
+    joined = q.join(corpus, on="list_id", how="inner").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    return _rank_topk(_exact_sims(joined), k)
 
 
 def ivf_topk(
@@ -287,35 +353,8 @@ def ivf_topk(
     the replay oracles) and the Arrow matmul UDF beyond — n_lists is no
     longer capped by expression-analysis cost."""
     centroids = ivf_centroids(embeddings, n_lists, id_col, vec_col, assign=assign)
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
-    )
-    # per-query nprobe nearest centroids, exploded to probe rows
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ).withColumn(
-            "list_id",
-            F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)),
-        )
-    )
-    scored = (
-        q.join(corpus, on="list_id", how="inner")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    corpus = _assigned_lists(embeddings, centroids, id_col, vec_col, assign)
+    return _ivf_probe(corpus, queries, centroids, k, nprobe, id_col, vec_col, assign)
 
 
 def build_ivf_index(
@@ -343,12 +382,9 @@ def build_ivf_index(
         "list_id int, centroid array<double>",
     )
     cdf.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/centroids")
-    assigned = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
-    )
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(f"{out_dir}/lists")
+    _assigned_lists(embeddings, centroids, id_col, vec_col, assign).write.mode(
+        "overwrite"
+    ).partitionBy("list_id").parquet(f"{out_dir}/lists")
 
 
 def ivf_topk_indexed(
@@ -372,29 +408,7 @@ def ivf_topk_indexed(
         for r in spark.read.parquet(f"{index_dir}/centroids").collect()
     ]
     corpus = spark.read.parquet(f"{index_dir}/lists")
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ).withColumn(
-            "list_id",
-            F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)),
-        )
-    )
-    scored = (
-        q.join(corpus, on="list_id", how="inner")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    return _ivf_probe(corpus, queries, centroids, k, nprobe, id_col, vec_col, assign)
 
 
 def lsh_topk(
@@ -453,41 +467,25 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
+    return _rank_topk(_pair_sims(candidates, embeddings, queries, id_col, vec_col), k)
+
+
+def _pair_sims(
+    pairs: DataFrame, embeddings: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact sims for candidate (query_id, neighbor_id) pairs: the true
+    vectors are re-joined for the candidates only (id-keyed joins, the
+    query side broadcast), never scanned per query."""
     qv = F.broadcast(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     )
-    scored = (
-        candidates.join(
-            embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-            on="neighbor_id",
-        )
-        .join(qv, on="query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    return _exact_sims(pairs.join(cv, on="neighbor_id").join(qv, on="query_id"))
 
 
 # --------------------------------------------------------------------------
 # SemDeDup-style clustered embedding dedup
 # --------------------------------------------------------------------------
-
-
-def _probe_list_ids(vec: Column, centroids: list[tuple[int, list[float]]], nprobe: int) -> Column:
-    """The ``nprobe`` nearest centroid ids for a vector (cosine argmax,
-    ties to the lower cid — same ordering as ``_nearest_centroid``)."""
-    return F.transform(
-        F.slice(F.array_sort(_centroid_sims(vec, centroids)), 1, nprobe),
-        lambda s: s["cid"],
-    )
 
 
 def _block_pairs(assigned: DataFrame, threshold: float) -> DataFrame:
@@ -661,8 +659,7 @@ def _normalized_vec(df: DataFrame, vec_col: str, out_col: str = "_nv") -> DataFr
     ).drop("_n")
 
 
-def _l2_sq_lit(a: Column, b_vals: list[float]) -> Column:
-    b = F.lit([float(v) for v in b_vals])
+def _l2_sq(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -670,17 +667,47 @@ def _l2_sq_lit(a: Column, b_vals: list[float]) -> Column:
     )
 
 
-def _argmin_code(subvec: Column, cents: list[list[float]]) -> Column:
-    """Nearest-centroid code by squared L2 — array_sort argmin (linear
-    expression tree, ties → lowest cid), the same shape as
-    :func:`_nearest_centroid`."""
-    arr = F.array(
-        *[
-            F.struct(_l2_sq_lit(subvec, c).alias("d"), F.lit(i).alias("cid"))
-            for i, c in enumerate(cents)
-        ]
+def _argmin_code(subvec: Column, cents: Column) -> Column:
+    """Nearest-centroid code by squared L2 over an array-of-centroids
+    column: the position of the (distance, cid) minimum, so ties go to
+    the lowest cid. ``subvec`` is re-evaluated per centroid inside the
+    lambda, so pass a plain column, not a costly expression."""
+    return F.array_min(
+        F.transform(cents, lambda c, i: F.struct(_l2_sq(subvec, c).alias("d"), i.alias("cid")))
+    )["cid"]
+
+
+def _subvectors(nv: DataFrame, id_col: str, m: int, d: int) -> DataFrame:
+    """(id, sub, sv) rows: each unit vector ``_nv`` split into its m
+    d-dim subvectors, so all m subspace fits run as one keyed plan."""
+    return nv.select(
+        id_col,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda s: F.slice("_nv", s * d + 1, F.lit(d)),
+            )
+        ).alias("sub", "sv"),
     )
-    return F.element_at(F.array_sort(arr), 1)["cid"]
+
+
+def _pq_seeds(subs: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(sub, _rn, sv): per subspace, the k subvectors first in
+    md5('pq:<sub>:<id>') order. The ``row_number() <= k`` filter plans as
+    a map-side WindowGroupLimit ahead of the exchange while k is at most
+    spark.sql.optimizer.windowGroupLimitThreshold (1000)."""
+    w = Window.partitionBy("sub").orderBy(
+        F.md5(
+            F.concat(
+                F.lit("pq:"), F.col("sub").cast("string"), F.lit(":"), F.col(id_col).cast("string")
+            )
+        )
+    )
+    return (
+        subs.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select("sub", "_rn", "sv")
+    )
 
 
 def pq_codebooks(
@@ -696,47 +723,26 @@ def pq_codebooks(
     subspaces, k-means each): ``codebooks[sub][cid]`` is a dim/m-float
     centroid over the unit-normalized corpus. Deterministic throughout —
     md5-ranked seed rows per subspace, then ``refine_iters`` distributed
-    Lloyd steps (assignment is a JVM expression chain, the mean update a
-    groupBy + posexplode — the ivf_centroids pattern per subspace). The
-    driver loop runs over m (a constant ~8-16), never over data."""
+    Lloyd steps. All m fits share one scan keyed by subspace: the seeds
+    are one collect, and each Lloyd step is one assign (the subspace's
+    book picked per row from one literal) plus one :func:`_lloyd_means`
+    over (sub, cid). That is 1 + ``refine_iters`` collects whatever m is
+    (5 Spark jobs at refine_iters=1)."""
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    d = dim // m
-    nv = _normalized_vec(embeddings.select(id_col, vec_col), vec_col).select(
-        id_col, "_nv"
-    )
-    books: list[list[list[float]]] = []
-    for sub in range(m):
-        seeds = (
-            nv.withColumn(
-                "_r",
-                F.md5(F.concat(F.lit(f"pq:{sub}:"), F.col(id_col).cast("string"))),
-            )
-            .orderBy("_r")
-            .limit(k)
-            .select(F.slice("_nv", sub * d + 1, d).alias("sv"))
-            .collect()
+    nv = _normalized_vec(embeddings.select(id_col, vec_col), vec_col)
+    subs = _subvectors(nv, id_col, m, dim // m)
+    books: list[list[list[float]]] = [[] for _ in range(m)]
+    for r in sorted(_pq_seeds(subs, k, id_col).collect(), key=lambda r: (r["sub"], r["_rn"])):
+        books[r["sub"]].append(list(map(float, r["sv"])))
+    for _ in range(refine_iters):
+        assigned = subs.select(
+            "sub",
+            "sv",
+            _argmin_code(F.col("sv"), F.element_at(F.lit(books), F.col("sub") + 1)).alias("cid"),
         )
-        cents = [list(map(float, r["sv"])) for r in seeds]
-        for _ in range(refine_iters):
-            # cid in its own projection, posexplode in the next — the
-            # Generate rewrite strips struct field names otherwise (the
-            # ivf_centroids FIELD_NOT_FOUND trap)
-            assigned = nv.select(F.slice("_nv", sub * d + 1, d).alias("_sv")).select(
-                _argmin_code(F.col("_sv"), cents).alias("cid"), "_sv"
-            )
-            exploded = assigned.select("cid", F.posexplode("_sv").alias("di", "val"))
-            means = (
-                exploded.groupBy("cid", "di")
-                .agg(F.avg("val").alias("mu"))
-                .groupBy("cid")
-                .agg(F.array_sort(F.collect_list(F.struct("di", "mu"))).alias("ds"))
-                .select("cid", F.transform("ds", lambda s: s["mu"]).alias("cent"))
-                .collect()
-            )
-            refined = {int(r["cid"]): list(map(float, r["cent"])) for r in means}
-            cents = [refined.get(i, c) for i, c in enumerate(cents)]
-        books.append(cents)
+        for r in _lloyd_means(assigned, ["sub", "cid"], "sv"):
+            books[r["sub"]][r["cid"]] = list(map(float, r["centroid"]))
     return books
 
 
@@ -753,16 +759,19 @@ def pq_encode(
     shrink that makes an in-memory ANN corpus possible. One JVM
     expression pass; codes are engine-reproducible (md5-seeded books,
     deterministic argmin with ties → lowest cid)."""
-    m = len(codebooks)
-    d = dim // m
     nv = _normalized_vec(embeddings.select(id_col, vec_col), vec_col)
-    codes = F.array(
+    return nv.select(F.col(id_col), _pq_codes(codebooks, dim).alias("codes"))
+
+
+def _pq_codes(codebooks: list[list[list[float]]], dim: int) -> Column:
+    """array<int> of the m codes of the unit vector column ``_nv``."""
+    d = dim // len(codebooks)
+    return F.array(
         *[
-            _argmin_code(F.slice("_nv", s * d + 1, d), codebooks[s]).cast("int")
-            for s in range(m)
+            _argmin_code(F.slice("_nv", s * d + 1, d), F.lit(book))
+            for s, book in enumerate(codebooks)
         ]
     )
-    return nv.select(F.col(id_col), codes.alias("codes"))
 
 
 # ADC builds one m×n_cents lookup table per query ON THE DRIVER (the
@@ -773,10 +782,19 @@ def pq_encode(
 PQ_MAX_QUERY_BATCH = 10_000
 
 
-def _bounded_query_collect(queries: DataFrame, max_query_batch: int, op: str):
-    """Collect the query set with an explicit cap: reads max+1 rows, so
-    an over-cap batch fails fast without materializing itself."""
-    rows = queries.limit(max_query_batch + 1).collect()
+def _bounded_query_collect(
+    queries: DataFrame, id_col: str, vec_col: str, max_query_batch: int, op: str
+):
+    """Collect the unit-normalized query set (id_col, _nv) with an
+    explicit cap: reads max+1 rows, so an over-cap batch fails fast
+    without materializing itself. Callers run it before any training
+    job."""
+    rows = (
+        _normalized_vec(queries.select(id_col, vec_col), vec_col)
+        .select(id_col, "_nv")
+        .limit(max_query_batch + 1)
+        .collect()
+    )
     if len(rows) > max_query_batch:
         raise ValueError(
             f"{op}: query batch exceeds max_query_batch={max_query_batch}. "
@@ -786,6 +804,42 @@ def _bounded_query_collect(queries: DataFrame, max_query_batch: int, op: str):
             "query side stays distributed."
         )
     return rows
+
+
+def _adc_table(qv: list[float], books: list[list[list[float]]], d: int) -> list[list[float]]:
+    """A query's m×n_cents ADC lookup table: exact squared L2 from its
+    s-th unit subvector to every centroid of book s."""
+    return [
+        [sum((qv[s * d + j] - c[j]) ** 2 for j in range(d)) for c in book]
+        for s, book in enumerate(books)
+    ]
+
+
+def _adc_topk(
+    candidates: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Top-k over ADC-scored candidate rows (query_id, neighbor_id, lt,
+    codes): a row's distance is the sum of m table lookups on its codes,
+    approx sim = 1 − dist²/2 (unit vectors). ``rerank=R`` keeps an R-deep
+    ADC shortlist per query and ranks it by exact cosine instead."""
+    dist = F.aggregate(
+        F.zip_with("lt", "codes", lambda row, code: F.element_at(row, code + F.lit(1))),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = candidates.select(
+        "query_id", "neighbor_id", F.round(F.lit(1.0) - dist / F.lit(2.0), 6).alias("sim")
+    )
+    if not rerank:
+        return _rank_topk(scored, k)
+    shortlist = _rank_topk(scored, rerank).select("query_id", "neighbor_id")
+    return _rank_topk(_pair_sims(shortlist, embeddings, queries, id_col, vec_col), k)
 
 
 def pq_topk(
@@ -818,86 +872,24 @@ def pq_topk(
     falls outside the R-deep shortlist, so R/k (not m·log2(n_cents)
     bits) sets the recall knob while the corpus is still scanned as
     codes."""
-    # the cap is checked before any training job: an over-cap batch fails fast
-    qrows = _bounded_query_collect(
-        _normalized_vec(queries.select(id_col, vec_col), vec_col).select(
-            id_col, "_nv"
-        ),
-        max_query_batch,
-        "pq_topk",
-    )
-    books = pq_codebooks(
-        embeddings, dim, m, n_cents, id_col, vec_col, refine_iters
-    )
+    qrows = _bounded_query_collect(queries, id_col, vec_col, max_query_batch, "pq_topk")
+    books = pq_codebooks(embeddings, dim, m, n_cents, id_col, vec_col, refine_iters)
     d = dim // m
     codes = pq_encode(embeddings, books, dim, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "codes"
     )
-    lt_rows = []
-    for r in qrows:
-        qv = list(map(float, r["_nv"]))
-        lt = [
-            [
-                sum((qv[s * d + j] - c[j]) ** 2 for j in range(d))
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
-        lt_rows.append((int(r[id_col]), lt))
-    spark = embeddings.sparkSession
-    ltdf = F.broadcast(
-        spark.createDataFrame(lt_rows, "query_id long, lt array<array<double>>")
+    tables = embeddings.sparkSession.createDataFrame(
+        [(int(r[id_col]), _adc_table(list(map(float, r["_nv"])), books, d)) for r in qrows],
+        "query_id long, lt array<array<double>>",
     )
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(F.col("lt"), s + F.lit(1)),
-            F.element_at(F.col("codes"), s + F.lit(1)) + F.lit(1),
-        ),
-    )
-    scored = (
-        ltdf.join(codes, F.col("query_id") != F.col("neighbor_id"), "inner")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.lit(1.0) - dist / F.lit(2.0), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "sim")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    # true vectors for the shortlist only: queries×R rows, id-keyed joins
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    )
-    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    exact = (
-        shortlist.join(qv, on="query_id")
-        .join(cv, on="neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    candidates = F.broadcast(tables).join(codes, F.col("query_id") != F.col("neighbor_id"), "inner")
+    return _adc_topk(candidates, embeddings, queries, k, rerank, id_col, vec_col)
+
+
+def _py_cosine(a: list[float], b: list[float]) -> float:
+    num = sum(x * y for x, y in zip(a, b))
+    den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
+    return num / den if den else 0.0
 
 
 def ivfadc_topk(
@@ -933,107 +925,32 @@ def ivfadc_topk(
     unprobed list is unreachable — the same bound ivf_topk carries);
     within probed lists the re-rank recovers PQ's quantization loss.
     Deterministic (md5-seeded coarse centroids AND codebooks)."""
-    # the cap is checked before any training job: an over-cap batch fails fast
-    qrows = _bounded_query_collect(
-        _normalized_vec(queries.select(id_col, vec_col), vec_col).select(
-            id_col, "_nv"
-        ),
-        max_query_batch,
-        "ivfadc_topk",
-    )
+    qrows = _bounded_query_collect(queries, id_col, vec_col, max_query_batch, "ivfadc_topk")
     centroids = ivf_centroids(embeddings, n_lists, id_col, vec_col, assign=assign)
-    books = pq_codebooks(
-        embeddings, dim, m, n_cents, id_col, vec_col, refine_iters
-    )
+    books = pq_codebooks(embeddings, dim, m, n_cents, id_col, vec_col, refine_iters)
     d = dim // m
-    corpus = pq_encode(embeddings, books, dim, id_col, vec_col).join(
-        embeddings.select(
-            F.col(id_col),
-            nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
-        ),
-        on=id_col,
-    ).select(F.col(id_col).alias("neighbor_id"), "list_id", "codes")
-
-    # per-query: ADC lookup table + its nprobe nearest coarse lists,
+    corpus = _normalized_vec(embeddings.select(id_col, vec_col), vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
+        _pq_codes(books, dim).alias("codes"),
+    )
+    # per query: its ADC table on each of its nprobe nearest coarse lists,
     # both driver-computed (queries are a small broadcast set)
-    import math as _math
-
-    def _cos(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        den = _math.sqrt(sum(x * x for x in a)) * _math.sqrt(sum(x * x for x in b))
-        return num / den if den else 0.0
-
     probe_rows = []
     for r in qrows:
         qv = list(map(float, r["_nv"]))
-        lt = [
-            [
-                sum((qv[s * d + j] - c[j]) ** 2 for j in range(d))
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
-        by_sim = sorted(
-            ((-_cos(qv, cvec), cid) for cid, cvec in centroids)
-        )[:nprobe]
-        for _, cid in by_sim:
-            probe_rows.append((int(r[id_col]), int(cid), lt))
-    spark = embeddings.sparkSession
-    probes = F.broadcast(
-        spark.createDataFrame(
-            probe_rows, "query_id long, list_id int, lt array<array<double>>"
-        )
+        lt = _adc_table(qv, books, d)
+        by_sim = sorted((-_py_cosine(qv, cvec), cid) for cid, cvec in centroids)[:nprobe]
+        probe_rows += [(int(r[id_col]), int(cid), lt) for _, cid in by_sim]
+    probes = embeddings.sparkSession.createDataFrame(
+        probe_rows, "query_id long, list_id int, lt array<array<double>>"
     )
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(F.col("lt"), s + F.lit(1)),
-            F.element_at(F.col("codes"), s + F.lit(1)) + F.lit(1),
-        ),
-    )
-    scored = (
-        probes.join(corpus, on="list_id", how="inner")
+    candidates = (
+        F.broadcast(probes)
+        .join(corpus, on="list_id", how="inner")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.lit(1.0) - dist / F.lit(2.0), 6).alias("sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "sim")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv_df = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    )
-    cv = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    exact = (
-        shortlist.join(qv_df, on="query_id")
-        .join(cv, on="neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    return _adc_topk(candidates, embeddings, queries, k, rerank, id_col, vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -1070,24 +987,13 @@ def hard_negatives(
         F.col(vec_col).alias("cv"),
         F.col(label_col).alias("_cl"),
     )
-    scored = a.join(
+    pairs = a.join(
         c,
         (F.col("query_id") != F.col("neighbor_id"))
         & (F.col("_ql") != F.col("_cl")),
         "inner",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    return _rank_topk(_exact_sims(pairs), k)
 
 
 def knn_label_vote(

@@ -3,11 +3,15 @@ against the brute-force baseline on the same data, and stay deterministic."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from ocr_spark.operators import similarity
+from tests import ref_ann
+from tests.spark_jobs import counted
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -370,3 +374,65 @@ def test_quantized_ivf_composition_recall(spark, emb):
     hits = sum(len(exact[q] & approx.get(q, set())) for q in exact)
     recall = hits / (len(exact) * 5)
     assert recall >= 0.6, f"int8+IVF recall@5 {recall}"
+
+
+# --------------------------------------------------------------------------
+# trainers: the Spark-free reference and the per-call job budget
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def synth(spark):
+    """The catalog rows' embeddings, and the same vectors as a dict."""
+    from ocr_spark.queries import _synth_embeddings
+
+    emb = _synth_embeddings(spark)
+    return emb, {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+
+
+def _max_abs_diff(got, want) -> float:
+    """Max element difference of two equally shaped nested lists."""
+    if isinstance(got, list):
+        assert isinstance(want, list) and len(got) == len(want)
+        return max((_max_abs_diff(a, b) for a, b in zip(got, want)), default=0.0)
+    return abs(got - want)
+
+
+@pytest.mark.parametrize("refine_iters", [0, 1, 3])
+def test_pq_codebooks_match_reference(synth, refine_iters):
+    """pq_codebooks (m=16, k=16) equals tests/ref_ann.py. At
+    refine_iters=0 the books are the seed subvectors themselves, so equal
+    seed ids agree bit for bit; a Lloyd mean may differ in the last bit
+    from the order Spark adds partial sums in."""
+    emb, vectors = synth
+    got = similarity.pq_codebooks(emb, dim=64, m=16, k=16, refine_iters=refine_iters)
+    want = ref_ann.pq_codebooks(vectors, dim=64, m=16, k=16, refine_iters=refine_iters)
+    assert [len(book) for book in want] == [16] * 16
+    diff = _max_abs_diff(got, want)
+    assert diff <= (0.0 if refine_iters == 0 else 1e-12), diff
+
+
+@pytest.mark.parametrize("refine_iters", [0, 1])
+def test_ivf_centroids_match_reference(synth, refine_iters):
+    emb, vectors = synth
+    got = similarity.ivf_centroids(emb, 16, refine_iters=refine_iters)
+    want = ref_ann.ivf_centroids(vectors, 16, refine_iters=refine_iters)
+    assert [cid for cid, _ in got] == list(range(16))
+    diff = _max_abs_diff([c for _, c in got], want)
+    assert diff <= (0.0 if refine_iters == 0 else 1e-12), diff
+
+
+def test_pq_codebooks_job_count_independent_of_m(spark, emb):
+    """All m subspace fits run as one keyed plan: seeds in one collect,
+    each Lloyd step in one more, so m=4 and m=16 take the same number of
+    Spark jobs (a loop over subspaces took 4·m: 16 and 64). The seed
+    plan's row_number() <= k limit runs map-side, ahead of the exchange."""
+    jobs = {
+        m: counted(spark, lambda: similarity.pq_codebooks(emb, dim=64, m=m, k=16))[1]
+        for m in (4, 16)
+    }
+    assert jobs[4] == jobs[16] <= 5, jobs
+    nv = similarity._normalized_vec(emb.select("vec_id", "embedding"), "embedding")
+    seeds = similarity._pq_seeds(similarity._subvectors(nv, "vec_id", 16, 4), 16, "vec_id")
+    plan = seeds._sc._jvm.PythonSQLUtils.explainString(seeds._jdf.queryExecution(), "simple")
+    assert re.search(r"WindowGroupLimit \[.*, 16, Partial", plan), plan

@@ -16,12 +16,12 @@ from __future__ import annotations
 import os
 import shutil
 import time
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.sources import manifests as mf
+from tests.spark_jobs import counted
 
 N_BUCKETS = 8
 
@@ -40,20 +40,6 @@ def _frame(spark, tag: str, n: int = 200):
 
 def _partial(df):
     return mf.with_bucket(df, N_BUCKETS).filter(F.col("bucket") < 4).drop("bucket")
-
-
-def _counted(spark, fn):
-    """(result, number of Spark jobs ``fn`` ran)."""
-    sc = spark.sparkContext
-    group = f"manifest-commit-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "checkpointed_write")
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _commit_rows(spark, out, epoch):
@@ -78,7 +64,7 @@ def test_commit_job_budget(spark, tmp_path):
     ]
     jobs, results = {}, {}
     for name, df, snap in cases:
-        results[name], jobs[name] = _counted(
+        results[name], jobs[name] = counted(
             spark, lambda: mf.checkpointed_write(spark, df, out, N_BUCKETS, snap)
         )
     assert {k: v <= JOB_BUDGET[k] for k, v in jobs.items()} == dict.fromkeys(

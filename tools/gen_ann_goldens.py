@@ -7,8 +7,13 @@ embeddings (queries._synth_embeddings), so their outputs pin exactly like
 the media-op goldens (tools/gen_media_goldens.py): this tool runs the
 exact catalog queries and commits the results; the oracle SQL is then a
 DuckDB read-back of the golden, and the driver's hash compare catches any
-drift.  Regenerate after ANY change to the ANN operators or the synth
-embedding construction.
+drift.
+
+A refactor of the ANN operators must leave these goldens byte-identical.
+A golden that moves under a change meant to keep behaviour is a program
+defect to fix, not a file to regenerate; regenerate only for a deliberate
+change of ANN semantics or of the synth embedding construction, and say
+why in the change that does it.
 
 Usage: python tools/gen_ann_goldens.py
 """
