@@ -126,13 +126,9 @@ def bpe_learn_from_counts(
     cnt_col: str = "cnt",
 ) -> DataFrame:
     """The learner over a PRECOMPUTED ``(word, cnt)`` statistic — word
-    counts are additive across deliveries, so this composes with the
-    maintained token-count state (``maintained_stats_writer`` with the
-    ``token_counts`` build): the
-    tokenizer artifact re-learns per delivery at type-table cost with
-    NO corpus rescan (``bpe_merges_from_state``), the same
-    maintained-statistic loop as the incremental embeddings and the
-    unigram/NB models."""
+    counts are additive across deliveries, so a kept ``token_counts``
+    table re-learns the tokenizer at type-table cost with NO corpus
+    rescan."""
     spark = counts.sparkSession
     wt = counts.select(
         F.col(word_col).alias("word"),

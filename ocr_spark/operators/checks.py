@@ -5,9 +5,7 @@ a metrics report a pipeline can gate on.
 Rules are plain aggregate expressions, so the whole report compiles to a
 single groupBy-less agg over one scan — completeness (null fraction),
 uniqueness (distinct vs total on the key), range conformance, set
-membership. Referential integrity is the one rule needing a second
-table: an anti-join COUNT, broadcast when the parent side is
-dimension-sized. Nothing here is row-level output — the report is a
+membership. Nothing here is row-level output — the report is a
 handful of numbers whatever the table's size, which is what makes it
 cheap enough to run on every delivery.
 """
@@ -47,28 +45,6 @@ def check_report(df: DataFrame, rules: list[Column]) -> DataFrame:
     """One-row report: every rule metric from a single aggregation pass
     (one scan, no shuffle beyond the final partial-agg merge)."""
     return df.agg(*rules)
-
-
-def referential_integrity(
-    child: DataFrame,
-    parent: DataFrame,
-    child_key: str,
-    parent_key: str | None = None,
-) -> DataFrame:
-    """(n_child, n_orphans, ri): fraction of child rows whose key exists
-    in the parent — the FK containment check. Anti-join counted, parent
-    side reduced to distinct keys first (broadcast when dim-sized; at
-    fact-x-fact scale AQE picks the keyed join)."""
-    pk = parent_key or child_key
-    pkeys = parent.select(F.col(pk).alias(child_key)).distinct()
-    orphans = child.join(pkeys, on=child_key, how="left_anti")
-    n = child.count()
-    n_orph = orphans.count()
-    spark = child.sparkSession
-    ri = 1.0 if n == 0 else 1.0 - n_orph / n
-    return spark.createDataFrame(
-        [(n, n_orph, float(ri))], "n_child long, n_orphans long, ri double"
-    )
 
 
 def skew_profile(

@@ -46,8 +46,8 @@ def with_word_ngrams(
     distinct: bool = True,
 ) -> DataFrame:
     """(id, grams): the distinct md5'd word n-grams of each document as
-    an ARRAY column (the streaming decontaminator consumes this form
-    directly — no explode, so it stays stateless under readStream).
+    an ARRAY column (no explode, so it stays stateless under
+    readStream).
 
     Staged projections (norm → words → grams) keep every expression out
     of the HOF lambdas — an inline normalization would be re-evaluated
@@ -450,9 +450,9 @@ def ngram_window_counts(
 ) -> DataFrame:
     """(wh, cnt): corpus frequencies of word n-gram windows — the
     statistic :func:`dup_spans` thresholds on, exposed in the ADDITIVE
-    form the streaming state writer merges: every occurrence counts
+    form per-delivery tables merge in: every occurrence counts
     once and deliveries are disjoint, so per-delivery counts SUM to the
-    whole-corpus statistic (the token_stats / doc_freq pattern)."""
+    whole-corpus statistic (the token_counts / doc_freq_stats pattern)."""
     _toks, occ = _window_occ(documents, n, text_col, id_col, pin=False)
     return occ.groupBy("wh").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -466,9 +466,7 @@ def dup_spans_apply(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """:func:`dup_spans` for a NEW delivery against a FROZEN corpus
-    n-gram statistic (a :func:`ngram_window_counts` table — typically
-    the live state ``maintained_stats_writer`` keeps with it as the
-    build): the
+    n-gram statistic (a :func:`ngram_window_counts` table): the
     delivery's windows join the ≥ min_df hashes of the statistic
     instead of re-counting the corpus. When ``stats`` covers
     corpus ∪ delivery, the output equals ``dup_spans`` over the full
@@ -852,8 +850,7 @@ def aes_keyed(
     """Rows plus their ``_aes_key`` exponential draw (-ln(u)/w). The key
     is a pure function of (salt, id, weight), so draws computed on any
     partition of the data MERGE: the n smallest keys of a union are the
-    n smallest of each part's n smallest — the property the streaming
-    reservoir (streaming/sketch.py) relies on. Zero/negative/null
+    n smallest of each part's n smallest. Zero/negative/null
     weights are dropped (zero inclusion probability)."""
     u = (
         F.conv(
@@ -914,11 +911,9 @@ def source_overlap(
 
 def overlap_from_fps(fps: DataFrame) -> DataFrame:
     """The overlap matrix over any distinct ``(src, fp)`` frame — split
-    out so a MAINTAINED fingerprint table (the streaming state
-    ``maintained_stats_writer`` keeps warm with the
-    ``ocr_spark.streaming.curation.fp_stats`` build,
-    or a batch-written fingerprint sidecar) feeds the same audit
-    without re-fingerprinting the corpus."""
+    out so a kept fingerprint table (a batch-written fingerprint
+    sidecar) feeds the same audit without re-fingerprinting the
+    corpus."""
     from pyspark import StorageLevel
 
     fps = fps.select("src", "fp").distinct().persist(StorageLevel.MEMORY_AND_DISK)
@@ -1009,9 +1004,7 @@ def source_token_counts(
     """The one corpus pass behind :func:`domain_mixture` — per-group
     ``(grp, n_docs, n_tokens)`` from row-local whitespace token counts
     and one map-side-combined keyed agg. Doc and token counts are
-    ADDITIVE across disjoint deliveries, so a maintained statistic (the
-    state ``maintained_stats_writer`` keeps warm with the
-    ``streaming.curation.source_stats`` build, or any
+    ADDITIVE across disjoint deliveries, so a kept statistic (any
     batch-written sidecar) can feed :func:`mixture_from_counts` without
     this pass ever re-running over the corpus."""
     toks = F.size(

@@ -110,16 +110,6 @@ def _shingle_expr(norm: Column, k: int) -> Column:
     )
 
 
-def shingles(col: Column, k: int = DEFAULT_SHINGLE) -> Column:
-    """Distinct character k-shingles of the canonicalized text (sorted so
-    downstream aggregates are order-independent).
-
-    NOTE: expression form — recomputes the normalization per array element
-    inside the HOF lambda. Prefer ``with_shingles`` (two-step projection)
-    anywhere performance matters."""
-    return _shingle_expr(normalized(col), k)
-
-
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the input arrives under-split (e.g. a
     single small parquet file → one task pinning a core for every
@@ -146,37 +136,6 @@ def with_shingles(
     ).select(id_col, _shingle_expr(F.col("_norm"), k).alias(out_col))
 
 
-def minhash_signature(sh: Column, n_seeds: int = DEFAULT_SEEDS) -> Column:
-    """Array of n_seeds minhashes.
-
-    One md5 per (seed-group, shingle) yields FOUR independent 32-bit
-    minhash functions (8 hex chars each) — 12 seeds cost 3 md5 passes
-    instead of 12 (md5 dominates the signature cost). Seed j uses
-    substr(md5(group_j ':' shingle), 1 + 8*(j mod 4), 8); minima are
-    lexicographic over fixed-width hex, portable to any engine with md5.
-    """
-    # constants are bound via factory-function closures, NEVER lambda
-    # default args: pyspark treats a two-parameter lambda as (element,
-    # index) and silently binds the "default" to the array index.
-    def group_hash(g: int) -> Column:
-        return F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{g}:"), s)))
-
-    def sub_min(arr: Column, off: int) -> Column:
-        return F.array_min(F.transform(arr, lambda h: F.substring(h, off, 8)))
-
-    n_groups = (n_seeds + _SUBHASHES_PER_MD5 - 1) // _SUBHASHES_PER_MD5
-    group_hashes = [group_hash(g) for g in range(n_groups)]
-    return F.array(
-        *[
-            sub_min(
-                group_hashes[j // _SUBHASHES_PER_MD5],
-                1 + 8 * (j % _SUBHASHES_PER_MD5),
-            )
-            for j in range(n_seeds)
-        ]
-    )
-
-
 def with_minhash(
     sh_df: DataFrame,
     sh_col: str = "sh",
@@ -186,8 +145,8 @@ def with_minhash(
     """(…, sh) → (…, sig): signature with the md5 group arrays
     MATERIALIZED as projected columns first.
 
-    The expression form (minhash_signature) re-evaluates each group's md5
-    transform once per referencing sub-seed — 4× the md5 work; a
+    Inlining each group's md5 transform into the array would re-evaluate
+    it once per referencing sub-seed — 4× the md5 work; a
     projection boundary makes each group hash compute once (CollapseProject
     leaves multi-referenced non-cheap aliases alone)."""
     n_groups = (n_seeds + _SUBHASHES_PER_MD5 - 1) // _SUBHASHES_PER_MD5
@@ -223,8 +182,8 @@ def band_rows(
 ) -> DataFrame:
     """(doc_id, sig, …) → one row per (doc_id, band, band_hash).
 
-    Single source of the banding scheme: near_dup_pairs,
-    lsh_candidate_pairs, AND the DuckDB oracle twin (generated from the
+    Single source of the banding scheme: near_dup_pairs AND the DuckDB
+    oracle twin (generated from the
     same DEFAULT_SEEDS/DEFAULT_BANDS constants) all share this band-hash
     construction, so they cannot drift independently.  ``carry_cols``
     rides extra columns (e.g. the signature itself for the agreement
@@ -254,32 +213,6 @@ def band_rows(
             )
         ).alias("bb"),
     ).select("doc_id", *carry_cols, "bb.band", "bb.band_hash")
-
-
-def lsh_candidate_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE,
-    n_seeds: int = DEFAULT_SEEDS,
-    n_bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Near-dup candidate pairs: docs sharing ≥1 LSH band bucket.
-
-    Scale path: the self-join runs per (band, band_hash) bucket — a shuffle
-    keyed on the band hash, never a full cross join.
-    """
-    sig = with_minhash(with_shingles(documents, text_col, k), n_seeds=n_seeds).select(
-        "doc_id", "sig"
-    )
-    bands = band_rows(sig, n_seeds, n_bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, on=["band", "band_hash"], how="inner")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def with_winnow_fingerprints(

@@ -268,9 +268,7 @@ def remove_boilerplate_local(
     row and each document filters its own line array row-locally — no
     explode, no re-assembly shuffle, and pure column expressions, so it
     runs UNCHANGED on a streaming frame in append mode with zero state
-    (the streaming drop-in; this is how the statistic
-    ``maintained_stats_writer`` keeps with the ``line_stats`` build
-    cleans live deliveries).
+    (the streaming drop-in).
 
     Per-line membership is an O(|flagged|) array scan — fine while the
     boilerplate set is broadcast-sized (it is by construction,
@@ -369,9 +367,8 @@ def unigram_model(
 def token_counts(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus term frequencies ``(tok, cnt)`` under the model's
     normalization — the raw statistic :func:`unigram_model` heads, and
-    the thing the streaming writer maintains incrementally (counts are
     additive across deliveries, so batch-per-delivery + sum == one big
-    batch)."""
+    batch."""
     toks = (
         dedup._ensure_parallelism(corpus)
         .select(dedup.normalized(F.col(text_col)).alias("_norm"))
@@ -382,8 +379,8 @@ def token_counts(corpus: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def model_from_token_counts(tc: DataFrame, vocab_size: int = 50_000) -> DataFrame:
-    """Head + logprob derivation shared by the batch and streaming model
-    builds (see :func:`unigram_model` for the semantics)."""
+    """Head + logprob derivation of :func:`unigram_model` (see it for
+    the semantics) over any ``(tok, cnt)`` table."""
     total = tc.agg(F.sum("cnt").alias("n_total"))
     return (
         tc.orderBy(F.col("cnt").desc(), F.col("tok").asc())
@@ -1034,11 +1031,9 @@ def label_token_counts(
 ) -> DataFrame:
     """Per-class term frequencies ``(label, tok, c)`` — the sufficient
     statistic of a multinomial Naive Bayes classifier. Counts are
-    ADDITIVE across disjoint deliveries, so the same
-    ``maintained_stats_writer`` that maintains :func:`token_counts`
-    maintains this labeled form (the ``streaming.quality.label_token_stats``
-    build) and the classifier retrains from S·V-row state, never rescanning
-    the corpus."""
+    ADDITIVE across disjoint deliveries, so a kept table of them lets
+    the classifier retrain from S·V rows, never rescanning the
+    corpus."""
     toks = (
         dedup._ensure_parallelism(corpus)
         .select(
@@ -1059,9 +1054,8 @@ def nb_model_from_counts(
 ) -> DataFrame:
     """Laplace-smoothed multinomial NB artifact from the two additive
     statistics: ``ltc`` = (label, tok, c) per-class term frequencies
-    (:func:`label_token_counts` or its maintained streaming state) and
-    ``stats`` = (grp, n_docs, n_tokens) per-class masses
-    (``curation.source_token_counts`` or the mixture-plan state — the
+    (:func:`label_token_counts`) and ``stats`` = (grp, n_docs,
+    n_tokens) per-class masses (``curation.source_token_counts`` — the
     classifier shares the mixture family's statistic).
 
     Artifact rows: ``(label, tok, lp, prior_lp, oov_lp)`` DENSE over
@@ -1224,9 +1218,9 @@ def nb_reference_filter(
 
     At 100 TB pass a deterministic SAMPLE of the raw side as the
     negative class (the model needs class shape, not the full corpus)
-    or derive the artifact from the maintained label states
-    (``streaming.quality.nb_model_from_state``) — either way the full
-    corpus is touched only by the score pass."""
+    or derive the artifact from kept label counts
+    (:func:`nb_model_from_counts`) — either way the full corpus is
+    touched only by the score pass."""
     train = (
         reference.select(F.col(text_col).alias("text"))
         .withColumn("_cls", F.lit("ref"))

@@ -305,8 +305,8 @@ def doc_freq_stats(
 ) -> DataFrame:
     """(tok, cnt) document-frequency table + one sentinel row
     ``tok=''`` carrying the document count — the corpus statistic
-    :func:`hashed_tfidf` derives idf from, in the additive form the
-    streaming state writer merges (each doc contributes once per
+    :func:`hashed_tfidf` derives idf from, in additive form (each doc
+    contributes once per
     distinct term, and docs never recur across deliveries, so
     per-delivery stats SUM to the whole-corpus stats). The empty-string
     sentinel can never collide with a real term: tokenization filters
@@ -338,8 +338,7 @@ def hashed_tfidf_apply(
     l2_normalize: bool = True,
 ) -> DataFrame:
     """Embed documents against a FIXED corpus-stats artifact (a
-    :func:`doc_freq_stats` table — typically the live state
-    ``maintained_stats_writer`` keeps with it as the build): same sparse (doc_id, bucket, weight)
+    :func:`doc_freq_stats` table): same sparse (doc_id, bucket, weight)
     contract as :func:`hashed_tfidf`, but the corpus is never rescanned
     — the deployable / streaming form, the same fixed-artifact split as
     ``unigram_model`` vs ``score_with_unigram_model``.

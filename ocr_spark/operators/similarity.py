@@ -19,7 +19,6 @@ RNG state, so any engine (and any rerun) regenerates identical structures.
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 import pandas as pd
@@ -98,15 +97,6 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
             vals.append((raw - 32767.5) / 32767.5)
         counter += 1
     return vals
-
-
-def signature(vec: Column, dim: int, n_planes: int = 8) -> Column:
-    """Sign pattern of the vector against n_planes fixed hyperplanes."""
-    bits = []
-    for p in range(n_planes):
-        plane = F.lit([float(v) for v in _hyperplane(dim, p)])
-        bits.append(F.when(dot(vec, plane) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
 
 
 def band_sigs_udf(dim: int, n_planes: int, n_bands: int):
@@ -240,22 +230,17 @@ def nearest_id(
     return F.element_at(centroid_probe_udf(centroids, 1)(vec), 1)
 
 
-def _lloyd_means(assigned: DataFrame, keys: list[str], vec_col: str) -> list:
-    """One distributed Lloyd update: the element-wise mean of ``vec_col``
-    per assignment key, collected as ``(*keys, centroid)`` rows. The mean
-    is a groupBy over (keys, dim) via posexplode, the vector is rebuilt
-    by a dim-ordered collect_list — no driver-side loop over vectors.
-
-    The generator lives in its own projection: placing posexplode beside
-    the struct-sorting argmin that computed the keys strips the struct
-    field names during the Generate rewrite (FIELD_NOT_FOUND col1/col2)."""
+def _lloyd_means(assigned: DataFrame, keys: list[str], vec_col: str, dim: int) -> list:
+    """One distributed Lloyd update: the element-wise mean of the
+    ``dim``-long ``vec_col`` per assignment key, collected as
+    ``(*keys, centroid)`` rows. One groupBy over the keys with one
+    ``avg`` per vector position — one shuffle, no driver-side loop over
+    vectors."""
+    means = [F.avg(F.element_at(vec_col, i + 1)).alias(f"_m{i}") for i in range(dim)]
     return (
-        assigned.select(*keys, F.posexplode(vec_col).alias("_di", "_x"))
-        .groupBy(*keys, "_di")
-        .agg(F.avg("_x").alias("_mu"))
-        .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(F.struct("_di", "_mu"))).alias("_ds"))
-        .select(*keys, F.transform("_ds", lambda s: s["_mu"]).alias("centroid"))
+        assigned.groupBy(*keys)
+        .agg(*means)
+        .select(*keys, F.array(*[f"_m{i}" for i in range(dim)]).alias("centroid"))
         .collect()
     )
 
@@ -286,53 +271,10 @@ def ivf_centroids(
         )
         refined = {
             int(r["list_id"]): list(map(float, r["centroid"]))
-            for r in _lloyd_means(assigned, ["list_id"], "_v")
+            for r in _lloyd_means(assigned, ["list_id"], "_v", len(centroids[0][1]))
         }
         centroids = [(cid, refined.get(cid, cvec)) for cid, cvec in centroids]
     return centroids
-
-
-def _assigned_lists(
-    embeddings: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
-    assign: str,
-) -> DataFrame:
-    """The corpus as inverted-list rows (neighbor_id, cv, list_id), each
-    vector in the list of its nearest centroid."""
-    return embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
-    )
-
-
-def _ivf_probe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    k: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    assign: str,
-) -> DataFrame:
-    """Exact top-k over the inverted lists (``corpus``: neighbor_id, cv,
-    list_id) that each query probes: the (small, broadcast) query set
-    explodes to its nprobe nearest list ids and equi-joins the lists."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ).withColumn(
-            "list_id",
-            F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)),
-        )
-    )
-    joined = q.join(corpus, on="list_id", how="inner").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return _rank_topk(_exact_sims(joined), k)
 
 
 def ivf_topk(
@@ -353,62 +295,25 @@ def ivf_topk(
     the replay oracles) and the Arrow matmul UDF beyond — n_lists is no
     longer capped by expression-analysis cost."""
     centroids = ivf_centroids(embeddings, n_lists, id_col, vec_col, assign=assign)
-    corpus = _assigned_lists(embeddings, centroids, id_col, vec_col, assign)
-    return _ivf_probe(corpus, queries, centroids, k, nprobe, id_col, vec_col, assign)
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    out_dir: str,
-    n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign: str = "auto",
-) -> None:
-    """Materialize the IVF structure as TABLES (the production form named
-    in SCALING.md — at 10^12 vectors the centroid assignment must not be
-    recomputed per query batch):
-
-    * ``<out>/centroids`` — (list_id, centroid) parquet, n_lists rows;
-    * ``<out>/lists`` — the corpus with its nearest-centroid assignment,
-      ``partitionBy(list_id)``: a probe filtering on list_id prunes to
-      the probed partitions' FILES (verified in the scan's plan), so a
-      query batch touches nprobe/n_lists of the data at rest.
-    """
-    spark = embeddings.sparkSession
-    centroids = ivf_centroids(embeddings, n_lists, id_col, vec_col, assign=assign)
-    cdf = spark.createDataFrame(
-        [(cid, list(map(float, vec))) for cid, vec in centroids],
-        "list_id int, centroid array<double>",
+    corpus = embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
     )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/centroids")
-    _assigned_lists(embeddings, centroids, id_col, vec_col, assign).write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(f"{out_dir}/lists")
-
-
-def ivf_topk_indexed(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign: str = "auto",
-) -> DataFrame:
-    """Probe a materialized IVF index: centroids load as driver literals
-    (n_lists rows — the one bounded collect), each query explodes to its
-    nprobe nearest list_ids, and the join against the partitioned lists
-    table prunes to the probed partitions.  Results are identical to the
-    inline ivf_topk for the same corpus (tested) — the index just moves
-    the assignment cost out of the query path."""
-    centroids = [
-        (int(r["list_id"]), list(map(float, r["centroid"])))
-        for r in spark.read.parquet(f"{index_dir}/centroids").collect()
-    ]
-    corpus = spark.read.parquet(f"{index_dir}/lists")
-    return _ivf_probe(corpus, queries, centroids, k, nprobe, id_col, vec_col, assign)
+    # the (small, broadcast) query set explodes to its nprobe nearest
+    # list ids and equi-joins the lists
+    q = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        ).withColumn(
+            "list_id",
+            F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)),
+        )
+    )
+    joined = q.join(corpus, on="list_id", how="inner").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    return _rank_topk(_exact_sims(joined), k)
 
 
 def lsh_topk(
@@ -741,7 +646,7 @@ def pq_codebooks(
             "sv",
             _argmin_code(F.col("sv"), F.element_at(F.lit(books), F.col("sub") + 1)).alias("cid"),
         )
-        for r in _lloyd_means(assigned, ["sub", "cid"], "sv"):
+        for r in _lloyd_means(assigned, ["sub", "cid"], "sv", dim // m):
             books[r["sub"]][r["cid"]] = list(map(float, r["centroid"]))
     return books
 
@@ -886,12 +791,6 @@ def pq_topk(
     return _adc_topk(candidates, embeddings, queries, k, rerank, id_col, vec_col)
 
 
-def _py_cosine(a: list[float], b: list[float]) -> float:
-    num = sum(x * y for x, y in zip(a, b))
-    den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
-    return num / den if den else 0.0
-
-
 def ivfadc_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -934,16 +833,16 @@ def ivfadc_topk(
         nearest_id(F.col(vec_col), centroids, assign).alias("list_id"),
         _pq_codes(books, dim).alias("codes"),
     )
-    # per query: its ADC table on each of its nprobe nearest coarse lists,
-    # both driver-computed (queries are a small broadcast set)
-    probe_rows = []
-    for r in qrows:
-        qv = list(map(float, r["_nv"]))
-        lt = _adc_table(qv, books, d)
-        by_sim = sorted((-_py_cosine(qv, cvec), cid) for cid, cvec in centroids)[:nprobe]
-        probe_rows += [(int(r[id_col]), int(cid), lt) for _, cid in by_sim]
+    # per query: its driver-built ADC table on each of its nprobe nearest
+    # coarse lists, picked by the same probe_ids as ivf_topk
+    qvs = [(int(r[id_col]), list(map(float, r["_nv"]))) for r in qrows]
     probes = embeddings.sparkSession.createDataFrame(
-        probe_rows, "query_id long, list_id int, lt array<array<double>>"
+        [(qid, qv, _adc_table(qv, books, d)) for qid, qv in qvs],
+        "query_id long, qv array<double>, lt array<array<double>>",
+    ).select(
+        "query_id",
+        F.explode(probe_ids(F.col("qv"), centroids, nprobe, assign)).alias("list_id"),
+        "lt",
     )
     candidates = (
         F.broadcast(probes)

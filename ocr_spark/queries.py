@@ -1318,7 +1318,7 @@ def q_minhash_signatures(spark, sf_dir):
 
 
 def _sql_minhash_exprs(seeds: int) -> list[str]:
-    """Mirror dedup.minhash_signature: seed j = min over shingles of
+    """Mirror dedup.with_minhash: seed j = min over shingles of
     substr(md5((j//4) ':' shingle), 1 + 8*(j%4), 8)."""
     return [
         f"list_aggregate(list_transform(s, x -> substr(md5('{j // 4}:' || x), {1 + 8 * (j % 4)}, 8)), 'min')"
@@ -1616,8 +1616,7 @@ WHERE {_SQL_FIX6.format(x=_SQL_COS_AB)} >= 0.25
 
 
 def q_sessionize(spark, sf_dir):
-    """Event sessionization (30-min gap) — the batch form of the streaming
-    session-window operator."""
+    """Event sessionization (30-min gap)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -3016,14 +3015,12 @@ SQL_DUP_SPANS = _sql_dup_spans()
 def q_dup_spans_incremental(spark, sf_dir):
     """The dup-span statistic as a maintained table: report ONLY a "new
     delivery" half of the corpus (md5-banded, growth-stable) against the
-    FROZEN n-gram window counts — the table ``maintained_stats_writer``
-    keeps on the stream with ``ngram_window_counts`` as the build — via :func:`curation.dup_spans_apply`; the
-    oracle recomputes dup_spans from scratch over the full corpus and
-    restricts to the delivery. Equality is what makes duplicated-span
-    reporting incremental: a delivery's spans come from the warm
-    statistic with no corpus rescan (stream-built-state equivalence is
-    proven in tests/test_streaming_curation.py
-    ::test_incremental_dup_spans_loop_end_to_end)."""
+    FROZEN n-gram window counts (an ``ngram_window_counts`` table) via
+    :func:`curation.dup_spans_apply`; the oracle recomputes dup_spans
+    from scratch over the full corpus and restricts to the delivery.
+    Equality is what makes duplicated-span reporting incremental: a
+    delivery's spans come from the kept statistic with no corpus
+    rescan."""
     docs = _t(spark, sf_dir, "documents")
     stats = curation.ngram_window_counts(docs, n=8)
     arrivals = docs.filter(
@@ -4406,14 +4403,12 @@ def q_tfidf_incremental(spark, sf_dir):
     """The incremental-embedding loop's batch-expressible face (VERDICT
     r04 next-step #6): embed ONLY a "new delivery" half of the corpus
     (md5-banded, growth-stable) against the FROZEN doc-frequency
-    artifact — the table ``maintained_stats_writer`` keeps on the
-    stream with ``doc_freq_stats`` as the build — via :func:`search.hashed_tfidf_apply`; the oracle rebuilds
-    the same embeddings from scratch over the full corpus and restricts
-    to the delivery.  Equality is what makes embeddings a maintained
-    table: new docs embed without a corpus rescan, byte-for-byte
-    consistent with a full rebuild (stream-built-state equivalence is
-    proven in tests/test_streaming_quality.py
-    ::test_incremental_embedding_loop_end_to_end)."""
+    artifact (a ``doc_freq_stats`` table) via
+    :func:`search.hashed_tfidf_apply`; the oracle rebuilds the same
+    embeddings from scratch over the full corpus and restricts to the
+    delivery.  Equality is what makes embeddings a maintained table: new
+    docs embed without a corpus rescan, byte-for-byte consistent with a
+    full rebuild."""
     docs = _t(spark, sf_dir, "documents")
     stats = search.doc_freq_stats(docs)
     arrivals = docs.filter(
@@ -4450,8 +4445,7 @@ def _text_ann_dense(docs: DataFrame) -> DataFrame:
     query branch and the corpus branch (plus, for IVF, the seed collect,
     the Lloyd pass, and the final assignment) re-evaluate it otherwise —
     measured 12.7 s → ~5 s for the IVF row at sf0.01. Per-query-batch
-    cache, spill-safe; the at-rest production form is build_ivf_index's
-    partitioned lists table, which assigns exactly once."""
+    cache, spill-safe."""
     from pyspark import StorageLevel
 
     sp = search.hashed_tfidf(docs, dim=_HTFIDF_DIM)
@@ -5288,9 +5282,8 @@ def q_nb_model_head(spark, sf_dir):
     head-token) smoothed log-likelihoods, dense over classes x the
     global top-V token head, plus the class prior and shared OOV floor.
     S·V rows — broadcastable at any corpus size — built from two
-    additive count passes, so the same artifact derives from maintained
-    streaming state with no rescan (streaming.quality
-    .nb_model_from_state; stream == batch tested)."""
+    additive count passes, so the same artifact derives from kept counts
+    with no rescan (:func:`quality.nb_model_from_counts`)."""
     docs = _t(spark, sf_dir, "documents")
     m = quality.nb_model(docs, label_col="source", vocab_size=_NB_VOCAB)
     return m.select(

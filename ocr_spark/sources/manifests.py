@@ -1636,8 +1636,8 @@ def lookup_read(
 
 
 # --------------------------------------------------------------------------
-# table maintenance: tags, metadata-only counts, orphan-file removal
-# (the Iceberg refs / stats-scan / remove_orphan_files analogues)
+# table maintenance: tags (the Iceberg refs analogue) and the
+# auto-compaction policy
 # --------------------------------------------------------------------------
 
 _TAG_NAME_RE = None  # compiled lazily
@@ -1714,87 +1714,6 @@ def read_tag(
     return read_as_of(spark, out_dir, rec["as_of"], merge_schema=merge_schema)
 
 
-def fast_count(
-    spark: SparkSession, out_dir: str, input_snapshot: str | None = None
-) -> dict:
-    """COUNT(*) from manifest metadata when that is provably exact —
-    the Iceberg stats-scan: the manifests already carry per-(bucket,
-    delivery) row counts, so the common no-deletes case costs a
-    metadata read instead of a table scan (at 100 TB: milliseconds vs
-    a full-corpus job). Exactness rule: metadata counts are the live
-    rows iff every live tombstone is INERT, i.e. every live data
-    epoch's commit postdates every non-expired tombstone (true for
-    fresh tables, append-only tables, and any table after compaction —
-    compact rewrites data with a fresh stamp). Otherwise falls back to
-    counting :func:`read_committed`. Returns {"count", "source"} with
-    source in {"manifests", "scan"}."""
-    m = active_manifests(spark, out_dir)
-    if m is None:
-        raise FileNotFoundError(f"no manifests under {out_dir}")
-    if input_snapshot is not None:
-        m = m.filter(F.col("input_snapshot") == input_snapshot)
-
-    tomb_max = None
-    dm = _read_delete_manifests(spark, out_dir)
-    if dm is not None:
-        expired = _expired_delete_epochs(spark, out_dir)
-        if expired:
-            dm = dm.filter(~F.col("epoch").isin(list(expired)))
-        tomb_max = dm.agg(F.max("committed_at")).collect()[0][0]
-    if tomb_max is not None:
-        live_min = m.agg(F.min("committed_at")).collect()[0][0]
-        if live_min is None or live_min <= tomb_max:
-            # a live tombstone may suppress rows -> metadata can't know
-            df = read_committed(spark, out_dir, input_snapshot=input_snapshot)
-            return {"count": df.count(), "source": "scan"}
-    n = m.agg(F.sum("row_count")).collect()[0][0] or 0
-    return {"count": int(n), "source": "manifests"}
-
-
-def remove_orphans(
-    spark: SparkSession,
-    out_dir: str,
-    grace_seconds: float = 86400.0,
-    dry_run: bool = False,
-) -> dict:
-    """Remove data-epoch directories no metadata references (Iceberg
-    ``remove_orphan_files``): a writer that crashed between the data
-    append and the manifest/compaction commit leaves its epoch on disk
-    forever — invisible to every reader, but billed storage. An epoch is
-    an orphan iff it appears in NO manifest row and NO compaction record
-    (superseded epochs are NOT orphans — they serve time travel and are
-    expire's job). ``grace_seconds`` keeps young directories: a racing
-    in-flight writer's epoch exists on disk before its commit lands, and
-    deleting it would turn a live write into a torn one."""
-    import glob as _glob
-    import shutil
-
-    referenced: set[str] = set()
-    m = read_manifests(spark, out_dir)
-    if m is not None:
-        referenced |= {r["job_epoch"] for r in m.select("job_epoch").distinct().collect()}
-    c = read_compactions(spark, out_dir)
-    if c is not None:
-        referenced |= {r["job_epoch"] for r in c.select("job_epoch").distinct().collect()}
-        referenced |= {
-            r["e"]
-            for r in c.select(F.explode("superseded").alias("e")).distinct().collect()
-        }
-
-    now = time.time()
-    orphans: list[str] = []
-    for d in _glob.glob(os.path.join(_data_dir(out_dir), "bucket=*", "epoch=*")):
-        epoch = os.path.basename(d).split("=", 1)[1]
-        if epoch in referenced:
-            continue
-        if now - os.path.getmtime(d) < grace_seconds:
-            continue
-        orphans.append(d)
-        if not dry_run:
-            shutil.rmtree(d, ignore_errors=True)
-    return {"removed": 0 if dry_run else len(orphans), "orphans": sorted(orphans)}
-
-
 def maybe_compact(
     spark: SparkSession,
     out_dir: str,
@@ -1823,62 +1742,3 @@ def maybe_compact(
     res["live_epochs"] = live
     return res
 
-
-def table_stats(spark: SparkSession, out_dir: str) -> dict:
-    """One-call operational report (the SHOW TABLE / DESCRIBE DETAIL
-    analogue): everything a maintenance loop or an operator pages
-    through, from the metadata-sized tables only — no data files are
-    listed or opened. Keys: spec (bucketing), live/superseded epoch
-    counts, deliveries, buckets, row/byte totals of the live view,
-    committed tombstone epochs and keys, tags, and which acceleration
-    features the live manifests carry (zone-map stats columns, key
-    blooms, per-file sidecars)."""
-    meta = read_table_meta(out_dir) or {}
-    out: dict = {
-        "spec": meta,
-        "live_epochs": 0,
-        "deliveries": 0,
-        "buckets": 0,
-        "live_rows": 0,
-        "live_bytes": 0,
-        "superseded_epochs": 0,
-        "tombstone_epochs": 0,
-        "tombstone_keys": 0,
-        "tags": [t["name"] for t in list_tags(out_dir)],
-        "stats_cols": [],
-        "has_blooms": False,
-        "filestat_epochs": 0,
-    }
-    m = active_manifests(spark, out_dir)
-    if m is not None:
-        row = m.agg(
-            F.countDistinct("job_epoch"),
-            F.countDistinct("input_snapshot"),
-            F.countDistinct("bucket"),
-            F.sum("row_count"),
-            F.sum("byte_count"),
-        ).collect()[0]
-        out.update(
-            live_epochs=row[0], deliveries=row[1], buckets=row[2],
-            live_rows=row[3] or 0, live_bytes=row[4] or 0,
-        )
-        out["stats_cols"] = _tracked_stats_cols(m)
-        out["has_blooms"] = _live_bloom_spec(m) is not None
-    c = read_compactions(spark, out_dir)
-    if c is not None:
-        out["superseded_epochs"] = (
-            c.select(F.explode("superseded").alias("e")).distinct().count()
-        )
-    dm = _read_delete_manifests(spark, out_dir)
-    if dm is not None:
-        expired = _expired_delete_epochs(spark, out_dir)
-        live_t = dm.filter(~F.col("epoch").isin(list(expired))) if expired else dm
-        trow = live_t.agg(F.countDistinct("epoch"), F.sum("n_keys")).collect()[0]
-        out["tombstone_epochs"] = trow[0]
-        out["tombstone_keys"] = trow[1] or 0
-    fs = _filestats_dir(out_dir)
-    if os.path.isdir(fs):
-        out["filestat_epochs"] = len(
-            [f for f in os.listdir(fs) if f.endswith(".json")]
-        )
-    return out

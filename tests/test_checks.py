@@ -32,14 +32,6 @@ def test_report_prices_planted_defects(spark):
     assert abs(rep["set_s"] - 4 / 5) < 1e-9             # C fails
 
 
-def test_referential_integrity_counts_orphans(spark):
-    child = spark.createDataFrame([(1,), (2,), (3,), (9,)], "fk int")
-    parent = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
-    rep = checks.referential_integrity(child, parent, "fk", "pk").collect()[0]
-    assert rep["n_child"] == 4 and rep["n_orphans"] == 1
-    assert abs(rep["ri"] - 0.75) < 1e-9
-
-
 def test_skew_profile_ranks_and_salts(spark):
     # planted skew: key 'hot' 100 rows, 'warm' 10, 8 singletons
     rows = (

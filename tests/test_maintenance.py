@@ -1,18 +1,11 @@
-"""Table maintenance: snapshot tags, metadata-only counts, orphan removal.
+"""Table maintenance: snapshot tags, the auto-compaction policy and
+tag-aware expiry.
 
-Invariants:
-* a tag pins rows across later deliveries, upserts, and compactions
-  (until retention strips the history it points into);
-* fast_count is exact ALWAYS — "manifests" source only claimed when
-  tombstones are provably inert, otherwise it scans;
-* remove_orphans deletes only epochs referenced by NO metadata, never
-  live or superseded ones, and respects the grace window.
+Invariant: a tag pins rows across later deliveries, upserts, and
+compactions (until retention strips the history it points into).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,61 +51,6 @@ def test_tag_pins_snapshot_across_deliveries_and_compaction(spark, tmp_path):
         mf.read_tag(spark, out, "v1")
     with pytest.raises(ValueError):
         mf.create_tag(out, "../escape")
-
-
-def test_fast_count_metadata_vs_scan(spark, tmp_path):
-    out = str(tmp_path / "t")
-    mf.checkpointed_write(spark, _delivery(spark, 0, 60), out, n_buckets=4,
-                          input_snapshot="s1")
-    mf.checkpointed_write(spark, _delivery(spark, 1000, 40), out, n_buckets=4,
-                          input_snapshot="s2")
-    got = mf.fast_count(spark, out)
-    assert got == {"count": 100, "source": "manifests"}
-    assert mf.fast_count(spark, out, input_snapshot="s2") == {
-        "count": 40, "source": "manifests"
-    }
-
-    # a live tombstone forces the scan path — and the count is still exact
-    mf.delete_keys(spark, out, ["d00003", "d00007", "d01005"])
-    got = mf.fast_count(spark, out)
-    assert got == {"count": 97, "source": "scan"}
-
-    # compaction applies tombstones physically; its fresh commit stamp
-    # postdates them, so metadata counting is provably exact again
-    mf.compact(spark, out, key_col="doc_id")
-    got = mf.fast_count(spark, out)
-    assert got == {"count": 97, "source": "manifests"}
-
-
-def test_remove_orphans(spark, tmp_path):
-    import glob
-
-    out = str(tmp_path / "t")
-    mf.checkpointed_write(spark, _delivery(spark, 0, 50), out, n_buckets=2,
-                          input_snapshot="s1")
-    mf.checkpointed_write(spark, _delivery(spark, 1000, 50), out, n_buckets=2,
-                          input_snapshot="s2")
-    mf.compact(spark, out, key_col="doc_id")  # superseded epochs now exist
-
-    # fabricate a crashed write: data landed, no manifest row
-    src = glob.glob(f"{out}/data/bucket=0/epoch=*")[0]
-    orphan = f"{out}/data/bucket=0/epoch=deadbeefcafe0000"
-    shutil.copytree(src, orphan)
-
-    plan = mf.remove_orphans(spark, out, grace_seconds=0, dry_run=True)
-    assert plan["removed"] == 0 and plan["orphans"] == [orphan]
-    assert os.path.isdir(orphan)
-
-    # a YOUNG orphan is protected by the grace window
-    assert mf.remove_orphans(spark, out, grace_seconds=3600)["orphans"] == []
-
-    got = mf.remove_orphans(spark, out, grace_seconds=0)
-    assert got["removed"] == 1 and not os.path.isdir(orphan)
-
-    # superseded + live epochs untouched: committed reads and time travel intact
-    assert mf.read_committed(spark, out).count() == 100
-    n_dirs = len(glob.glob(f"{out}/data/bucket=*/epoch=*"))
-    assert n_dirs == 6  # 2 buckets x (s1 + s2 + compacted)
 
 
 def test_maybe_compact_respects_the_epoch_threshold(spark, tmp_path):
@@ -165,32 +103,3 @@ def test_expire_respects_live_tags(spark, tmp_path):
 
     # respect_tags=False would have ignored the pin (documented escape)
 
-
-def test_table_stats_reports_the_whole_lifecycle(spark, tmp_path):
-    out = str(tmp_path / "t")
-    for i in range(2):
-        mf.checkpointed_write(
-            spark, _delivery(spark, i * 100, 25), out, n_buckets=2,
-            input_snapshot=f"s{i}", stats_cols=["v"], bloom_key=True,
-        )
-    mf.create_tag(out, "v1")
-    mf.delete_keys(spark, out, ["d00003"])
-    st = mf.table_stats(spark, out)
-    assert st["live_epochs"] == 2 and st["deliveries"] == 2
-    assert st["buckets"] == 2 and st["live_rows"] == 50
-    assert st["live_bytes"] > 0 and st["spec"]["key_col"] == "doc_id"
-    assert st["tombstone_epochs"] == 1 and st["tombstone_keys"] == 1
-    assert st["tags"] == ["v1"] and st["stats_cols"] == ["v"]
-    assert st["has_blooms"] is True and st["superseded_epochs"] == 0
-
-    mf.compact(spark, out, key_col="doc_id", cluster_by="v", max_file_rows=10)
-    st = mf.table_stats(spark, out)
-    assert st["live_epochs"] == 1 and st["superseded_epochs"] == 2
-    assert st["live_rows"] == 49          # compaction applied the tombstone
-    assert st["filestat_epochs"] == 1     # clustered rewrite left a sidecar
-    assert st["stats_cols"] == ["v"]      # pruning power carried across
-
-
-def test_table_stats_on_missing_table(spark, tmp_path):
-    st = mf.table_stats(spark, str(tmp_path / "nope"))
-    assert st["live_epochs"] == 0 and st["tags"] == [] and st["spec"] == {}

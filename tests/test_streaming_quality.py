@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators import quality
 from ocr_spark.operators.quality import dedup_lines, repetition_stats
-from ocr_spark.streaming.sketch import maintained_stats_writer
 
 SF_DIR = "/root/testdata/sf0.001"
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -65,28 +64,6 @@ def test_dedup_lines_stream_equals_batch(spark, tmp_path):
     assert _keyed(got) == _keyed(want)
 
 
-def test_bm25_stream_equals_batch(spark, tmp_path):
-    """Streaming BM25 against static index stats == batch bm25_scores
-    when the static corpus IS the streamed corpus."""
-    from ocr_spark.operators.search import bm25_scores
-    from ocr_spark.streaming.search import bm25_index_stats, bm25_score_stream
-
-    terms = ["shuffle", "broadcast", "spark"]
-    src, docs = _write_batched(spark, tmp_path)
-    stats = bm25_index_stats(docs, terms)
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    got = _run_stream(
-        spark, bm25_score_stream(stream, stats, terms), tmp_path, "bm25_stream"
-    ).collect()
-    want = bm25_scores(docs, terms).collect()
-    g = {r["doc_id"]: (r["n_terms_hit"], round(r["score"], 9)) for r in got}
-    w = {r["doc_id"]: (r["n_terms_hit"], round(r["score"], 9)) for r in want}
-    assert g == w
-    assert len(g) > 0
-
-
 def test_unigram_model_score_stream_equals_batch(spark, tmp_path):
     """Scoring under a FIXED unigram model inside foreachBatch: each
     doc's tokens live in one row, so the per-doc agg completes within
@@ -120,86 +97,6 @@ def test_unigram_model_score_stream_equals_batch(spark, tmp_path):
     assert g == w and len(g) == docs.count()
 
 
-def test_token_stats_stream_equals_batch_and_feeds_the_model(spark, tmp_path):
-    from ocr_spark.streaming.quality import unigram_model_from_state
-    from ocr_spark.streaming.sketch import read_head, read_sketch_state
-
-    src, docs = _write_batched(spark, tmp_path)
-    state = str(tmp_path / "tok_state")
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-
-    def _drain():
-        q = (
-            maintained_stats_writer(stream, {state: quality.token_counts})
-            .option("checkpointLocation", str(tmp_path / "ck_tok"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "streaming query did not drain in time"
-
-    _drain()
-    head = read_head(state)
-    assert head is not None and head["last_batch_id"] >= 2  # crossed batch bounds
-
-    got = {r["tok"]: r["cnt"] for r in read_sketch_state(spark, state).collect()}
-    want = {
-        r["tok"]: r["cnt"] for r in quality.token_counts(docs, "text").collect()
-    }
-    assert got == want
-
-    # the derived artifact equals the batch unigram_model over the prefix
-    m_stream = {
-        r["tok"]: (round(r["lp"], 10), r["n_total"])
-        for r in unigram_model_from_state(spark, state, vocab_size=200).collect()
-    }
-    m_batch = {
-        r["tok"]: (round(r["lp"], 10), r["n_total"])
-        for r in quality.unigram_model(docs, vocab_size=200).collect()
-    }
-    assert m_stream == m_batch
-
-    # re-running the drained stream replays nothing: state untouched
-    _drain()
-    assert read_head(state) == head
-
-
-def test_doc_freq_stream_feeds_incremental_embeddings(spark, tmp_path):
-    from ocr_spark.operators import search as s_ops
-    from ocr_spark.streaming.sketch import read_head, read_sketch_state
-
-    src, docs = _write_batched(spark, tmp_path)
-    state = str(tmp_path / "df_state")
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        maintained_stats_writer(stream, {state: s_ops.doc_freq_stats})
-        .option("checkpointLocation", str(tmp_path / "ck_df"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not drain in time"
-    assert read_head(state)["last_batch_id"] >= 2
-
-    got = {r["tok"]: r["cnt"] for r in read_sketch_state(spark, state).collect()}
-    want = {r["tok"]: r["cnt"] for r in s_ops.doc_freq_stats(docs, "text").collect()}
-    assert got == want  # incl. the '' doc-count sentinel
-
-    # embeddings from the streamed state == batch hashed_tfidf
-    state_df = read_sketch_state(spark, state)
-    a = {
-        (r["doc_id"], r["bucket"]): round(r["weight"], 10)
-        for r in s_ops.hashed_tfidf_apply(docs, state_df, dim=64).collect()
-    }
-    b = {
-        (r["doc_id"], r["bucket"]): round(r["weight"], 10)
-        for r in s_ops.hashed_tfidf(docs, dim=64).collect()
-    }
-    assert a == b
-
-
 def test_bigram_score_stream_equals_batch(spark, tmp_path):
     """The stupid-backoff scorer is the same stateless shape as the
     unigram form: pairs are row-local, both artifact joins broadcast,
@@ -231,107 +128,6 @@ def test_bigram_score_stream_equals_batch(spark, tmp_path):
     g = {r["doc_id"]: (r["n_pairs"], round(r["logprob"], 9)) for r in got_rows}
     w = {r["doc_id"]: (r["n_pairs"], round(r["logprob"], 9)) for r in want}
     assert g == w and len(g) > 0
-
-
-def test_incremental_embedding_loop_end_to_end(spark, tmp_path):
-    """VERDICT r04 next-step #6: the embeddings-as-maintained-table loop.
-    The doc-frequency state absorbs deliveries on the stream; when a new
-    delivery lands, ONLY its documents are embedded (hashed_tfidf_apply
-    against the frozen state) — and the result equals the full batch
-    rebuild over everything delivered so far, restricted to those docs.
-    No corpus rescan, identical embeddings: that equality is what makes
-    the incremental path a drop-in for the rebuild."""
-    from ocr_spark.operators import search as s_ops
-    from ocr_spark.streaming.sketch import read_sketch_state
-
-    src, docs = _write_batched(spark, tmp_path)
-    state = str(tmp_path / "df_state_e2e")
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        maintained_stats_writer(stream, {state: s_ops.doc_freq_stats})
-        .option("checkpointLocation", str(tmp_path / "ck_df_e2e"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not drain in time"
-
-    # "the new delivery": one of the five streamed file-batches
-    arrivals = docs.filter(F.col("doc_id") % 5 == 4)
-    assert arrivals.count() > 0
-    state_df = read_sketch_state(spark, state)
-    inc = {
-        (r["doc_id"], r["bucket"]): round(r["weight"], 10)
-        for r in s_ops.hashed_tfidf_apply(arrivals, state_df, dim=64).collect()
-    }
-    rebuild = {
-        (r["doc_id"], r["bucket"]): round(r["weight"], 10)
-        for r in s_ops.hashed_tfidf(docs, dim=64)
-        .join(arrivals.select("doc_id"), "doc_id")
-        .collect()
-    }
-    assert inc == rebuild
-
-
-def test_line_stats_stream_feeds_boilerplate_removal(spark, tmp_path):
-    """The maintained-statistic loop for the cross-document boilerplate
-    filter: stream the corpus in 4 micro-batches keeping (line_md5,
-    cnt) warm, then clean 'the new delivery' against the frozen state —
-    state equals the batch statistic, and the apply equals the
-    full-corpus remove_boilerplate restricted to the delivery."""
-    from ocr_spark.streaming.quality import boilerplate_stats_from_state, line_stats
-
-    # 20 docs: "footer" in all, "menu" in even ids, unique body lines —
-    # shared lines deliberately straddle the micro-batch boundaries
-    rows = [
-        (i, ("footer\n" + ("menu\n" if i % 2 == 0 else "") + f"body {i}"))
-        for i in range(20)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "bp_src")
-    docs.withColumn("_b", F.col("doc_id") % 4).repartition(4, "_b").drop(
-        "_b"
-    ).write.mode("overwrite").parquet(src)
-
-    state = str(tmp_path / "bp_state")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        maintained_stats_writer(stream, {state: line_stats})
-        .option("checkpointLocation", str(tmp_path / "ck_bp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not drain in time"
-
-    stats = boilerplate_stats_from_state(spark, state)
-    got_stats = {r["line_md5"]: r["n_docs"] for r in stats.collect()}
-    want_stats = {
-        r["line_md5"]: r["n_docs"]
-        for r in quality.boilerplate_lines(docs, min_docs=1).collect()
-    }
-    assert got_stats == want_stats
-
-    arrivals = docs.filter(F.col("doc_id") % 4 == 3)
-    inc = {
-        r["doc_id"]: r["text_clean"]
-        for r in quality.remove_boilerplate(
-            arrivals, min_docs=2, stats=stats
-        ).collect()
-    }
-    rebuild = {
-        r["doc_id"]: r["text_clean"]
-        for r in quality.remove_boilerplate(docs, min_docs=2)
-        .join(arrivals.select("doc_id"), "doc_id")
-        .collect()
-    }
-    assert inc == rebuild and len(inc) == 5
-    # the shared lines are gone, the unique bodies survive
-    assert all(v.startswith("body ") for v in inc.values())
 
 
 def test_remove_boilerplate_stream_equals_batch(spark, tmp_path):
@@ -403,48 +199,6 @@ def test_bucket_apply_stream_equals_batch(spark, tmp_path):
     assert {"head", "middle", "tail"} <= {b for (_l, _p, b) in g.values()}
 
 
-def test_nb_model_stream_equals_batch(spark, tmp_path):
-    """The NB classifier retrains from two maintained additive states
-    (labeled term frequencies + per-source masses — the latter SHARED
-    with the mixture planner) with no corpus rescan: the artifact
-    derived from streamed state equals the batch nb_model."""
-    from ocr_spark.streaming.curation import source_stats
-    from ocr_spark.streaming.quality import label_token_stats, nb_model_from_state
-    from ocr_spark.streaming.sketch import read_head
-
-    src, docs = _write_batched(spark, tmp_path)
-    tstate = str(tmp_path / "nb_tok_state")
-    sstate = str(tmp_path / "nb_src_state")
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        maintained_stats_writer(stream, {tstate: label_token_stats, sstate: source_stats})
-        .option("checkpointLocation", str(tmp_path / "ck_nb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not drain in time"
-    assert read_head(tstate)["last_batch_id"] >= 2  # crossed batch bounds
-
-    def _key(rows):
-        return {
-            (r["label"], r["tok"]): (
-                round(r["lp"], 10),
-                round(r["prior_lp"], 10),
-                round(r["oov_lp"], 10),
-            )
-            for r in rows
-        }
-
-    m_stream = nb_model_from_state(spark, tstate, sstate, vocab_size=200)
-    assert m_stream is not None
-    m_batch = quality.nb_model(docs, label_col="source", vocab_size=200)
-    assert _key(m_stream.collect()) == _key(m_batch.collect())
-
-
 def test_gopher_rules_stream_equals_batch(spark, tmp_path):
     """gopher_rules is pure row-local column logic -> runs UNCHANGED on
     a streaming frame; rows across micro-batches == one batch pass."""
@@ -476,34 +230,3 @@ def test_c4_clean_stream_equals_batch(spark, tmp_path):
     want = c4_clean(docs).collect()
     assert _keyed(got) == _keyed(want)
 
-
-def test_bpe_merges_from_stream_state_equals_batch(spark, tmp_path):
-    """The tokenizer artifact as a maintained table: BPE merges learned
-    from the streamed token-count state equal the batch learner over
-    the full committed corpus."""
-    from ocr_spark.operators.bpe import bpe_learn
-    from ocr_spark.streaming.quality import bpe_merges_from_state
-
-    src, docs = _write_batched(spark, tmp_path)
-    state = str(tmp_path / "bpe_tok_state")
-    stream = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        maintained_stats_writer(stream, {state: quality.token_counts})
-        .option("checkpointLocation", str(tmp_path / "ck_bpe_tok"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not drain in time"
-
-    got = [
-        tuple(r)
-        for r in bpe_merges_from_state(spark, state, n_merges=8)
-        .orderBy("rank")
-        .collect()
-    ]
-    want = [
-        tuple(r) for r in bpe_learn(docs, n_merges=8).orderBy("rank").collect()
-    ]
-    assert got == want and len(want) == 8
