@@ -23,8 +23,9 @@ models.py-provisioned DB the lookups split as follows (FIXTURES.md §5):
   (swiss_invoice_extractor.py:171-182);
 * the LLM COMPANY load names ``erp_code``/``name`` — the columns are
   ``company_erp_code``/``company_name`` (models.py:20-24) → fails
-  (llm_enhanced_extractor.py:72-85), so ``find_company`` falls through
-  to its always-truthy default;
+  (llm_enhanced_extractor.py:72-85), so the LLM company lookup
+  (``llm._find_company_compiled``) falls through to its always-truthy
+  default;
 * Swiss COMPANY (``company_erp_code`` — exists, works,
   swiss_invoice_extractor.py:130-142) therefore NEVER wins the falsy
   coalesce: the LLM slot above it is always truthy.
@@ -36,15 +37,19 @@ fixed deployment would see.
 
 Which family fields the lattice reads, and why only those:
 
-* llm — every FIELDS slot it has. Its number (md5 fallback), currency
-  (CHF default) and supplier ("Fournisseur Inconnu" default) are never
-  falsy, so the reference's Swiss fallbacks and defaults behind them
-  (``INV-DEFAULT``, ``CHF``, the Swiss number and currency) are never
-  taken. Its company can be: an empty ``erp_code`` in the first company
-  row is the LLM default, and ``SITSE`` stands behind it.
+* llm — every FIELDS slot ``llm.extract`` has (its full record,
+  ``llm.extract_record``, adds the generic amount). Its number (md5
+  fallback), currency (CHF default) and supplier ("Fournisseur Inconnu"
+  default) are never falsy, so the reference's Swiss fallbacks and
+  defaults behind them (``INV-DEFAULT``, ``CHF``, the Swiss number and
+  currency) are never taken. Its company can be: an empty ``erp_code``
+  in the first company row is the LLM default, and ``SITSE`` stands
+  behind it.
 * swiss — only invoice_date (the LLM date is None when ``as_of_date`` is
   None and no date is found) and the three amounts (a ``0.00`` is falsy),
-  and only on the spans where one of those LLM slots is falsy.
+  and only on the spans where one of those LLM slots is falsy;
+  ``swiss.extract`` computes just those four, from the ``clean_swiss``
+  pass the llm family's ``clean_llm`` is derived from.
 * basic — line_items, siret, vat_number and confidence; ``basic.extract``
   computes just those four of its 27-field record.
 """
@@ -222,11 +227,12 @@ def fields_batch(
     base = resolved.reset_index(drop=True)
     contents = base["content"]
 
-    cleaned = textnorm.clean_llm(contents)  # one pass for llm and norm_text
+    swissed = textnorm.clean_swiss(contents)  # one pass for all but basic
+    cleaned = textnorm.llm_maps(swissed)  # clean_llm: llm and norm_text
     l = llm.extract(contents, as_of_date=as_of_date, companies=companies,
                     suppliers=suppliers, cleaned=cleaned)
     need = ~l[_SWISS_COLUMNS].astype(bool).all(axis=1)
-    s = swiss.extract(contents[need]) if need.any() else pd.DataFrame()
+    s = swiss.extract(swissed[need]) if need.any() else pd.DataFrame()
     s = (s.reindex(index=contents.index, columns=_SWISS_COLUMNS).astype(object)
          .where(lambda d: d.notna(), None))
     b = basic.extract(contents)
@@ -269,11 +275,12 @@ def fields_batch(
 def spans_from_fields(fields: pd.DataFrame) -> pd.DataFrame:
     """FIELDS_COLUMNS rows → flat output-span rows (SPAN_ROW_COLUMNS).
 
-    The Python reference for the JVM ``operators.extract.
-    span_rows_from_fields`` projection that lays out the pipeline's spans:
-    ``synth.expected_spans`` (the span-equality and stream==batch oracle)
-    composes it after ``fields_batch``. Column-list iteration, not
-    iterrows — pandas row views cost ~100 µs each.
+    The pandas restatement of the span layout the pipeline builds JVM-side
+    (``operators.extract.extracted_spans_from_fields``, one aggregation
+    over the FIELDS rows): ``synth.expected_spans`` (the span-equality
+    and stream==batch oracle) composes it after ``fields_batch``.
+    Column-list iteration, not iterrows — pandas row views cost ~100 µs
+    each.
     """
     field_kinds = [f"field:{name}" for name in FIELD_SPAN_ORDER]
     field_cols = [fields[name].tolist() for name in FIELD_SPAN_ORDER]

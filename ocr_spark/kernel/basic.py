@@ -19,6 +19,8 @@ The line-item literal gains a ``(?<![^\\d\\n])`` anchor, same ``findall``
 output: a match at p after a ``[^\\d\\n]`` char implies one at p-1 (same
 group-1 ends), which the scan tries first, and no match ends on a non-digit.
 It keeps ``([^\\d\\n]+)`` from retrying at every position of a run (quadratic).
+The SIRET and VAT scans run only on texts whose ``textnorm.fold`` holds
+their keywords (``textnorm.may_match``); without one they cannot match.
 
 :func:`extract` gives the four fields the merge lattice reads and
 :func:`extract_record` the reference's full 27-field record: both are batch
@@ -32,7 +34,7 @@ from datetime import date, datetime
 
 import pandas as pd
 
-from ocr_spark.kernel.textnorm import clean_basic
+from ocr_spark.kernel.textnorm import clean_basic, fold, keys, may_match
 
 # --- pattern registry (regex literals are the reference's spec;
 #     cited per-pattern) -----------------------------------------------------
@@ -46,6 +48,8 @@ _INVOICE_NUMBER_PATTERNS = [
 # data_extractor.py:69-82
 _SIRET_RX = re.compile(r"(?:siret|siren)[\s:]*(\d{9,14})", re.I)
 _VAT_RX = re.compile(r"(?:tva|vat)[\s:]*([A-Z]{2}\d{11})", re.I)
+_SIRET_GATE = keys("siret", "siren")
+_VAT_GATE = keys("tva", "vat")
 # data_extractor.py:310, behind a (?<![^\d\n]) anchor (module docstring)
 _LINE_ITEM_RX = re.compile(
     r"(?<![^\d\n])([^\d\n]+)\s+(\d+(?:[,\.]\d+)?)\s+(\d+(?:[,\.]\d{2})?)\s+(\d+(?:[,\.]\d{2})?)"
@@ -200,17 +204,19 @@ def confidence(cleaned: str) -> float:
     return min(sum(1 for k in _CONFIDENCE_KEYWORDS if k in low) / len(_CONFIDENCE_KEYWORDS), 1.0)
 
 
-def siret(cleaned: str) -> str | None:
-    return _first_group([_SIRET_RX], cleaned)
+def siret(cleaned: str, low: str | None) -> str | None:
+    """SIRET/SIREN of one cleaned text; ``low`` is ``fold(cleaned)``."""
+    return _first_group([_SIRET_RX], cleaned) if may_match(low, _SIRET_GATE) else None
 
 
-def vat_number(cleaned: str) -> str | None:
-    return _first_group([_VAT_RX], cleaned)
+def vat_number(cleaned: str, low: str | None) -> str | None:
+    return _first_group([_VAT_RX], cleaned) if may_match(low, _VAT_GATE) else None
 
 
 def _record(cleaned: str) -> dict:
     """Full basic extraction for one already-cleaned document text."""
     lines = cleaned.split("\n")
+    low = fold(cleaned)
 
     # supplier (data_extractor.py:149-195)
     sup_section = _supplier_section(lines)
@@ -279,8 +285,8 @@ def _record(cleaned: str) -> dict:
 
     return {
         "supplier_name": supplier_name,
-        "siret": siret(cleaned),
-        "vat_number": vat_number(cleaned),
+        "siret": siret(cleaned, low),
+        "vat_number": vat_number(cleaned, low),
         "supplier_street": sup_addr.get("street"),
         "supplier_postal_code": sup_addr.get("postal_code"),
         "supplier_city": sup_addr.get("city"),
@@ -311,9 +317,17 @@ def _record(cleaned: str) -> dict:
 def extract(texts: pd.Series) -> pd.DataFrame:
     """The four fields ``assemble.fields_batch`` reads, one row per text;
     the other 23 of the record (:func:`extract_record`) are not computed."""
-    steps = (line_items, siret, vat_number, confidence)
     cleaned = clean_basic(texts)
-    return pd.DataFrame({f.__name__: cleaned.map(f) for f in steps}, index=texts.index)
+    folds = [fold(c) for c in cleaned]
+    return pd.DataFrame(
+        {
+            "line_items": cleaned.map(line_items),
+            "siret": [siret(c, low) for c, low in zip(cleaned, folds)],
+            "vat_number": [vat_number(c, low) for c, low in zip(cleaned, folds)],
+            "confidence": cleaned.map(confidence),
+        },
+        index=texts.index,
+    )
 
 
 def extract_record(texts: pd.Series) -> pd.DataFrame:

@@ -18,6 +18,10 @@ Verified quirks preserved (SURVEY.md §5.3 / FIXTURES.md §3):
   (the reference's dead branch at line 288) — it stays in amount_generic;
 * company/supplier matching is first-match-wins in dimension load order,
   ERP-code containment before name-prefix word match (lines 310-370).
+
+A scan whose pattern needs a keyword runs only when the span's
+``textnorm.fold`` holds one (``textnorm.may_match``): without it the
+pattern cannot match, so every result is the ungated one.
 """
 
 from __future__ import annotations
@@ -29,30 +33,27 @@ from decimal import Decimal, InvalidOperation
 
 import pandas as pd
 
-from ocr_spark.kernel.textnorm import clean_llm
+from ocr_spark.kernel.textnorm import clean_llm, fold, keys, may_match
 
-# llm_enhanced_extractor.py:148-156 — primary ("facture"-adjacent) patterns
-_NUMBER_PRIMARY = [
-    re.compile(p, re.I)
-    for p in (
-        r"facture\s*:?\s*n[°o]?\s*:?\s*([A-Z0-9\-/\s]{3,25})",
-        r"n[°o]\s*de\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})",
-        r"n[°o]\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})",
-        r"facture\s+([A-Z0-9\-/\s]{3,25})",
-        r"([A-Z0-9\-/\s]{3,25})\s*facture",
-        r"numéro\s*de\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})",
-    )
-]
-# llm_enhanced_extractor.py:168-175 — secondary patterns
-_NUMBER_SECONDARY = [
-    re.compile(p, re.I)
-    for p in (
-        r"(?:FACTURE|INVOICE|Réf\.?|Reference)\s*:?\s*([A-Z0-9\-/\s]{3,25})",
-        r"([A-Z]{2,5}[\-\s]*\d{4,})",
-        r"(\d{4,}[\-/]\d{2,}[\-/]?\d*)",
-        r"([A-Z]+\d{6,})",
-        r"(FAC[\-\s]*[A-Z0-9]{3,})",
-        r"(\d{8,})",
+# llm_enhanced_extractor.py:148-156 — primary ("facture"-adjacent) patterns,
+# then :168-175 the secondary ones, each with its gate keys (None: ungated)
+_FACTURE = keys("facture")
+_NUMBER_CASCADE = [
+    (re.compile(p, re.I), gate)
+    for p, gate in (
+        (r"facture\s*:?\s*n[°o]?\s*:?\s*([A-Z0-9\-/\s]{3,25})", _FACTURE),
+        (r"n[°o]\s*de\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})", _FACTURE),
+        (r"n[°o]\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})", _FACTURE),
+        (r"facture\s+([A-Z0-9\-/\s]{3,25})", _FACTURE),
+        (r"([A-Z0-9\-/\s]{3,25})\s*facture", _FACTURE),
+        (r"numéro\s*de\s*facture\s*:?\s*([A-Z0-9\-/\s]{3,25})", keys("numéro+facture")),
+        (r"(?:FACTURE|INVOICE|Réf\.?|Reference)\s*:?\s*([A-Z0-9\-/\s]{3,25})",
+         keys("facture", "invoice", "réf", "reference")),
+        (r"([A-Z]{2,5}[\-\s]*\d{4,})", None),
+        (r"(\d{4,}[\-/]\d{2,}[\-/]?\d*)", None),
+        (r"([A-Z]+\d{6,})", None),
+        (r"(FAC[\-\s]*[A-Z0-9]{3,})", keys("fac")),
+        (r"(\d{8,})", None),
     )
 ]
 # llm_enhanced_extractor.py:198-202
@@ -70,43 +71,55 @@ _MONTHS = {
     "juillet": 7, "août": 8, "septembre": 9, "octobre": 10, "novembre": 11,
     "décembre": 12,
 }
-# llm_enhanced_extractor.py:250-259 — ordered (pattern, slot) pairs
+_DATE_FRENCH_GATE = keys(*_MONTHS)
+# llm_enhanced_extractor.py:250-259 — ordered (pattern, slot, gate) triples;
+# ``extract`` skips the last (amount_generic), which the lattice never reads
 _AMOUNT_PATTERNS = [
-    (re.compile(r"(?:TOTAL\s+TTC|Total\s+TTC|MONTANT\s+TTC|À\s+PAYER|TOTAL\s+DU\s+DÉCOMPTE)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I), "total_ttc"),
-    (re.compile(r"(?:TOTAL\s+HT|Total\s+HT|MONTANT\s+HT|SOUS[\-\s]TOTAL)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I), "total_ht"),
-    (re.compile(r"(?:TVA|T\.V\.A|TAXE)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I), "tva"),
-    (re.compile(r"(?:CHF|EUR|USD)\s*([\d\s\'.,]+)", re.I), "amount_generic"),
+    (re.compile(r"(?:TOTAL\s+TTC|Total\s+TTC|MONTANT\s+TTC|À\s+PAYER|TOTAL\s+DU\s+DÉCOMPTE)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I),
+     "total_ttc", keys("ttc", "payer", "décompte")),
+    (re.compile(r"(?:TOTAL\s+HT|Total\s+HT|MONTANT\s+HT|SOUS[\-\s]TOTAL)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I),
+     "total_ht", keys("total+ht", "montant+ht", "sous+total")),
+    (re.compile(r"(?:TVA|T\.V\.A|TAXE)[\s:]*(?:CHF|EUR|USD)?\s*([\d\s\'.,]+)", re.I),
+     "tva", keys("tva", "t.v.a", "taxe")),
+    (re.compile(r"(?:CHF|EUR|USD)\s*([\d\s\'.,]+)", re.I),
+     "amount_generic", keys("chf", "eur", "usd")),
 ]
 _AMOUNT_JUNK = re.compile(r"[\s']")
 # llm_enhanced_extractor.py:374-378
 _CURRENCY_PATTERNS = [
-    re.compile(r"\b(CHF|EUR|USD|GBP)\b", re.I),
-    re.compile(r"(Francs?\s+suisses?)", re.I),
-    re.compile(r"(Euros?)", re.I),
+    (re.compile(r"\b(CHF|EUR|USD|GBP)\b", re.I), keys("chf", "eur", "usd", "gbp")),
+    (re.compile(r"(Francs?\s+suisses?)", re.I), keys("franc+suisse")),
+    (re.compile(r"(Euros?)", re.I), keys("euro")),
 ]
-# llm_enhanced_extractor.py:399-406
+# llm_enhanced_extractor.py:399-406 (case-sensitive: gated on "@")
 _EMAIL_RX = re.compile(r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b")
 _PHONE_RXS = [
     re.compile(r"\+41\s*\d{2}\s*\d{3}\s*\d{2}\s*\d{2}"),
     re.compile(r"0\d{2}\s*\d{3}\s*\d{2}\s*\d{2}"),
 ]
-# llm_enhanced_extractor.py:358-361
+# llm_enhanced_extractor.py:358-361 — case-sensitive, so gated on literal
+# keys in the text itself (SARL and SAS contain SA)
 _SUPPLIER_GENERIC = [
-    re.compile(r"(?:De|From|Fournisseur|Supplier)[\s:]+([A-Z][A-Za-z\s&]{5,30})"),
-    re.compile(r"([A-Z][A-Za-z\s&]{5,30})\s+(?:SA|SARL|SAS|AG|GmbH)"),
+    (re.compile(r"(?:De|From|Fournisseur|Supplier)[\s:]+([A-Z][A-Za-z\s&]{5,30})"),
+     keys("De", "From", "Fournisseur", "Supplier")),
+    (re.compile(r"([A-Z][A-Za-z\s&]{5,30})\s+(?:SA|SARL|SAS|AG|GmbH)"),
+     keys("SA", "AG", "GmbH")),
 ]
 
 _WS = re.compile(r"\s+")
 
 
-def extract_invoice_number(text: str) -> str:
-    """X2 cascade with determinized fallback (FIXTURES.md §5).
+def extract_invoice_number(text: str, low: str | None) -> str:
+    """X2 cascade with determinized fallback (FIXTURES.md §5); ``low`` is
+    ``fold(text)``.
 
     finditer, not findall: the cascade takes the FIRST acceptable match,
     so lazy iteration short-circuits instead of materializing every
     match in the document (profiled: findall across the cascades was the
     single largest kernel cost; match order is identical)."""
-    for rx in _NUMBER_PRIMARY + _NUMBER_SECONDARY:
+    for rx, gate in _NUMBER_CASCADE:
+        if not may_match(low, gate):
+            continue
         for m in rx.finditer(text):
             clean = _WS.sub("", m.group(1).strip())
             if len(clean) >= 3:
@@ -114,7 +127,7 @@ def extract_invoice_number(text: str) -> str:
     return f"INV-{hashlib.md5(text.encode()).hexdigest()[:8]}"
 
 
-def extract_dates(text: str, as_of_date: date) -> tuple[date | None, date | None]:
+def extract_dates(text: str, low: str | None, as_of_date: date) -> tuple[date | None, date | None]:
     """D2: collect plausible dates, sort; first=invoice, last=due."""
     found: list[date] = []
     for rx in _DATE_NUMERIC:
@@ -130,7 +143,8 @@ def extract_dates(text: str, as_of_date: date) -> tuple[date | None, date | None
                     found.append(date(year, month, day))
                 except ValueError:
                     continue
-    for d, name, y in _DATE_FRENCH.findall(text):
+    french = _DATE_FRENCH.findall(text) if may_match(low, _DATE_FRENCH_GATE) else ()
+    for d, name, y in french:
         month = _MONTHS.get(name.lower(), 1)
         try:
             day, year = int(d), int(y)
@@ -156,11 +170,11 @@ def _plausible(raw: str) -> Decimal | None:
     return v if Decimal("0.01") <= v <= Decimal("999999.99") else None
 
 
-def extract_amounts(text: str) -> dict[str, Decimal]:
+def extract_amounts(text: str, low: str | None, patterns) -> dict[str, Decimal]:
     """M3 context patterns + M4 derivation lattice + default."""
     amounts: dict[str, Decimal] = {}
-    for rx, slot in _AMOUNT_PATTERNS:
-        if slot in amounts:
+    for rx, slot, gate in patterns:
+        if slot in amounts or not may_match(low, gate):
             continue
         for m in rx.finditer(text):  # first plausible wins — lazy scan
             v = _plausible(m.group(1))
@@ -195,10 +209,10 @@ def clamp_due_date(invoice_date: date | None, due_date: date | None) -> date | N
     return due_date
 
 
-def extract_currency(text: str) -> str:
+def extract_currency(text: str, low: str | None) -> str:
     """X12: code word → franc/euro spelling → default CHF."""
-    for rx in _CURRENCY_PATTERNS:
-        m = rx.search(text)
+    for rx, gate in _CURRENCY_PATTERNS:
+        m = rx.search(text) if may_match(low, gate) else None
         if m:
             cur = m.group(1).upper()
             if cur in ("CHF", "EUR", "USD", "GBP"):
@@ -211,7 +225,7 @@ def extract_currency(text: str) -> str:
 
 
 def extract_contact(text: str) -> tuple[str | None, str | None]:
-    m = _EMAIL_RX.search(text)
+    m = _EMAIL_RX.search(text) if "@" in text else None
     email = m.group(0) if m else None
     phone = None
     for rx in _PHONE_RXS:
@@ -241,6 +255,9 @@ def _compile_company_dims(companies: list[dict]) -> list[tuple[str, "re.Pattern 
 
 
 def _find_company_compiled(text: str, dims, companies: list[dict]) -> str | None:
+    """J1/J2: first company (dim order) whose ERP code appears in the text,
+    or whose 2-3 leading name words appear word-bounded; default = first
+    dim row's ERP code (llm_enhanced_extractor.py:310-336)."""
     for erp, erp_rx, words_rx in dims:
         if erp_rx and erp_rx.search(text):
             return erp
@@ -249,13 +266,6 @@ def _find_company_compiled(text: str, dims, companies: list[dict]) -> str | None
     if companies:
         return companies[0]["erp_code"]
     return "DEFAULT_COMPANY"
-
-
-def find_company(text: str, companies: list[dict]) -> str | None:
-    """J1/J2: first company (dim order) whose ERP code appears in the text,
-    or whose 2-3 leading name words appear word-bounded; default = first
-    dim row's ERP code (llm_enhanced_extractor.py:310-336)."""
-    return _find_company_compiled(text, _compile_company_dims(companies), companies)
 
 
 def _compile_supplier_dims(suppliers: list[dict]) -> list[tuple[str, "re.Pattern", "re.Pattern"]]:
@@ -280,42 +290,38 @@ def _find_supplier_compiled(text: str, dims) -> str | None:
             return name
         if word_rx and word_rx.search(text):
             return name
-    for rx in _SUPPLIER_GENERIC:
-        m = rx.search(text)
+    for rx, gate in _SUPPLIER_GENERIC:
+        m = rx.search(text) if may_match(text, gate) else None
         if m:
             return m.group(1).strip()
     return "Fournisseur Inconnu"
 
 
-def extract(
-    texts: pd.Series,
-    as_of_date: date = date(2025, 8, 19),
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    cleaned: pd.Series | None = None,
-) -> pd.DataFrame:
-    """Batch LLM-family extraction: Series[str] -> DataFrame.
+_RECORD_COLUMNS = [
+    "invoice_number", "invoice_date", "due_date", "currency", "total_ht", "tva",
+    "total_ttc", "amount_generic", "company_erp_code", "supplier_name", "email", "phone",
+]
 
-    Output money columns are Decimal (or None); dates are datetime.date.
-    ``cleaned`` is ``clean_llm(texts)`` when the caller already has it.
-    """
+
+def _frame(texts, as_of_date, companies, suppliers, cleaned, generic: bool) -> pd.DataFrame:
     cleaned = clean_llm(texts) if cleaned is None else cleaned
     companies = companies or []
-    suppliers = suppliers or []
     company_dims = _compile_company_dims(companies)
-    supplier_dims = _compile_supplier_dims(suppliers)
+    supplier_dims = _compile_supplier_dims(suppliers or [])
+    patterns = _AMOUNT_PATTERNS if generic else _AMOUNT_PATTERNS[:-1]
     records = []
     for text in cleaned:
-        inv_date, due = extract_dates(text, as_of_date)
+        low = fold(text)
+        inv_date, due = extract_dates(text, low, as_of_date)
         due = clamp_due_date(inv_date, due)
-        amounts = validate_amounts(extract_amounts(text))
+        amounts = validate_amounts(extract_amounts(text, low, patterns))
         email, phone = extract_contact(text)
         records.append(
             {
-                "invoice_number": extract_invoice_number(text),
+                "invoice_number": extract_invoice_number(text, low),
                 "invoice_date": inv_date,
                 "due_date": due,
-                "currency": extract_currency(text),
+                "currency": extract_currency(text, low),
                 "total_ht": amounts.get("total_ht"),
                 "tva": amounts.get("tva"),
                 "total_ttc": amounts.get("total_ttc"),
@@ -326,6 +332,36 @@ def extract(
                 "phone": phone,
             }
         )
-    df = pd.DataFrame.from_records(records)
+    columns = _RECORD_COLUMNS if generic else [c for c in _RECORD_COLUMNS if c != "amount_generic"]
+    df = pd.DataFrame.from_records(records, columns=columns)
     df.index = texts.index
     return df
+
+
+def extract(
+    texts: pd.Series,
+    as_of_date: date = date(2025, 8, 19),
+    companies: list[dict] | None = None,
+    suppliers: list[dict] | None = None,
+    cleaned: pd.Series | None = None,
+) -> pd.DataFrame:
+    """The LLM-family columns ``assemble.fields_batch`` reads: the record of
+    :func:`extract_record` without the ``amount_generic`` scan. Where that
+    scan alone found an amount, ``total_ttc`` is the ``0.00`` default here
+    and None in the record; the merge lattice treats both as absent.
+
+    Output money columns are Decimal (or None); dates are datetime.date.
+    ``cleaned`` is ``clean_llm(texts)`` when the caller already has it.
+    """
+    return _frame(texts, as_of_date, companies, suppliers, cleaned, generic=False)
+
+
+def extract_record(
+    texts: pd.Series,
+    as_of_date: date = date(2025, 8, 19),
+    companies: list[dict] | None = None,
+    suppliers: list[dict] | None = None,
+    cleaned: pd.Series | None = None,
+) -> pd.DataFrame:
+    """The reference's full LLM-family record, one row per text."""
+    return _frame(texts, as_of_date, companies, suppliers, cleaned, generic=True)

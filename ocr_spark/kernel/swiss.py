@@ -114,22 +114,27 @@ def extract_amounts(text: str) -> dict[str, Decimal | None]:
     return amounts
 
 
-def extract(texts: pd.Series) -> pd.DataFrame:
-    """Batch Swiss extraction: Series[str] -> DataFrame."""
-    cleaned = clean_swiss(texts)
-    records = []
-    for text in cleaned:
-        amounts = extract_amounts(text)
-        records.append(
-            {
-                "invoice_number": extract_invoice_number(text),
-                "invoice_date": extract_date(text),
-                "currency": extract_currency(text),
-                "total_ttc": amounts["total_ttc"],
-                "total_ht": amounts["total_ht"],
-                "tva": amounts["tva"],
-            }
-        )
-    df = pd.DataFrame.from_records(records)
-    df.index = texts.index
-    return df
+def _lattice_frame(swissed: pd.Series) -> pd.DataFrame:
+    amounts = [extract_amounts(t) for t in swissed]
+    return pd.DataFrame(
+        {
+            "invoice_date": [extract_date(t) for t in swissed],
+            **{slot: [a[slot] for a in amounts] for slot in _AMOUNT_PATTERNS},
+        },
+        index=swissed.index,
+    )
+
+
+def extract(swissed: pd.Series) -> pd.DataFrame:
+    """The Swiss-family columns ``assemble.fields_batch`` reads
+    (invoice_date and the three amounts), from ``clean_swiss`` rows."""
+    return _lattice_frame(swissed)
+
+
+def extract_record(texts: pd.Series) -> pd.DataFrame:
+    """The reference's full Swiss-family record, one row per raw text."""
+    swissed = clean_swiss(texts)
+    out = _lattice_frame(swissed)
+    out.insert(0, "invoice_number", [extract_invoice_number(t) for t in swissed])
+    out.insert(2, "currency", [extract_currency(t) for t in swissed])
+    return out

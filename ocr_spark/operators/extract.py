@@ -11,8 +11,14 @@ streaming runs (``fields_dataflow``):
       │       groupBy(doc_id, offset).applyInPandas(reassemble)
       ├─ mapInPandas(kernel.fields_batch)  — vectorized extraction
       │       (T*, X*, D*, M* families + merge lattice)     (EP1 steps 4-9)
-      ├─ extracted_spans: span_rows_from_fields → groupBy(doc_id) (JVM)
-      └─ invoices: typed flat projection (DecimalType money, DateType)
+      ├─ extracted_spans: groupBy(doc_id) of each row's span array (JVM)
+      └─ invoices, goals, ml_data: typed flat projections
+
+Each output plan is one SQL-expression projection or aggregation
+(``selectExpr`` / ``F.expr``), not a chain of column-DSL calls: on
+PySpark 4 each ``F.*`` call is a dozen py4j round trips and each Dataset
+construction a JVM analysis, a fixed cost every pass and every
+streaming micro-batch pays on the driver.
 
 All Python stages are Arrow-batched (`mapInPandas` / `applyInPandas`);
 there is no per-row Python anywhere.  Dimension data (company/supplier)
@@ -77,16 +83,15 @@ _RESOLVED_SCHEMA = T.StructType(
 )
 
 def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans[]) → one row per span."""
-    return documents.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    """documents(doc_id, spans[]) → one row per span
+    (doc_id, kind, text, media_ref, offset)."""
+    return documents.selectExpr("doc_id", "inline(spans)")
+
+
+_PAYLOAD_JOIN_SQL = (
+    "CASE WHEN kind IN ('pdf', 'image') AND media_ref IS NOT NULL THEN media_ref"
+    " ELSE concat('\\u0000txt:', doc_id, ':', CAST(offset AS STRING)) END = _payload_ref"
+)
 
 
 def attach_payloads(span_rows: DataFrame, media: DataFrame | None) -> DataFrame:
@@ -111,19 +116,9 @@ def attach_payloads(span_rows: DataFrame, media: DataFrame | None) -> DataFrame:
     synthetic keys keep it skew-free.
     """
     if media is None:
-        return span_rows.withColumn("payload", F.lit(None).cast(T.BinaryType()))
-    is_media = F.col("kind").isin("pdf", "image")
-    join_key = F.when(
-        is_media & F.col("media_ref").isNotNull(), F.col("media_ref")
-    ).otherwise(
-        F.concat(F.lit("\x00txt:"), F.col("doc_id"), F.lit(":"), F.col("offset").cast("string"))
-    )
-    m = F.broadcast(media.select(F.col("media_ref").alias("_payload_ref"), "payload"))
-    return (
-        span_rows.withColumn("_jk", join_key)
-        .join(m, F.col("_jk") == F.col("_payload_ref"), "left")
-        .drop("_jk", "_payload_ref")
-    )
+        return span_rows.selectExpr("*", "CAST(NULL AS BINARY) AS payload")
+    m = media.selectExpr("media_ref AS _payload_ref", "payload").hint("broadcast")
+    return span_rows.join(m, F.expr(_PAYLOAD_JOIN_SQL), "left").drop("_payload_ref")
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> DataFrame:
@@ -137,7 +132,7 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     AQE's byte-based coalescing would serialize it (measured: the whole
     big-PDF branch coalesced into ONE task).
     """
-    return df.repartition(num_partitions, F.xxhash64(F.col("doc_id"), F.lit(salt)))
+    return df.repartition(num_partitions, F.expr(f"xxhash64(doc_id, {int(salt)})"))
 
 
 def _fields_map(
@@ -233,46 +228,37 @@ _SPAN_ARRAY_SQL = (
     )
     + "), s -> s.text IS NOT NULL))"
 )
+# per FIELDS row its spans as (offset, seq, kind, text, media_ref) structs;
+# per doc every row's array, sorted, as (kind, text, media_ref, offset)
+_SPANS_AGG_SQL = (
+    "transform(array_sort(flatten(collect_list(transform("
+    + _SPAN_ARRAY_SQL
+    + ", (s, i) -> named_struct('offset', offset, 'seq', i, 'kind', s.kind,"
+    " 'text', s.text, 'media_ref', s.media_ref))))), s -> named_struct("
+    "'kind', s.kind, 'text', s.text, 'media_ref', s.media_ref, 'offset', s.offset)) AS spans"
+)
 
 
-def span_rows_from_fields(fields_rows: DataFrame) -> DataFrame:
-    """FIELDS rows → output span rows in PURE JVM (no Python stage).
+def extracted_spans_from_fields(fields_rows: DataFrame) -> DataFrame:
+    """FIELDS rows → extracted_spans(doc_id, spans[]) in PURE JVM (no
+    Python stage), the layout ``assemble.spans_from_fields`` restates in
+    pandas (tested equal via the e2e span-equality suite): per FIELDS row,
+    one 'text' span (seq 0, norm_text, media_ref carried) then one
+    ``field:<name>`` span per non-null field in FIELD_SPAN_ORDER (seq
+    dense from 1, media_ref ""), each doc's spans sorted by (offset, seq).
 
-    Exact twin of the kernel's ``spans_from_fields`` (tested equal via the
-    e2e span-equality suite): per FIELDS row, one 'text' span (seq 0,
-    norm_text, media_ref carried) then one ``field:<name>`` span per
-    non-null field in FIELD_SPAN_ORDER (seq dense from 1, media_ref "").
-    Field values are already strings in the FIELDS schema, so no cast can
-    diverge from the kernel's str().  Keeping this JVM-side means the
-    spans output costs no second Arrow round-trip over the cached FIELDS
-    frame.  The generator lives in its own projection — posexplode beside
-    struct-field access strips struct names during the Generate rewrite
-    (measured round 1)."""
-    return (
-        fields_rows.selectExpr("doc_id", "offset", f"{_SPAN_ARRAY_SQL} AS _arr")
-        .selectExpr("doc_id", "offset", "posexplode(_arr) AS (seq, s)")
-        .selectExpr(
-            "doc_id", "offset", "seq",
-            "s.kind AS kind", "s.text AS text", "s.media_ref AS media_ref",
-        )
-    )
+    The aggregation collects each FIELDS row's span array, so no span row
+    is ever generated: the doc_id shuffle carries one entry per FIELDS
+    row, not one per output span, and the plan is one Dataset. Field
+    values are already strings in the FIELDS schema, so no cast can
+    diverge from the kernel's str(), and the spans output costs no second
+    Arrow round-trip over the cached FIELDS frame."""
+    return fields_rows.groupBy("doc_id").agg(F.expr(_SPANS_AGG_SQL))
 
 
-def assemble_spans_table(span_rows: DataFrame) -> DataFrame:
-    """Output span rows → extracted_spans(doc_id, spans[]), JVM-native."""
-    ordered = F.array_sort(
-        F.collect_list(F.struct("offset", "seq", "kind", "text", "media_ref"))
-    )
-    spans = F.transform(
-        ordered,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return span_rows.groupBy("doc_id").agg(spans.alias("spans"))
+# deterministic ids replace the reference's uuid4 (FIXTURES.md §5)
+_INVOICE_ID_SQL = "sha2(concat_ws('|', doc_id, CAST(offset AS STRING)), 256)"
+_TTC_DECIMAL_SQL = "CAST(total_ttc AS DECIMAL(10,2))"
 
 
 def invoices_from_fields(fields_rows: DataFrame) -> DataFrame:
@@ -286,25 +272,25 @@ def invoices_from_fields(fields_rows: DataFrame) -> DataFrame:
     Deterministic ids replace the reference's uuid4
     (src/services/invoice_service.py:34 → sha2, FIXTURES.md §5).
     """
-    return fields_rows.select(
-        F.sha2(F.concat_ws("|", "doc_id", F.col("offset").cast("string")), 256).alias("invoice_id"),
+    return fields_rows.selectExpr(
+        f"{_INVOICE_ID_SQL} AS invoice_id",
         "doc_id",
         "invoice_number",
-        F.to_date("invoice_date").alias("invoice_date"),
-        F.to_date("due_date").alias("due_date"),
-        F.col("currency").alias("currency_code"),
+        "to_date(invoice_date) AS invoice_date",
+        "to_date(due_date) AS due_date",
+        "currency AS currency_code",
         "supplier_name",
         "company_erp_code",
-        F.col("total_ht").cast(T.DecimalType(10, 2)).alias("excluding_taxes"),
-        F.col("tva").cast(T.DecimalType(10, 2)).alias("taxes"),
-        F.col("total_ttc").cast(T.DecimalType(10, 2)).alias("including_taxes"),
-        F.col("amount_due").cast(T.DecimalType(10, 2)).alias("amount_due"),
+        "CAST(total_ht AS DECIMAL(10,2)) AS excluding_taxes",
+        "CAST(tva AS DECIMAL(10,2)) AS taxes",
+        f"{_TTC_DECIMAL_SQL} AS including_taxes",
+        "CAST(amount_due AS DECIMAL(10,2)) AS amount_due",
         "confidence",
-        F.lit("DRAFT").alias("payment_state"),
-        F.lit(False).alias("completed"),
-        F.lit(True).alias("draft"),
-        F.array().cast(T.ArrayType(T.StringType())).alias("state_validations"),
-        F.array(F.col("doc_id")).alias("document_urls"),
+        "'DRAFT' AS payment_state",
+        "false AS completed",
+        "true AS draft",
+        "CAST(array() AS ARRAY<STRING>) AS state_validations",
+        "array(doc_id) AS document_urls",
         "line_items",
     )
 
@@ -314,18 +300,31 @@ def invoice_goals_from_fields(fields_rows: DataFrame) -> DataFrame:
     goal per invoice whose TTC is truthy (the 0.00 lattice default creates
     none — the reference's `if amount:` gate), amount = including_taxes.
     Goal ids determinized like invoice ids (uuid4 → sha2)."""
-    ttc = F.col("total_ttc").cast(T.DecimalType(10, 2))
-    inv_id = F.sha2(
-        F.concat_ws("|", "doc_id", F.col("offset").cast("string")), 256
+    return fields_rows.where(
+        f"{_TTC_DECIMAL_SQL} IS NOT NULL AND {_TTC_DECIMAL_SQL} != 0"
+    ).selectExpr(
+        f"sha2(concat({_INVOICE_ID_SQL}, ':goal'), 256) AS goal_id",
+        f"{_INVOICE_ID_SQL} AS invoice_id",
+        f"{_TTC_DECIMAL_SQL} AS amount",
     )
-    return (
-        fields_rows.filter(ttc.isNotNull() & (ttc != 0))
-        .select(
-            F.sha2(F.concat(inv_id, F.lit(":goal")), 256).alias("goal_id"),
-            inv_id.alias("invoice_id"),
-            ttc.alias("amount"),
-        )
-    )
+
+
+def _present(col: str) -> str:
+    # float truthiness: 0.0 counts as absent
+    return f"(CAST({col} AS DOUBLE) IS NOT NULL AND CAST({col} AS DOUBLE) != 0)"
+
+
+_QUALITY_SQL = (
+    "(CASE WHEN invoice_number IS NOT NULL AND invoice_number != '' THEN 1 ELSE 0 END"
+    f" + CASE WHEN {_present('total_ttc')} THEN 1 ELSE 0 END"
+    " + CASE WHEN supplier_name IS NOT NULL AND supplier_name != '' THEN 1 ELSE 0 END"
+    " + CASE WHEN invoice_date IS NOT NULL THEN 1 ELSE 0 END) / 4.0D"
+)
+_EXTRACTED_DATA_FIELDS = (
+    "invoice_number", "invoice_date", "due_date", "currency", "total_ht", "tva",
+    "total_ttc", "amount_due", "siret", "vat_number", "supplier_name",
+    "company_erp_code", "email", "phone", "line_items",
+)
 
 
 def ml_data_from_fields(fields_rows: DataFrame) -> DataFrame:
@@ -354,47 +353,28 @@ def ml_data_from_fields(fields_rows: DataFrame) -> DataFrame:
     doubles the FIELDS payload); jobs/extract.py sets it automatically
     when ``--ml-data-out`` is given.
     """
-    ht = F.col("total_ht").cast("double")
-    tva = F.col("tva").cast("double")
-    ttc = F.col("total_ttc").cast("double")
-    present = lambda c: c.isNotNull() & (c != 0)  # noqa: E731 — float-truthy
-    quality = (
-        F.when(F.col("invoice_number").isNotNull() & (F.col("invoice_number") != ""), 1).otherwise(0)
-        + F.when(present(ttc), 1).otherwise(0)
-        + F.when(F.col("supplier_name").isNotNull() & (F.col("supplier_name") != ""), 1).otherwise(0)
-        + F.when(F.col("invoice_date").isNotNull(), 1).otherwise(0)
-    ) / F.lit(4.0)
+    data = ", ".join(f"'{c}', {c}" for c in _EXTRACTED_DATA_FIELDS)
+    blob = (
+        f"to_json(named_struct('extracted_data', named_struct({data}),"
+        " 'confidence_score', confidence, 'processing_time', 0.0D,"
+        f" 'validation_score', {_QUALITY_SQL}, 'filename', doc_id))"
+    )
     calc_check = (
-        present(ht) & present(tva) & present(ttc)
-        & (F.abs(ht + tva - ttc) <= 0.01)
+        f"{_present('total_ht')} AND {_present('tva')} AND {_present('total_ttc')}"
+        " AND abs(CAST(total_ht AS DOUBLE) + CAST(tva AS DOUBLE)"
+        " - CAST(total_ttc AS DOUBLE)) <= 0.01D"
     )
-    blob = F.to_json(
-        F.struct(
-            F.struct(
-                "invoice_number", "invoice_date", "due_date", "currency",
-                "total_ht", "tva", "total_ttc", "amount_due", "siret",
-                "vat_number", "supplier_name", "company_erp_code", "email",
-                "phone", "line_items",
-            ).alias("extracted_data"),
-            F.col("confidence").alias("confidence_score"),
-            F.lit(0.0).alias("processing_time"),
-            quality.alias("validation_score"),
-            F.col("doc_id").alias("filename"),
-        )
-    )
-    return fields_rows.select(
-        F.sha2(
-            F.concat_ws("|", "doc_id", F.col("offset").cast("string"), F.lit("ml")), 256
-        ).alias("ml_id"),
+    return fields_rows.selectExpr(
+        "sha2(concat_ws('|', doc_id, CAST(offset AS STRING), 'ml'), 256) AS ml_id",
         "doc_id",
         "raw_text",
-        blob.alias("extracted_data"),
-        F.col("confidence").alias("confidence_score"),
-        F.lit(0.0).alias("processing_time"),
-        quality.alias("validation_score"),
-        quality.alias("data_quality_score"),
-        calc_check.alias("ml_calculation_check"),
-        (quality >= 0.5).alias("ml_required_fields_present"),
+        f"{blob} AS extracted_data",
+        "confidence AS confidence_score",
+        "0.0D AS processing_time",
+        f"{_QUALITY_SQL} AS validation_score",
+        f"{_QUALITY_SQL} AS data_quality_score",
+        f"{calc_check} AS ml_calculation_check",
+        f"{_QUALITY_SQL} >= 0.5D AS ml_required_fields_present",
     )
 
 
@@ -411,7 +391,7 @@ class PipelineFrames:
 
     @cached_property
     def extracted_spans(self) -> DataFrame:
-        return assemble_spans_table(span_rows_from_fields(self.fields))
+        return extracted_spans_from_fields(self.fields)
 
     @cached_property
     def invoices(self) -> DataFrame:
@@ -455,7 +435,7 @@ def build_pipeline(
     twice, and the invoices branch ignored ``page_split_bytes`` entirely
     (VERDICT r01 / ADVICE r01).  Now a single FIELDS-producing stage
     (paged or not) is persisted and every output derives from it by a
-    pure JVM projection (spans via span_rows_from_fields).
+    pure JVM projection (spans via extracted_spans_from_fields).
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))

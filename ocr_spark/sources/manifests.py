@@ -28,7 +28,6 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,17 +78,6 @@ def _load_filestats(out_dir: str, epoch: str) -> dict[str, str] | None:
 
 def _compactions_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "compactions")
-
-
-def _is_path_missing(e: AnalysisException) -> bool:
-    """True only for the no-such-path analysis error.  Everything else
-    (transient IO, schema corruption, permissions) must PROPAGATE: ADVICE
-    r02 — swallowing a genuine read failure after a successful data append
-    would skip the manifest rows for buckets that WERE committed, and the
-    next retry's anti-join would re-append them (duplicate data, broken
-    idempotency)."""
-    cond = getattr(e, "getCondition", lambda: None)() or ""
-    return "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e)
 
 
 def with_bucket(
@@ -471,26 +459,29 @@ def checkpointed_write(
 
     # metrics from the files actually committed this epoch (read-back keeps
     # the manifest honest about what is on disk).  The read targets ONLY
-    # this epoch's partition dirs via glob: listing cost is one readdir per
-    # bucket plus this epoch's files — a full unpruned read of <out>/data
-    # would LIST every epoch ever written, growing unboundedly on a
-    # long-lived output (VERDICT r01 #6).
-    epoch_glob = os.path.join(_data_dir(out_dir), "bucket=*", f"epoch={epoch}")
-    try:
-        written = (
-            spark.read.schema(schema)
-            .option("basePath", _data_dir(out_dir))
-            .parquet(epoch_glob)
-        )
-    except AnalysisException as e:
-        if _is_path_missing(e):  # no bucket matched: all already manifested
-            return {
-                "epoch": epoch,
-                "buckets_written": 0,
-                "buckets_skipped": len(done),
-                "rows": 0,
-            }
-        raise  # genuine read failure — caller must know no manifest landed
+    # this epoch's partition dirs, listed driver-side by one Hadoop glob:
+    # listing cost is one readdir per bucket plus this epoch's files — a
+    # full unpruned read of <out>/data would LIST every epoch ever written,
+    # growing unboundedly on a long-lived output (VERDICT r01 #6).  Reading
+    # the listed dirs, not the glob, spares Spark a failed metadata-dir
+    # probe of the glob path (a WARN with a stack trace per commit).
+    sc = spark.sparkContext
+    jglob = sc._jvm.org.apache.hadoop.fs.Path(
+        os.path.join(_data_dir(out_dir), "bucket=*", f"epoch={epoch}")
+    )
+    listed = jglob.getFileSystem(sc._jsc.hadoopConfiguration()).globStatus(jglob) or []
+    if not listed:  # no bucket written: all already manifested
+        return {
+            "epoch": epoch,
+            "buckets_written": 0,
+            "buckets_skipped": len(done),
+            "rows": 0,
+        }
+    written = (
+        spark.read.schema(schema)
+        .option("basePath", _data_dir(out_dir))
+        .parquet(*[st.getPath().toString() for st in listed])
+    )
     lineage_cols = lineage_cols or [
         c for c in df.columns if c not in (key_col, "input_snapshot")
     ]

@@ -20,11 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ocr_spark.operators.extract import (
-    assemble_spans_table,
-    fields_dataflow,
-    span_rows_from_fields,
-)
+from ocr_spark.operators.extract import extracted_spans_from_fields, fields_dataflow
 from ocr_spark.schemas import DOCUMENTS
 from ocr_spark.sources.manifests import checkpointed_write
 
@@ -79,7 +75,7 @@ def run_stream(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = assemble_spans_table(span_rows_from_fields(batch_df))
+        extracted = extracted_spans_from_fields(batch_df)
         checkpointed_write(
             spark,
             extracted,

@@ -79,7 +79,7 @@ def test_basic_family_matches_reference(goldens, texts):
 
 def test_llm_family_matches_reference(goldens, texts):
     names = list(texts)
-    out = llm.extract(
+    out = llm.extract_record(
         pd.Series([texts[n] for n in names]),
         as_of_date=date(2025, 8, 19),
         companies=COMPANIES,
@@ -104,7 +104,7 @@ def test_llm_family_matches_reference(goldens, texts):
 
 def test_swiss_family_matches_reference(goldens, texts):
     names = list(texts)
-    out = swiss.extract(pd.Series([texts[n] for n in names]))
+    out = swiss.extract_record(pd.Series([texts[n] for n in names]))
     cleaned = clean_swiss(pd.Series([texts[n] for n in names]))
     for i, name in enumerate(names):
         g = _decode(goldens[name]["swiss"])

@@ -11,8 +11,12 @@ matches, with a first company row whose ``erp_code`` is empty, on a batch
 no span of which needs Swiss, and on an empty batch. The eager lattice
 keeps the reference's full chain, including the fallbacks ``fields_batch``
 drops as unreachable (``INV-DEFAULT``, the Swiss number and currency,
-``CHF``, ``Fournisseur Inconnu``). ``basic.extract`` is checked against the
-same columns of ``basic.extract_record``. Pure pandas, no Spark.
+``CHF``, ``Fournisseur Inconnu``). It reads the full family records
+(``llm.extract_record``, ``swiss.extract_record``), so it also checks
+that what ``llm.extract`` and ``swiss.extract`` skip (the generic amount
+scan, the Swiss number and currency) changes no merged field.
+``basic.extract`` is checked against the same columns of
+``basic.extract_record``. Pure pandas, no Spark.
 """
 
 from __future__ import annotations
@@ -40,9 +44,9 @@ def _eager_fields(resolved, as_of_date, companies=None, suppliers=None) -> pd.Da
         return pd.DataFrame(columns=assemble.FIELDS_COLUMNS)
     base = resolved.reset_index(drop=True)
     contents = base["content"]
-    ls = llm.extract(contents, as_of_date=as_of_date, companies=companies,
-                     suppliers=suppliers).to_dict("records")
-    ss = _SWISS_EXTRACT(contents).to_dict("records")
+    ls = llm.extract_record(contents, as_of_date=as_of_date, companies=companies,
+                            suppliers=suppliers).to_dict("records")
+    ss = swiss.extract_record(contents).to_dict("records")
     bs = basic.extract(contents).to_dict("records")
     norm = clean_llm(contents).where(base["kind"] != "ocr", normalize_ocr(contents))
     rows = []

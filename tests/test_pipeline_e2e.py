@@ -163,6 +163,36 @@ def test_single_kernel_execution_for_both_outputs(spark, synth_dfs):
         frames.unpersist()
 
 
+def test_spans_plan_collects_fields_rows_without_generate(spark, synth_dfs):
+    """extracted_spans aggregates each FIELDS row's span array: its
+    optimized plan has no Generate between the cached FIELDS relation and
+    the aggregation, so the doc_id shuffle carries one entry per FIELDS
+    row, not one per output span."""
+    docs, media = synth_dfs
+    frames = build_pipeline(
+        spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
+    )
+    try:
+        plan = frames.extracted_spans._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        frames.unpersist()
+    # the cached relation prints its own plan (explode, kernel) below it
+    above_cache = plan.split("InMemoryRelation")[0]
+    assert "Aggregate" in above_cache and "Generate" not in above_cache, plan
+
+
+def test_stream_sink_and_batch_share_the_spans_function():
+    from ocr_spark.operators import extract
+    from ocr_spark.streaming import pipeline
+
+    sink = next(c for c in pipeline.run_stream.__code__.co_consts
+                if getattr(c, "co_name", None) == "_sink")
+    batch = extract.PipelineFrames.extracted_spans.func.__code__
+    assert "extracted_spans_from_fields" in sink.co_names
+    assert "extracted_spans_from_fields" in batch.co_names
+    assert pipeline.extracted_spans_from_fields is extract.extracted_spans_from_fields
+
+
 def test_paged_invoices_honor_page_split(spark, synth_dfs):
     """ADVICE r01: the invoices output used to silently ignore
     page_split_bytes; the shared-FIELDS pipeline routes both outputs

@@ -34,8 +34,6 @@ ALLOWED = {
     "set_pdf_backend": "test seam: tests swap the PDF decoder for a fake",
     "simhash64_py": "test reference: the Spark simhash is checked against it",
     "dequantize_embeddings": "test reference: inverse of quantize_embeddings",
-    "find_company": "reference port: the reference service's company lookup "
-    "as one call over the compiled matcher",
     "historical_avg_vat_rate": "test reference: the reference's VAT-rate rule",
     "page_count": "test reference: PDF page splits are checked against it",
     "create_tag": "tag guard: expire(respect_tags=True) keeps tagged data",
